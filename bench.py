@@ -282,13 +282,13 @@ def main() -> None:
     # (pandas_reporter_spark.ingest.MATERIALIZERS — tokenize relation,
     # inverted token index, trained BPE table, docq scores, LSH/IVF/PQ/
     # SRP embedding tiers, minhash signatures, bigram graph, weighted-
-    # median stats). Idempotent; consumers self-derive on any failure.
-    try:
-        from pandas_reporter_spark.ingest import ingest
+    # median stats). Idempotent; consumers self-derive on any failure,
+    # which the report names with its reason.
+    from pandas_reporter_spark.ingest import ingest
 
-        ingest(spark, sf_dir)
-    except Exception:
-        pass
+    for name, rep in ingest(spark, sf_dir).items():
+        if not rep["primed"]:
+            print(f"ingest: {name} not primed: {rep['reason']}", file=sys.stderr)
     # Opt-in at-rest co-bucketed fact layout (SCALING.md round-10 A/B:
     # Q3/Q5/Q18 marginals 4-5× better). OFF by default so headline
     # numbers stay comparable across rounds; a deployment turns it on.

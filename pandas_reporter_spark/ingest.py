@@ -1,176 +1,68 @@
-"""The single at-rest ingest contract (VERDICT r13 item 4).
+"""The single at-rest ingest contract.
 
-Eleven sidecar artifacts accumulated across rounds, each with its own
-tmpfs + source-mtime-fingerprint + validate-before-cache idiom and its
-own prime call site. This module is the one entry point a driver,
-bench harness, or cluster operator calls: ``ingest(spark, sf)`` builds
-every registered sidecar for a snapshot, idempotently, and reports
-what it built. Consumers keep their self-derive fallbacks — a failed
-or skipped artifact only costs the primed speed, never correctness
-(each materializer validates its artifact before caching and falls
-back inline on mismatch).
+``ingest(spark, sf)`` is the one entry point a driver, bench harness or
+cluster operator calls after a snapshot lands: it builds every sidecar
+artifact in ``MATERIALIZERS`` order through the one lifecycle in
+``pandas_reporter_spark.artifacts`` (fingerprinted tmpfs path, atomic
+commit, validate before register), idempotently, and reports what it
+built. Consumers keep their self-derive fallbacks: a failed or
+rejected artifact costs only the primed speed, never correctness.
+
+The report is ``{name: {ok, primed, seconds, reason}}``. ``ok`` is
+False when a build or read step raised; ``primed`` is True when the
+consumers will read the artifact; ``reason`` is None when primed, else
+the exception (type and first message line) or the validation that
+rejected the artifact.
 
 On a 100 TB deployment this is the post-snapshot ingest job: one pass
 after the corpus lands, before query traffic; the per-artifact cost
 and payoff table lives in SCALING.md ("The at-rest ingest contract").
-
-``MATERIALIZERS`` is the registry the coverage test walks: every
-``materialize_*`` function in the engine must appear here (or in
-``_NON_INGEST``, with a reason).
 """
 
 from __future__ import annotations
 
-import time
-from collections.abc import Callable
-
 from pyspark.sql import SparkSession
 
+from pandas_reporter_spark import artifacts
 
-def _m(modname: str, fn: str) -> Callable:
-    def call(spark, sf):
-        import importlib
-
-        getattr(importlib.import_module(modname), fn)(spark, sf)
-
-    return call
-
-
-_OPS = "pandas_reporter_spark.operators"
-
-#: name -> (builder, consumer queries). Order matters only where noted
-#: (docq reads the classifier weights; both are self-contained).
-MATERIALIZERS: dict[str, tuple[Callable, str]] = {
-    "doc_tokens": (
-        _m(f"{_OPS}.text", "materialize_doc_tokens"),
-        "q_text_tfidf q_text_chi2 q_text_kl_divergence q_pipeline_dsir "
-        "q_text_bpe_train (tokenize once, five consumers)",
-    ),
-    "token_index": (
-        _m(f"{_OPS}.text", "materialize_token_index"),
-        "q_text_bm25 q_search_hybrid_rrf (partition-pruned posting "
-        "probe)",
-    ),
-    "bpe_merges": (
-        _m(f"{_OPS}.text", "materialize_bpe_merges"),
-        "q_text_bpe_apply q_text_vocab_coverage (trained tokenizer "
-        "artifact)",
-    ),
-    "docq": (
-        _m(f"{_OPS}.text", "materialize_docq"),
-        "q_pipeline_curriculum (per-doc classifier score sidecar)",
-    ),
-    "lsh_signatures": (
-        _m(f"{_OPS}.similarity", "materialize_lsh_signatures"),
-        "q_similarity_ann_lsh q_similarity_join q_similarity_join_shuffled",
-    ),
-    "ivf_index": (
-        _m(f"{_OPS}.similarity", "materialize_ivf_index"),
-        "q_similarity_ivf (cell-partition-pruned probe)",
-    ),
-    "pq_index": (
-        _m(f"{_OPS}.similarity", "materialize_pq_index"),
-        "q_similarity_pq_adc (~25 B/vec codes vs ~263 B/vec raw)",
-    ),
-    "srp_codes": (
-        _m(f"{_OPS}.similarity", "materialize_srp_codes"),
-        "q_similarity_srp (32 B/vec sign codes)",
-    ),
-    "knn_graph": (
-        _m(f"{_OPS}.similarity", "materialize_knn_graph"),
-        "q_similarity_knn_graph (top-k in-cell neighbor rows; feeds "
-        "SemDeDup-style clustering and graph ops at ~k rows/vec)",
-    ),
-    "minhash": (
-        _m(f"{_OPS}.dedup", "materialize_minhash"),
-        "q_dedup_minhash q_dedup_minhash_capped q_dedup_minhash_incremental",
-    ),
-    "graph": (
-        _m(f"{_OPS}.graph", "materialize_graph"),
-        "q_graph_pagerank q_graph_triangles (bigram edge/node relation)",
-    ),
-    "wm_stats": (
-        _m(f"{_OPS}.relational", "materialize_wm_stats"),
-        "q_agg_weighted_median_approx (ANALYZE-style range stats)",
-    ),
-    # AFTER doc_tokens (derives from it when primed — dictionary-scale
-    # distinct instead of a corpus re-tokenize)
-    "vocab_stats": (
-        _m(f"{_OPS}.text", "materialize_vocab_stats"),
-        "q_text_perplexity_bigram (corpus vocab size V as 1-row "
-        "ANALYZE-style stats)",
-    ),
-}
-
-#: materialize_* engine functions that are deliberately NOT part of the
-#: snapshot ingest contract (the coverage test accepts these).
-_NON_INGEST: dict[str, str] = {
-    # none currently — every at-rest artifact is snapshot-derived
-}
-
-#: name -> (module, session cache attr). Every materializer registers
-#: its consumer-visible artifact in a module-level dict keyed on
-#: (_session_key(spark), sf, ...); `primed` below probes that dict
-#: rather than trusting a clean return — materializers also return
-#: silently when validation rejects a torn artifact (e.g. the docq
-#: count mismatch), and a clean return then does NOT mean the consumer
-#: will read the sidecar.
-_CACHES: dict[str, tuple[str, str]] = {
-    "doc_tokens": (f"{_OPS}.text", "_TF_ART"),
-    "token_index": (f"{_OPS}.text", "_TOKIDX_ART"),
-    "bpe_merges": (f"{_OPS}.text", "_BPE_ART"),
-    "docq": (f"{_OPS}.text", "_DOCQ_ART"),
-    "lsh_signatures": (f"{_OPS}.similarity", "_SIG_ART"),
-    "ivf_index": (f"{_OPS}.similarity", "_IVF_ART"),
-    "pq_index": (f"{_OPS}.similarity", "_PQ_ART"),
-    "srp_codes": (f"{_OPS}.similarity", "_SRP_ART"),
-    "knn_graph": (f"{_OPS}.similarity", "_KNN_ART"),
-    "minhash": (f"{_OPS}.dedup", "_MH_ART"),
-    "graph": (f"{_OPS}.graph", "_GRAPH_ART"),
-    "wm_stats": (f"{_OPS}.relational", "_WM_STATS_ART"),
-    "vocab_stats": (f"{_OPS}.text", "_VOCAB_ART"),
-}
-
-
-def _primed(spark: SparkSession, sf: str, name: str) -> bool:
-    """True when `name`'s artifact is registered in its module cache
-    for this (session, sf) — i.e. the consumer query will actually
-    read the sidecar instead of self-deriving. Cache keys start with
-    (session_key, sf); extra elements (mtime tags, srp bits) are
-    ignored."""
-    import importlib
-
-    from pandas_reporter_spark.tables import _session_key
-
-    mod, attr = _CACHES[name]
-    cache = getattr(importlib.import_module(mod), attr, None)
-    if not isinstance(cache, dict):
-        return False
-    sk = _session_key(spark)
-    return any(
-        isinstance(k, tuple) and len(k) >= 2 and k[0] == sk and k[1] == sf
-        for k in cache
-    )
+#: Every declared artifact, in build order, with its consumer queries.
+MATERIALIZERS: tuple[str, ...] = (
+    # q_text_tokens tfidf langid logprob kl_divergence quality_classifier
+    # perplexity_bigram, q_pipeline_dsir, q_sketch_cms heavy_hitters
+    "doc_tokens",
+    # q_text_bm25 q_search_hybrid_rrf: partition-pruned posting probe
+    "token_index",
+    # q_text_bpe_apply: trained tokenizer
+    "bpe_merges",
+    # q_pipeline_curriculum: per-doc classifier score sidecar
+    "docq",
+    # q_similarity_ann_lsh join join_shuffled, q_dedup_embedding
+    "lsh_signatures",
+    # q_similarity_ivf: cell-partition-pruned probe
+    "ivf_index",
+    # q_similarity_pq_adc: ~25 B/vec codes vs ~263 B/vec raw
+    "pq_index",
+    # q_similarity_srp: 32 B/vec sign codes
+    "srp_codes",
+    # q_similarity_knn_graph q_dedup_semdedup: top-k in-cell rows
+    "knn_graph",
+    # q_dedup_minhash minhash_capped minhash_incremental containment,
+    # q_sketch_bloom
+    "minhash",
+    # q_graph_pagerank q_graph_triangles: bigram edge/node relation
+    "graph",
+    # q_agg_weighted_median(_approx): ANALYZE-style range stats
+    "wm_stats",
+    # q_text_perplexity_bigram: corpus vocab size; AFTER doc_tokens,
+    # which it derives from when primed
+    "vocab_stats",
+)
 
 
 def ingest(spark: SparkSession, sf: str) -> dict[str, dict]:
-    """Build every registered sidecar for snapshot `sf`. Idempotent
-    (each materializer no-ops when its fingerprinted artifact already
-    exists and validates). Returns {name: {ok, primed, seconds}};
-    `ok` = the builder returned without raising, `primed` = the
-    artifact is actually consumer-visible in this session (see
-    `_primed`). Failures are contained — consumers self-derive."""
-    report: dict[str, dict] = {}
-    for name, (build, _) in MATERIALIZERS.items():
-        t0 = time.time()
-        try:
-            build(spark, sf)
-            ok = True
-        except Exception:
-            ok = False
-        report[name] = {
-            "ok": ok,
-            "primed": _primed(spark, sf, name),
-            "seconds": round(time.time() - t0, 3),
-        }
-    return report
+    """Build every artifact for snapshot `sf` (idempotent) and return
+    {name: {ok, primed, seconds, reason}}."""
+    from pandas_reporter_spark.registry import load_all
+
+    load_all()  # operator-module import runs every declare()
+    return {name: artifacts.build(spark, sf, name) for name in MATERIALIZERS}

@@ -28,12 +28,15 @@ CodegenFallback (interpreted) in Spark 4.1.2, and the kernels measured
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from pandas_reporter_spark import artifacts
 from pandas_reporter_spark.registry import query
 from pandas_reporter_spark.session import configure, work_partitions
 from pandas_reporter_spark.tables import load
@@ -463,10 +466,8 @@ def q_dedup_minhash_incremental(spark, sf):
     oracle replays the identical two-sided candidate join and verify.
     """
     configure(spark)
-    from pandas_reporter_spark.tables import _session_key
-
     docs = load(spark, sf, "documents")
-    art = _MH_ART.get((_session_key(spark), sf))
+    art = artifacts.get(spark, sf, "minhash")
     if art is not None:
         d, bands = art
     else:
@@ -506,50 +507,26 @@ def q_dedup_minhash_incremental(spark, sf):
     )
 
 
-#: (session, sf) -> (hashed-shingle DF, band-signature DF) — the
-#: materialized minhash artifacts (see materialize_minhash)
-_MH_ART: dict = {}
-
-
-def materialize_minhash(spark, sf, base: str = "/dev/shm") -> None:
-    """Checkpoint the minhash pipeline's two reusable relations once
-    per session — (doc_id, hs) hashed shingles and (doc_id, band, sig)
-    band signatures. Same ingest-artifact policy as the tokenize and
-    LSH-signature artifacts: the timed/steady-state query then reads
-    plain parquet three times instead of re-tokenizing AND paying an
+def _build_minhash(spark, sf, path):
+    """The minhash pipeline's two reusable relations, (doc_id, hs)
+    hashed shingles under `hs` and (doc_id, band, sig) band signatures
+    under `bands` (derived from the written shingles). The timed query
+    then reads plain parquet instead of re-tokenizing AND paying an
     in-query cache materialization per run. Values are int64-lossless
     through parquet, so candidate sets and Jaccard verifies are
     bit-identical (pinned by the recall tests either way)."""
-    import os
+    hs_p, bd_p = os.path.join(path, "hs"), os.path.join(path, "bands")
+    with_hashed_shingles(load(spark, sf, "documents")).select(
+        "doc_id", "hs"
+    ).repartition(work_partitions(spark, 16)).write.mode("overwrite").parquet(hs_p)
+    _band_signatures(spark.read.parquet(hs_p)).repartition(
+        work_partitions(spark, 16)
+    ).write.mode("overwrite").parquet(bd_p)
 
-    from pandas_reporter_spark.tables import _session_key, load as _load
 
-    key = (_session_key(spark), sf)
-    if key in _MH_ART or not os.path.isdir(base):
-        return
-    try:
-        src_tag = int(
-            os.path.getmtime(os.path.join(sf, "documents.parquet"))
-        )
-    except OSError:
-        src_tag = 0
-    tag = f"{os.path.basename(os.path.normpath(sf))}_{src_tag}"
-    hs_out = os.path.join(base, f"prs_mh2_hs_{tag}")
-    bd_out = os.path.join(base, f"prs_mh2_bands_{tag}")
-    try:
-        docs = _load(spark, sf, "documents")
-        if not os.path.exists(os.path.join(hs_out, "_SUCCESS")):
-            with_hashed_shingles(docs).select(
-                "doc_id", "hs"
-            ).repartition(work_partitions(spark, 16)).write.mode("overwrite").parquet(hs_out)
-        hs_df = spark.read.parquet(hs_out)
-        if not os.path.exists(os.path.join(bd_out, "_SUCCESS")):
-            _band_signatures(hs_df).repartition(work_partitions(spark, 16)).write.mode(
-                "overwrite"
-            ).parquet(bd_out)
-        _MH_ART[key] = (hs_df, spark.read.parquet(bd_out))
-    except Exception:
-        return
+artifacts.declare(
+    "minhash", "documents", "mh2", _build_minhash, artifacts.parts("hs", "bands")
+)
 
 
 def _band_signatures(d):
@@ -631,7 +608,7 @@ def _mh_shingles_candidates(docs, id_col="doc_id", spark=None, sf=None,
                             size_ratio: float | None = None):
     """(hashed-shingle DF, candidate-pair DF) — the shared front of the
     minhash family. Uses the session's checkpointed artifact when
-    materialize_minhash has run; otherwise builds and persists the
+    the `minhash` artifact is registered; otherwise builds and persists the
     shingle table (read by the signature branch and both payload-join
     sides of minhash_pairs).
 
@@ -663,9 +640,7 @@ def _mh_shingles_candidates(docs, id_col="doc_id", spark=None, sf=None,
         )
     art = None
     if spark is not None and sf is not None:
-        from pandas_reporter_spark.tables import _session_key
-
-        art = _MH_ART.get((_session_key(spark), sf))
+        art = artifacts.get(spark, sf, "minhash")
     if art is not None:
         d, bands = art
     else:
@@ -1678,11 +1653,6 @@ _CDC_W = 4
 _CDC_DIV = 16
 _CDC_MIN_TOKENS = 8
 
-#: live cache handles of the CDC substring family — each invocation
-#: retires the previous one's persisted chunk/digest stream (the
-#: text._PPL_BG_HANDLES discipline; ADVICE r15)
-_CDC_HANDLES: list = []
-
 
 def cdc_extents(tok_col, n_col):
     """Chunk-boundary extents [0, b1, b2, ..., n] for a token array —
@@ -1889,16 +1859,11 @@ def q_dedup_substring(spark, sf):
     # count per long chunk — text never persists), persist THAT, and
     # derive all three consumers from it. Same digests, same counts,
     # same rollups — exact equivalence. Each invocation retires the
-    # previous one's cache handle (the _PPL_BG_HANDLES discipline,
-    # ADVICE r15 — waiting on ContextCleaner GC lets a long bench
-    # session accumulate abandoned cached blocks).
+    # previous one's cache handle (artifacts.hold, ADVICE r15 —
+    # waiting on ContextCleaner GC lets a long bench session
+    # accumulate abandoned cached blocks).
     from pyspark import StorageLevel
 
-    while _CDC_HANDLES:
-        try:
-            _CDC_HANDLES.pop().unpersist()
-        except Exception:
-            pass
     base = bounded.select(
         "doc_id",
         (F.size("ext") - 1).cast("long").alias("n_chunks"),
@@ -1921,7 +1886,7 @@ def q_dedup_substring(spark, sf):
             ),
         ).alias("chunks"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    _CDC_HANDLES.append(base)
+    artifacts.hold("q_dedup_substring", base)
     perdoc = base.select(
         "doc_id",
         "n_chunks",
@@ -2045,17 +2010,12 @@ def q_dedup_substring_removal(spark, sf):
     # discipline matters doubly here (ADVICE r15).
     from pyspark import StorageLevel
 
-    while _CDC_HANDLES:
-        try:
-            _CDC_HANDLES.pop().unpersist()
-        except Exception:
-            pass
     chunks = cdc_chunks(docs).withColumn(
         "_key", F.col("doc_id") * 100000 + F.col("chunk_idx")
     ).withColumn("chunk_md5", F.md5("chunk")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    _CDC_HANDLES.append(chunks)
+    artifacts.hold("q_dedup_substring_removal", chunks)
     firsts = (
         chunks.filter(F.col("n_toks") >= _CDC_MIN_TOKENS)
         .groupBy("chunk_md5")

@@ -24,6 +24,7 @@ from contextlib import contextmanager as _contextmanager
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from pandas_reporter_spark import artifacts
 from pandas_reporter_spark.registry import query
 from pandas_reporter_spark.session import configure
 from pandas_reporter_spark.tables import dsum, load, normalize_ts, oracle_dsum
@@ -165,11 +166,6 @@ _RAW_SCHEMA_CACHE: dict = {}
 #: state-bound pins: stateOperators[].numRowsTotal / memoryUsedBytes
 #: and durationMs.addBatch per micro-batch. Overwritten per run.
 LAST_PROGRESS: list = []
-
-#: previous q_stream_file_sink output dirs awaiting retirement (the
-#: returned frame reads its dir lazily, so it can only be removed on
-#: the NEXT invocation — tmpfs twin of the persist-handle discipline)
-_SINK_DIR_HANDLES: list = []
 
 
 def _capture_progress(q) -> None:
@@ -615,10 +611,10 @@ def q_stream_file_sink(spark, sf):
     import shutil
 
     base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    while _SINK_DIR_HANDLES:
-        shutil.rmtree(_SINK_DIR_HANDLES.pop(), ignore_errors=True)
-    out_dir = tempfile.mkdtemp(prefix="pr_spark_stream_sink_", dir=base)
-    _SINK_DIR_HANDLES.append(out_dir)
+    out_dir = artifacts.hold(
+        "q_stream_file_sink",
+        tempfile.mkdtemp(prefix="pr_spark_stream_sink_", dir=base),
+    )
     ckpt = tempfile.mkdtemp(prefix="pr_spark_stream_ckpt_", dir=base)
 
     def write_batch(bdf: DataFrame, batch_id: int) -> None:

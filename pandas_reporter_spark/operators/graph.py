@@ -25,8 +25,11 @@ TextRank).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
+from pandas_reporter_spark import artifacts
 from pandas_reporter_spark.registry import query
 from pandas_reporter_spark.session import configure, work_partitions
 from pandas_reporter_spark.tables import load
@@ -81,44 +84,25 @@ def _pagerank_oracle(iters: int = _ITERS) -> str:
     """
 
 
-#: (session, sf) -> (edge+outdegree DF, node DF) — see materialize_graph
-_GRAPH_ART: dict = {}
+def _build_graph(spark, sf, path):
+    """The bigram edge dictionary (a, b, w, wtot) under `ej` and the
+    node set under `nodes` — a pipeline builds the graph once and
+    every traversal starts from it, reading plain parquet instead of
+    re-tokenizing and re-aggregating the corpus."""
+    ej, nodes = _edges_nodes(spark, sf)
+    ej.repartition(work_partitions(spark)).write.mode("overwrite").parquet(
+        os.path.join(path, "ej")
+    )
+    nodes.repartition(work_partitions(spark)).write.mode("overwrite").parquet(
+        os.path.join(path, "nodes")
+    )
 
 
-def materialize_graph(spark, sf, base: str = "/dev/shm") -> None:
-    """Checkpoint the bigram edge dictionary (a, b, w, wtot) and node
-    set once per session — the ingest-artifact policy shared with the
-    tokenize/LSH/minhash artifacts: a pipeline builds the graph once
-    and every traversal starts from it. Iterations then read plain
-    parquet instead of re-tokenizing and re-aggregating the corpus."""
-    import os
+def _open_graph(spark, sf, path):
+    return _copartition(*artifacts.parts("ej", "nodes")(spark, sf, path))
 
-    from pandas_reporter_spark.tables import _session_key
 
-    key = (_session_key(spark), sf)
-    if key in _GRAPH_ART or not os.path.isdir(base):
-        return
-    try:
-        src_tag = int(
-            os.path.getmtime(os.path.join(sf, "documents.parquet"))
-        )
-    except OSError:
-        src_tag = 0
-    tag = f"{os.path.basename(os.path.normpath(sf))}_{src_tag}"
-    ej_out = os.path.join(base, f"prs_graph_ej_{tag}")
-    nd_out = os.path.join(base, f"prs_graph_nodes_{tag}")
-    try:
-        ej, nodes = _edges_nodes(spark, sf)
-        if not os.path.exists(os.path.join(ej_out, "_SUCCESS")):
-            ej.repartition(work_partitions(spark)).write.mode("overwrite").parquet(ej_out)
-        if not os.path.exists(os.path.join(nd_out, "_SUCCESS")):
-            nodes.repartition(work_partitions(spark)).write.mode("overwrite").parquet(nd_out)
-        _GRAPH_ART[key] = _copartition(
-            spark.read.parquet(ej_out),
-            spark.read.parquet(nd_out),
-        )
-    except Exception:
-        return
+artifacts.declare("graph", "documents", "graph", _build_graph, _open_graph)
 
 
 #: Partition count for the dictionary-sized graph relations. Small on
@@ -210,9 +194,7 @@ def q_graph_pagerank(spark, sf):
     normalization is a presentation concern.
     """
     configure(spark)
-    from pandas_reporter_spark.tables import _session_key
-
-    art = _GRAPH_ART.get((_session_key(spark), sf))
+    art = artifacts.get(spark, sf, "graph")
     if art is not None:
         ej, nodes = art  # co-partitioned scans of the graph artifact
     else:
@@ -357,9 +339,7 @@ def q_graph_triangles(spark, sf):
     Reference parity: none (driver-mandated graph extension).
     """
     configure(spark)
-    from pandas_reporter_spark.tables import _session_key
-
-    art = _GRAPH_ART.get((_session_key(spark), sf))
+    art = artifacts.get(spark, sf, "graph")
     if art is not None:
         ej, _ = art
     else:

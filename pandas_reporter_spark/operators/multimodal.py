@@ -664,7 +664,7 @@ def q_dedup_phash(spark, sf):
     hot-bucket treatment (cap + exact within-cap); band entropy here
     is already guarded by whole-payload stride sampling (see
     phash_grid). At rest, signatures ride the same sidecar discipline
-    as materialize_minhash (20 B/doc).
+    as the `minhash` artifact (20 B/doc).
 
     Reference parity: none (driver-mandated LLM-pipeline surface).
     """

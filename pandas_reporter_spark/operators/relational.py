@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from pandas_reporter_spark import artifacts
 from pandas_reporter_spark.registry import query
 from pandas_reporter_spark.session import configure
 from pandas_reporter_spark.tables import (
@@ -3616,9 +3617,7 @@ def q_agg_weighted_median(spark, sf):
     configure(spark)
     li = _wm_weighted(spark, sf)
     nbins = 4096
-    from pandas_reporter_spark.tables import _session_key
-
-    stats = _WM_STATS_ART.get((_session_key(spark), sf))
+    stats = artifacts.get(spark, sf, "wm_stats")
     if stats is None:
         stats = li.groupBy("flag").agg(
             F.min("v").alias("mn"),
@@ -3687,44 +3686,20 @@ def q_agg_weighted_median(spark, sf):
     )
 
 
-#: (session, sf) -> per-flag (mn, mx, tot) stats DF — see
-#: materialize_wm_stats
-_WM_STATS_ART: dict = {}
-
-
-def materialize_wm_stats(spark, sf, base: str = "/dev/shm") -> None:
-    """Checkpoint the weighted-median sketch's range/total statistics
-    once per session — ANALYZE-style table stats (per-returnflag min/
-    max price + total cent-weight, 3 rows), the same ingest-artifact
-    policy as the tokenize/LSH/minhash/graph artifacts. With it the
-    production sketch pass is ONE corpus scan (the bin rollup);
+def _build_wm_stats(spark, sf, path):
+    """ANALYZE-style table stats for the weighted-median sketch:
+    per-returnflag min/max price + total cent-weight, 3 rows. With it
+    the production sketch pass is ONE corpus scan (the bin rollup);
     without it the sketch computes the stats itself (the standalone
     plan the oracle gate always exercises)."""
-    import os
+    _wm_weighted(spark, sf).groupBy("flag").agg(
+        F.min("v").alias("mn"),
+        F.max("v").alias("mx"),
+        F.sum("wc").alias("tot"),
+    ).coalesce(1).write.mode("overwrite").parquet(path)
 
-    from pandas_reporter_spark.tables import _session_key
 
-    key = (_session_key(spark), sf)
-    if key in _WM_STATS_ART or not os.path.isdir(base):
-        return
-    try:
-        src_tag = int(
-            os.path.getmtime(os.path.join(sf, "lineitem.parquet"))
-        )
-    except OSError:
-        src_tag = 0
-    tag = f"{os.path.basename(os.path.normpath(sf))}_{src_tag}"
-    out = os.path.join(base, f"prs_wmstats_{tag}")
-    try:
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            _wm_weighted(spark, sf).groupBy("flag").agg(
-                F.min("v").alias("mn"),
-                F.max("v").alias("mx"),
-                F.sum("wc").alias("tot"),
-            ).coalesce(1).write.mode("overwrite").parquet(out)
-        _WM_STATS_ART[key] = spark.read.parquet(out)
-    except Exception:
-        return
+artifacts.declare("wm_stats", "lineitem", "wmstats", _build_wm_stats)
 
 
 def _wm_weighted(spark, sf):
@@ -3741,7 +3716,7 @@ def _wm_weighted(spark, sf):
 def weighted_median_sketch(spark, sf, nbins: int = 4096):
     """Production pass of the approximate weighted median: the
     fixed-bin weight rollup — ONE corpus scan when the range/total
-    statistics artifact is materialized (materialize_wm_stats; the
+    statistics artifact is materialized (the `wm_stats` artifact; the
     bench primes it), two scans standalone. No sort, no window over
     the corpus — state is the ≤nbins-cell (group, bin) dictionary,
     mergeable by addition. Returns (l_returnflag, est).
@@ -3750,9 +3725,7 @@ def weighted_median_sketch(spark, sf, nbins: int = 4096):
     bench._bench_overrides)."""
     configure(spark)
     li = _wm_weighted(spark, sf)
-    from pandas_reporter_spark.tables import _session_key
-
-    stats = _WM_STATS_ART.get((_session_key(spark), sf))
+    stats = artifacts.get(spark, sf, "wm_stats")
     if stats is None:
         # pass 1: per-group range + total weight (tiny dictionary)
         stats = li.groupBy("flag").agg(

@@ -16,12 +16,15 @@ before hashing.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window as W
 
+from pandas_reporter_spark import artifacts
 from pandas_reporter_spark.registry import query
 from pandas_reporter_spark.session import configure, work_partitions
 from pandas_reporter_spark.tables import load
@@ -257,65 +260,38 @@ def lsh_signatures(df: DataFrame, planes: int | None = None) -> DataFrame:
     )
 
 
-#: (session, sf) -> materialized (vec_id, tbl, sig) DataFrame — the
-#: shared LSH-signature artifact (see materialize_lsh_signatures)
-_SIG_ART: dict = {}
+def _build_lsh_signatures(spark, sf, path):
+    """(vec_id, tbl, sig) once per snapshot — the embedding twin of the
+    doc_tokens artifact: three queries (similarity join, embedding
+    dedup, ANN probe) consume the same signature relation, and a
+    pipeline computes signatures at ingest, not per analysis. The
+    artifact is the EXACT kernel output routed through parquet longs
+    (lossless), so every signature-derived oracle stays
+    hash-identical."""
+    from pandas_reporter_spark.session import scaled_partitions
+
+    e = load(spark, sf, "embeddings")
+    n = corpus_count(e, spark, sf)
+    # size-driven file count: the artifact is n·L rows; slot-count
+    # files cost ~0.25 s/query of read overhead at bench scale
+    # (session.scaled_partitions docstring)
+    lsh_signatures(e, planes=lsh_planes_for(n)).repartition(
+        scaled_partitions(n * _N_TABLES)
+    ).write.mode("overwrite").parquet(path)
 
 
-def lsh_sigs_artifact(spark, sf):
-    """The materialized signature artifact, or None (consumers fall
-    back to the inline Arrow-kernel plan)."""
-    from pandas_reporter_spark.tables import _session_key
+def _lsh_suffix(spark, sf):
+    """Occupancy-aware geometry: b in the path invalidates any artifact
+    written under a different plane count (r9 and earlier wrote
+    fixed-8 signatures)."""
+    e = load(spark, sf, "embeddings")
+    return f"_b{lsh_planes_for(corpus_count(e, spark, sf))}"
 
-    return _SIG_ART.get((_session_key(spark), sf))
 
-
-def materialize_lsh_signatures(spark, sf, base: str = "/dev/shm") -> None:
-    """Build + checkpoint (vec_id, tbl, sig) once per session — the
-    embedding twin of text.materialize_doc_tokens: three queries
-    (similarity join, embedding dedup, ANN probe) consume the same
-    signature relation, and a pipeline computes signatures at ingest,
-    not per analysis. The artifact is the EXACT kernel output routed
-    through parquet longs (lossless), so every signature-derived
-    oracle stays hash-identical. Idempotent; failures leave consumers
-    on their standalone plans."""
-    import os
-
-    from pandas_reporter_spark.tables import _session_key, load as _load
-
-    key = (_session_key(spark), sf)
-    if key in _SIG_ART or not os.path.isdir(base):
-        return
-    # mtime-fingerprinted path — same staleness guard as the tokenize
-    # artifact (regenerated testdata must not hit an old /dev/shm copy)
-    try:
-        src_tag = int(os.path.getmtime(os.path.join(sf, "embeddings.parquet")))
-    except OSError:
-        src_tag = 0
-    try:
-        from pandas_reporter_spark.session import scaled_partitions
-
-        e = _load(spark, sf, "embeddings")
-        # occupancy-aware geometry: b in the path invalidates any
-        # artifact written under a different plane count (r9 and
-        # earlier wrote fixed-8 signatures)
-        n = corpus_count(e, spark, sf)
-        b = lsh_planes_for(n)
-        out = os.path.join(
-            base,
-            f"prs_lshsig_{os.path.basename(os.path.normpath(sf))}"
-            f"_{src_tag}_b{b}",
-        )
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            # size-driven file count: the artifact is n·L rows; slot-
-            # count files cost ~0.25 s/query of read overhead at bench
-            # scale (session.scaled_partitions docstring)
-            lsh_signatures(e, planes=b).repartition(
-                scaled_partitions(n * _N_TABLES)
-            ).write.mode("overwrite").parquet(out)
-        _SIG_ART[key] = spark.read.parquet(out)
-    except Exception:
-        return
+artifacts.declare(
+    "lsh_signatures", "embeddings", "lshsig", _build_lsh_signatures,
+    suffix=_lsh_suffix,
+)
 
 
 def lsh_candidate_pairs(df: DataFrame, spark=None, sf=None) -> DataFrame:
@@ -331,7 +307,7 @@ def lsh_candidate_pairs(df: DataFrame, spark=None, sf=None) -> DataFrame:
     """
     b = None
     if spark is not None and sf is not None:
-        b = lsh_sigs_artifact(spark, sf)
+        b = artifacts.get(spark, sf, "lsh_signatures")
     if b is None:
         b = lsh_signatures(df, planes=corpus_planes(df, spark, sf))
     try:
@@ -530,7 +506,7 @@ def q_similarity_join_shuffled(spark, sf):
     """
     configure(spark)
     e = load(spark, sf, "embeddings")
-    b = lsh_sigs_artifact(spark, sf)
+    b = artifacts.get(spark, sf, "lsh_signatures")
     if b is None:
         b = lsh_signatures(e, planes=corpus_planes(e, spark, sf))
     en = e.select(
@@ -649,7 +625,7 @@ def q_similarity_ann_lsh(spark, sf):
     """
     configure(spark)
     e = load(spark, sf, "embeddings")
-    return ann_lsh_topk(e, sigs=lsh_sigs_artifact(spark, sf))
+    return ann_lsh_topk(e, sigs=artifacts.get(spark, sf, "lsh_signatures"))
 
 
 def _ivf_oracle() -> str:
@@ -717,7 +693,7 @@ def q_similarity_ivf(spark, sf):
     partition the parquet by cell id and the probe becomes partition
     pruning at the source.
 
-    At-rest tier (round 12): `materialize_ivf_index` persists exactly
+    At-rest tier (round 12): the `ivf_index` artifact persists exactly
     that layout — the centroids table plus the corpus partitioned by
     cell — and this query rides it when present: the coarse ranking
     reads 10 persisted rows, the two probe cell ids (a bounded
@@ -730,7 +706,7 @@ def q_similarity_ivf(spark, sf):
     """
     configure(spark)
     e = load(spark, sf, "embeddings")
-    art = ivf_index(spark, sf)
+    art = artifacts.get(spark, sf, "ivf_index")
     if art is None:
         return ivf_topk(e)
     e_part, cent = art
@@ -817,88 +793,38 @@ def ivf_topk(e, query_vec_id: int = 0, probes: int = 2, k: int = 10):
     )
 
 
-#: (session_key, sf) -> (partitioned_corpus_df, centroids_df) for the
-#: at-rest IVF index (see materialize_ivf_index).
-_IVF_ART: dict = {}
-
-
-def ivf_index(spark, sf):
-    """The materialized at-rest IVF index (cell-partitioned corpus,
-    centroids), or None — the accessor q_similarity_ivf consults."""
-    from pandas_reporter_spark.tables import _session_key
-
-    return _IVF_ART.get((_session_key(spark), sf))
-
-
-def materialize_ivf_index(spark, sf, base: str = "/dev/shm") -> None:
-    """Persist the IVF index at rest: the coarse quantizer (one tiny
+def _build_ivf_index(spark, sf, path):
+    """The IVF index at rest: the coarse quantizer (one tiny
     centroids table) and the corpus REPARTITIONED BY CELL
     (partitionBy(label) parquet) — exactly the layout the IVF
     docstring promises at 100 TB, where the probe becomes partition
     PRUNING at the source: a probes=2-of-k query reads 2/k of the
-    corpus bytes and never touches the rest. Same ingest-artifact
-    amortization (and atomic-rename commit) as materialize_pq_index;
-    deterministic centroid build (exact-integer label means) keeps
-    the artifact path bit-identical to the fresh one (equality pinned
-    in tests/test_similarity.py). Idempotent; on failure consumers
-    keep the fresh plan."""
-    import os
-
-    from pandas_reporter_spark.tables import _session_key, load as _load
-
-    key = (_session_key(spark), sf)
-    if key in _IVF_ART or not os.path.isdir(base):
-        return
-    try:
-        src_tag = int(
-            os.path.getmtime(os.path.join(sf, "embeddings.parquet"))
-        )
-    except OSError:
-        src_tag = 0
-    out = os.path.join(
-        base,
-        f"prs_ivfindex_{os.path.basename(os.path.normpath(sf))}_{src_tag}",
+    corpus bytes and never touches the rest. Deterministic centroid
+    build (exact-integer label means) keeps the artifact path
+    bit-identical to the fresh one (equality pinned in
+    tests/test_similarity.py)."""
+    e = load(spark, sf, "embeddings")
+    (
+        # repartition by (label, vec_id), NOT label alone: one file per
+        # cell would cap the pruned probe's read parallelism at
+        # `probes` tasks (measured 4.5 s vs 1.4 s fresh at sf100 —
+        # worse than no index); hashing vec_id in spreads every cell
+        # over all tasks, so each cell directory holds ~n_tasks
+        # splittable files
+        e.repartition(work_partitions(spark, 32), F.col("label"), F.col("vec_id"))
+        .write.mode("overwrite")
+        .partitionBy("label")
+        .parquet(os.path.join(path, "by_cell"))
     )
-    corpus_p = os.path.join(out, "by_cell")
-    cent_p = os.path.join(out, "centroids")
-    try:
-        if not os.path.exists(os.path.join(cent_p, "_SUCCESS")):
-            build = f"{out}.build-{os.getpid()}"
-            e = _load(spark, sf, "embeddings")
-            (
-                # repartition by (label, vec_id), NOT label alone: one
-                # file per cell would cap the pruned probe's read
-                # parallelism at `probes` tasks (measured 4.5 s vs
-                # 1.4 s fresh at sf100 — worse than no index); hashing
-                # vec_id in spreads every cell over all tasks, so each
-                # cell directory holds ~n_tasks splittable files
-                e.repartition(
-                    work_partitions(spark, 32),
-                    F.col("label"),
-                    F.col("vec_id"),
-                )
-                .write.mode("overwrite")
-                .partitionBy("label")
-                .parquet(os.path.join(build, "by_cell"))
-            )
-            # centroids LAST: their _SUCCESS is the readiness marker
-            ivf_centroids(e).write.mode("overwrite").parquet(
-                os.path.join(build, "centroids")
-            )
-            try:
-                os.rename(build, out)
-            except OSError:
-                import shutil
+    ivf_centroids(e).write.mode("overwrite").parquet(
+        os.path.join(path, "centroids")
+    )
 
-                shutil.rmtree(build, ignore_errors=True)
-                if not os.path.exists(os.path.join(cent_p, "_SUCCESS")):
-                    raise
-        _IVF_ART[key] = (
-            spark.read.parquet(corpus_p),
-            spark.read.parquet(cent_p),
-        )
-    except Exception:
-        return
+
+artifacts.declare(
+    "ivf_index", "embeddings", "ivfindex", _build_ivf_index,
+    artifacts.parts("by_cell", "centroids"),
+)
 
 
 @query(
@@ -1541,90 +1467,39 @@ def _pq_sub(spark, sf):
     return _pq_subframe(e), k_cells, train_n
 
 
-#: (session_key, sf) -> (codes_df, codebook_df) for the at-rest PQ
-#: index (see materialize_pq_index).
-_PQ_ART: dict = {}
-
-
-def pq_index(spark, sf):
-    """The materialized at-rest PQ index (codes, codebook), or None —
-    the artifact accessor q_similarity_pq_adc consults, mirroring
-    doc_token_tf for the tokenize artifact."""
-    from pandas_reporter_spark.tables import _session_key
-
-    return _PQ_ART.get((_session_key(spark), sf))
-
-
-def materialize_pq_index(spark, sf, base: str = "/dev/shm") -> None:
+def _build_pq_index(spark, sf, path):
     """Train + encode ONCE and persist the PQ index at rest: codes
     (vec_id, m, cell — M small ints per vector) and the M·K codebook.
 
     This is what PQ is FOR at 100 TB: the index is an ingest-time
     artifact (the same amortization as tables.use_bucketed_layout and
-    materialize_minhash), and the per-query path then scans CODES —
+    the minhash artifact), and the per-query path then scans CODES —
     a few bytes per vector — instead of raw float vectors, so query
     bytes-scanned drops by the code/raw ratio (measured in
     docs/PQ_MEMORY_r12.json; ~19× smaller at rest at sf100). Training
     and encoding are deterministic (vec_id-prefix sample, integer
     Lloyd, argmin tie-break), so the artifact is bit-identical to
     what q_similarity_pq_adc computes fresh — equality pinned in
-    tests/test_similarity.py. The source mtime rides in the path so a
-    regenerated corpus never reuses a stale index; the build commits
-    by atomic rename (the tables.py discipline). Idempotent; on any
-    failure consumers keep the fresh-compute plan."""
-    import os
-
-    from pandas_reporter_spark.tables import _session_key
-
-    key = (_session_key(spark), sf)
-    if key in _PQ_ART or not os.path.isdir(base):
-        return
-    try:
-        src_tag = int(
-            os.path.getmtime(os.path.join(sf, "embeddings.parquet"))
-        )
-    except OSError:
-        src_tag = 0
-    out = os.path.join(
-        base,
-        f"prs_pqindex_{os.path.basename(os.path.normpath(sf))}_{src_tag}",
+    tests/test_similarity.py."""
+    sub, k_cells, train_n = _pq_sub(spark, sf)
+    sub = sub.persist()
+    book_p = os.path.join(path, "codebook")
+    _pq_train(spark, sub, k_cells, train_n).write.mode("overwrite").parquet(
+        book_p
     )
-    codes_p = os.path.join(out, "codes")
-    book_p = os.path.join(out, "codebook")
-    try:
-        ready = os.path.exists(
-            os.path.join(codes_p, "_SUCCESS")
-        ) and os.path.exists(os.path.join(book_p, "_SUCCESS"))
-        if not ready:
-            build = f"{out}.build-{os.getpid()}"
-            sub, k_cells, train_n = _pq_sub(spark, sf)
-            sub = sub.persist()
-            cents = _pq_train(spark, sub, k_cells, train_n)
-            cents.write.mode("overwrite").parquet(
-                os.path.join(build, "codebook")
-            )
-            cents = spark.read.parquet(os.path.join(build, "codebook"))
-            (
-                _pq_encode(spark, sub, cents)
-                .repartition(work_partitions(spark, 16))
-                .write.mode("overwrite")
-                .parquet(os.path.join(build, "codes"))
-            )
-            sub.unpersist()
-            try:
-                os.rename(build, out)
-            except OSError:
-                import shutil
+    (
+        _pq_encode(spark, sub, spark.read.parquet(book_p))
+        .repartition(work_partitions(spark, 16))
+        .write.mode("overwrite")
+        .parquet(os.path.join(path, "codes"))
+    )
+    sub.unpersist()
 
-                shutil.rmtree(build, ignore_errors=True)
-                if not os.path.exists(os.path.join(codes_p, "_SUCCESS")):
-                    raise
-        _PQ_ART[key] = (
-            spark.read.parquet(codes_p),
-            spark.read.parquet(book_p),
-        )
-    except Exception:
-        return
+
+artifacts.declare(
+    "pq_index", "embeddings", "pqindex", _build_pq_index,
+    artifacts.parts("codes", "codebook"),
+)
 
 
 def _pq_train(spark, sub, k_cells, train_n):
@@ -1771,7 +1646,7 @@ def q_similarity_pq_adc(spark, sf):
     SQL twin — the same proof discipline as q_embed_kmeans.
 
     At-rest tier (round 12, VERDICT r11 item 2): when
-    `materialize_pq_index` has persisted the codes + codebook, this
+    the `pq_index` artifact has persisted the codes + codebook, this
     query rides the artifact — the scan reads M small ints per vector
     instead of 64 floats and skips train+encode entirely (the query
     point's subvectors come from a pushed-down vec_id point lookup).
@@ -1782,7 +1657,7 @@ def q_similarity_pq_adc(spark, sf):
     Reference parity: none (driver-mandated similarity surface).
     """
     configure(spark)
-    art = pq_index(spark, sf)
+    art = artifacts.get(spark, sf, "pq_index")
     if art is not None:
         enc, cents = art
         qs = _pq_subframe(
@@ -2025,58 +1900,6 @@ def srp_codes(df: DataFrame, bits: int) -> DataFrame:
     return df.select("vec_id", "label", _codes(F.col("embedding")).alias("code"))
 
 
-#: (session, sf, bits) -> at-rest SRP code DataFrame (see
-#: materialize_srp_codes)
-_SRP_ART: dict = {}
-
-
-def srp_codes_at_rest(spark, sf, bits: int):
-    """The materialized (vec_id, label, code) relation, or None."""
-    from pandas_reporter_spark.tables import _session_key
-
-    return _SRP_ART.get((_session_key(spark), sf, bits))
-
-
-def materialize_srp_codes(spark, sf, bits: int = 256,
-                          base: str = "/dev/shm") -> None:
-    """Pack once per snapshot and persist the SRP sign codes — the
-    production posture for the binary tier: packing is ingest-time
-    work (256 plane dots/vec), queries scan bits/8 B/vec codes (32 B
-    at 256 bits, 8× under the raw vectors) and never touch the float
-    embeddings. Same tmpfs + source-mtime fingerprint discipline as
-    the PQ/IVF indexes; failures leave queries on the inline pack."""
-    import os
-
-    from pandas_reporter_spark.tables import _session_key
-
-    key = (_session_key(spark), sf, bits)
-    if key in _SRP_ART or not os.path.isdir(base):
-        return
-    try:
-        src_tag = int(os.path.getmtime(os.path.join(sf, "embeddings.parquet")))
-    except OSError:
-        src_tag = 0
-    out = os.path.join(
-        base,
-        f"prs_srp{bits}_{os.path.basename(os.path.normpath(sf))}_{src_tag}",
-    )
-    try:
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            e = load(spark, sf, "embeddings")
-            srp_codes(e, bits).write.mode("overwrite").parquet(out)
-        art = spark.read.parquet(out)
-        # Validate BEFORE caching (the BPE-artifact discipline): a
-        # concurrent session's mode('overwrite') on this shared path
-        # can expose a torn artifact. srp_codes is one code row per
-        # embedding, so a complete artifact matches the source count
-        # exactly; both counts are parquet-footer reads.
-        if art.count() != load(spark, sf, "embeddings").count():
-            return
-        _SRP_ART[key] = art
-    except Exception:
-        return
-
-
 def srp_hamming_topk(spark, sf, bits: int, k: int = 10) -> DataFrame:
     """Hamming top-k to the vec_id=0 query over `bits`-wide SRP codes
     — the width-parameterized engine path behind the HAMMING_AB grid
@@ -2084,13 +1907,13 @@ def srp_hamming_topk(spark, sf, bits: int, k: int = 10) -> DataFrame:
     form whose oracle needs no plane table; docs/HAMMING_AB_r13.json
     demotes that width to the planted-duplicate regime and makes
     256-bit the moderate-similarity tier). Rides the at-rest codes
-    when a session has materialized them (materialize_srp_codes —
+    when a session has materialized them (the `srp_codes` artifact —
     bit-equal by construction, the artifact IS srp_codes' output);
     else packs inline. Distance is Σ popcount(xor) over the packed
     longs (zip_with + aggregate on a bits/64-element array — bounded
     HOF, not corpus-width); ranking is TakeOrderedAndProject."""
     configure(spark)
-    s = srp_codes_at_rest(spark, sf, bits)
+    s = artifacts.get(spark, sf, "srp_codes") if bits == _SRP_BITS else None
     if s is None:
         e = load(spark, sf, "embeddings")
         s = srp_codes(e, bits)
@@ -2798,6 +2621,34 @@ def _duck_srp_planes(bits: int) -> str:
 _SRP_BITS = 256
 
 
+def _build_srp_codes(spark, sf, path):
+    """Pack the _SRP_BITS-wide SRP sign codes once per snapshot — the
+    production posture for the binary tier: packing is ingest-time
+    work (256 plane dots/vec), queries scan bits/8 B/vec codes (32 B
+    at 256 bits, 8× under the raw vectors) and never touch the float
+    embeddings."""
+    srp_codes(load(spark, sf, "embeddings"), _SRP_BITS).write.mode(
+        "overwrite"
+    ).parquet(path)
+
+
+def _open_srp_codes(spark, sf, path):
+    """srp_codes is one code row per embedding, so a complete artifact
+    matches the source count exactly; both counts are parquet-footer
+    reads."""
+    art = spark.read.parquet(path)
+    n, n_vec = art.count(), load(spark, sf, "embeddings").count()
+    if n != n_vec:
+        raise artifacts.Invalid(f"srp codes has {n} rows for {n_vec} embeddings")
+    return art
+
+
+artifacts.declare(
+    "srp_codes", "embeddings", f"srp{_SRP_BITS}", _build_srp_codes,
+    _open_srp_codes,
+)
+
+
 @query(
     "q_similarity_srp",
     oracle=f"""
@@ -2844,7 +2695,7 @@ def q_similarity_srp(spark, sf):
     bits/long with the ascending-dim IEEE chain (bit-exact with the
     oracle's list sums), distance is Σ popcount(xor) over 4 longs,
     ranking is TakeOrderedAndProject; a session that has materialized
-    the codes (materialize_srp_codes — the production posture) scans
+    the codes (the `srp_codes` artifact — the production posture) scans
     32 B/vec and never touches the float vectors: 0.35 s vs 2.0 s
     exact at sf100. The oracle counts differing signs directly (no
     packing — a BIGINT shift at bit 63 wraps), which is value-
@@ -3199,16 +3050,6 @@ def topk_batch_kernel(spark, sf, n_q: int = _TOPKB_Q, k: int = _TOPKB_K):
 #: neighbors kept per vector in the materialized graph
 _KNN_K = 8
 
-#: (session, sf) -> at-rest kNN graph DataFrame (see materialize_knn_graph)
-_KNN_ART: dict = {}
-
-
-def knn_graph_at_rest(spark, sf):
-    """The materialized kNN graph for (session, sf), or None."""
-    from pandas_reporter_spark.tables import _session_key
-
-    return _KNN_ART.get((_session_key(spark), sf))
-
 
 def _knn_graph_rel(spark, sf, k: int = _KNN_K) -> DataFrame:
     """Cell-scoped exact kNN graph — the SemDeDup geometry
@@ -3320,52 +3161,33 @@ def _knn_graph_rel(spark, sf, k: int = _KNN_K) -> DataFrame:
     )
 
 
-def materialize_knn_graph(spark, sf, base: str = "/dev/shm") -> None:
-    """Persist the cell-scoped kNN graph once per snapshot — the
+def _build_knn_graph(spark, sf, path):
+    """The cell-scoped kNN graph once per snapshot — the
     embedding-at-rest completion: SemDeDup-style clustering, graph
     ops, and neighborhood features all read ~_KNN_K rows/vec instead
-    of re-paying the in-cell pairwise pass. Parquet on tmpfs with the
-    source-mtime fingerprint; idempotent; validates row count against
-    the analytically-expected Σ_cells n_c · min(n_c - 1, k) BEFORE
-    caching (the torn-artifact discipline), so a concurrent
-    overwrite's partial file can never prime a consumer."""
-    import os  # noqa: PLC0415
+    of re-paying the in-cell pairwise pass."""
+    _knn_graph_rel(spark, sf).write.mode("overwrite").parquet(path)
 
-    from pandas_reporter_spark.tables import _session_key
 
-    key = (_session_key(spark), sf)
-    if key in _KNN_ART or not os.path.isdir(base):
-        return
-    try:
-        src_tag = int(
-            os.path.getmtime(os.path.join(sf, "embeddings.parquet"))
-        )
-    except OSError:
-        src_tag = 0
-    out = os.path.join(
-        base,
-        f"prs_knn{_KNN_K}_"
-        f"{os.path.basename(os.path.normpath(sf))}_{src_tag}",
+def _open_knn_graph(spark, sf, path):
+    """Row count must equal the analytically-expected
+    Σ_cells n_c · min(n_c - 1, k), so a partial file never primes a
+    consumer."""
+    art = spark.read.parquet(path)
+    cells = load(spark, sf, "embeddings").groupBy("label").count().collect()
+    expected = sum(
+        int(r["count"]) * min(int(r["count"]) - 1, _KNN_K) for r in cells
     )
-    try:
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            _knn_graph_rel(spark, sf).write.mode("overwrite").parquet(out)
-        art = spark.read.parquet(out)
-        cells = (
-            load(spark, sf, "embeddings")
-            .groupBy("label")
-            .count()
-            .collect()
-        )
-        expected = sum(
-            int(r["count"]) * min(int(r["count"]) - 1, _KNN_K)
-            for r in cells
-        )
-        if art.count() != expected:
-            return
-        _KNN_ART[key] = art
-    except Exception:
-        return
+    n = art.count()
+    if n != expected:
+        raise artifacts.Invalid(f"knn graph has {n} rows, expected {expected}")
+    return art
+
+
+artifacts.declare(
+    "knn_graph", "embeddings", f"knn{_KNN_K}", _build_knn_graph,
+    _open_knn_graph,
+)
 
 
 @query(
@@ -3399,7 +3221,7 @@ def q_similarity_knn_graph(spark, sf):
     in-cell cosine neighbors for EVERY vector — the one artifact that
     feeds SemDeDup-style clustering, mutual-kNN graph ops, and
     neighborhood features. Rides the at-rest graph when a session has
-    materialized it (`materialize_knn_graph` — the artifact IS this
+    materialized it (the `knn_graph` artifact — the artifact IS this
     plan's output, bit-equal by construction); else derives in-plan.
 
     Scale notes live on `_knn_graph_rel`; the consumer here reads
@@ -3408,7 +3230,7 @@ def q_similarity_knn_graph(spark, sf):
     Reference parity: none (driver-mandated similarity surface).
     """
     configure(spark)
-    art = knn_graph_at_rest(spark, sf)
+    art = artifacts.get(spark, sf, "knn_graph")
     rel = art if art is not None else _knn_graph_rel(spark, sf)
     return rel.select(
         "vec_id", "rank", "neighbor_id", F.round("cos", 6).alias("cos")
@@ -4100,7 +3922,7 @@ def q_dedup_semdedup(spark, sf):
     (max and order-free nano-summed top-1 cosine) — the curve a
     curation run reads to pick tau before committing to a drop rate.
 
-    Plan shape: when `materialize_knn_graph` has primed the sidecar,
+    Plan shape: when the `knn_graph` artifact has primed the sidecar,
     this reads ~{k} rows/vec from parquet — the in-cell pairwise pass
     is already paid, so the whole query is two small aggregates (per
     vec, then per cell) plus one join back to (vec_id, label); fresh
@@ -4114,7 +3936,7 @@ def q_dedup_semdedup(spark, sf):
     """
     configure(spark)
     e = load(spark, sf, "embeddings")
-    art = knn_graph_at_rest(spark, sf)
+    art = artifacts.get(spark, sf, "knn_graph")
     rel = art if art is not None else _knn_graph_rel(spark, sf)
     per_vec = rel.groupBy("vec_id").agg(
         F.max(

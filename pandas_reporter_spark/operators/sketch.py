@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from pandas_reporter_spark import artifacts
 from pandas_reporter_spark.registry import query
 from pandas_reporter_spark.session import configure
 from pandas_reporter_spark.tables import load
@@ -259,9 +260,7 @@ def _hh_token_stream(spark, sf):
     """(token, tf) weighted stream: the shared tokenize artifact when a
     session has materialized it, else the exploded corpus with tf=1 —
     identical downstream math either way."""
-    from pandas_reporter_spark.operators.text import doc_token_tf
-
-    art = doc_token_tf(spark, sf)
+    art = artifacts.get(spark, sf, "doc_tokens")
     if art is not None:
         return art.filter(F.col("token") != "").select("token", "tf")
     d = load(spark, sf, "documents")
@@ -388,11 +387,9 @@ def q_sketch_cms(spark, sf):
     Reference parity: none (driver-mandated sketch surface; public
     algorithm — Cormode & Muthukrishnan 2005).
     """
-    from pandas_reporter_spark.operators.text import doc_token_tf
-
     configure(spark)
     d_rows, w = 4, 1024
-    art = doc_token_tf(spark, sf)
+    art = artifacts.get(spark, sf, "doc_tokens")
     if art is not None:
         tok = art.filter(F.col("token") != "").select("token", "tf")
         exact = tok.groupBy("token").agg(F.sum("tf").alias("exact_n"))
@@ -559,11 +556,7 @@ def q_sketch_bloom(spark, sf):
     positions); per-doc rollup is map-side combinable.
     """
     configure(spark)
-    from pandas_reporter_spark.operators.dedup import (
-        _MH_ART,
-        with_hashed_shingles,
-    )
-    from pandas_reporter_spark.tables import _session_key
+    from pandas_reporter_spark.operators.dedup import with_hashed_shingles
 
     docs = load(spark, sf, "documents")
     # the (doc_id, hs) relation is referenced THREE times below
@@ -571,7 +564,7 @@ def q_sketch_bloom(spark, sf):
     # reuse the session's checkpointed minhash shingle artifact when
     # materialized — otherwise persist, or the md5 tokenize pipeline
     # re-evaluates per branch (7.2 s -> 1.0 s measured at sf0.1)
-    art = _MH_ART.get((_session_key(spark), sf))
+    art = artifacts.get(spark, sf, "minhash")
     if art is not None:
         hs_df = art[0]
     else:

@@ -13,9 +13,12 @@ ever feed filters/orderings computed identically in both engines.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from pandas_reporter_spark import artifacts
 from pandas_reporter_spark.registry import query
 from pandas_reporter_spark.session import configure, work_partitions
 from pandas_reporter_spark.tables import davg, load
@@ -26,146 +29,76 @@ from pandas_reporter_spark.tables import davg, load
 _BPE_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
 
-#: (session, sf) -> materialized (doc_id, lang, source, token, tf)
-#: DataFrame — the shared tokenize artifact (see materialize_doc_tokens)
-_TF_ART: dict = {}
-
-
-def doc_token_tf(spark, sf):
-    """The materialized shared tokenize artifact, or None.
-
-    `(doc_id, lang, source, token, tf)` — one row per distinct token
-    per doc (empty tokens INCLUDED; consumers filter), tf = occurrence
-    count. Five text queries (tokens, tfidf, langid profiles, logprob,
-    kl) derive their aggregates exactly from this relation, so when a
-    long-lived session has it checkpointed they skip the corpus
-    re-tokenize + first shuffle. Returns None when not materialized —
-    each consumer then keeps its original standalone plan (the shapes
-    the plan pins and SCALING notes describe), because inline-building
-    this artifact per query costs MORE than the direct aggregation
-    (the round-4 persist lesson: cache materialization outweighs the
-    explode it saves within a single query)."""
-    from pandas_reporter_spark.tables import _session_key
-
-    return _TF_ART.get((_session_key(spark), sf))
-
-
-def materialize_doc_tokens(spark, sf, base: str = "/dev/shm") -> None:
-    """Build + checkpoint the shared tokenize artifact once per session.
+def _build_doc_tokens(spark, sf, path):
+    """The shared tokenize artifact `(doc_id, lang, source, token, tf)`:
+    one row per distinct token per doc (empty tokens INCLUDED;
+    consumers filter), tf = occurrence count.
 
     The 100 TB pipeline pattern SCALING.md documents for TF-IDF/langid:
-    tokenize ONCE into a (doc, token, tf) table, run every downstream
-    analysis off it — the tradeoff flips in favor of materializing as
-    soon as more than one pass wants the token stream. The bench primes
-    this outside the timed loop (same policy as tables.relayout: a
-    pipeline pays tokenize at ingest, not per analysis). Parquet on
-    tmpfs rather than .persist(): the write is a prime-phase cost and
-    the read-back is a normal multi-file scan, so timed queries see no
-    cache-materialization job. Idempotent; failures leave consumers on
-    their standalone plans."""
-    import os
-
-    from pandas_reporter_spark.tables import _session_key, load as _load
-
-    key = (_session_key(spark), sf)
-    if key in _TF_ART or not os.path.isdir(base):
-        return
-    # fingerprint the SOURCE file's mtime into the artifact path: a
-    # regenerated testdata snapshot (it happened in round 4) must never
-    # silently reuse a stale /dev/shm artifact from a previous run
-    try:
-        src_tag = int(os.path.getmtime(os.path.join(sf, "documents.parquet")))
-    except OSError:
-        src_tag = 0
-    out = os.path.join(
-        base,
-        f"prs_tokens_{os.path.basename(os.path.normpath(sf))}_{src_tag}",
+    tokenize ONCE into a (doc, token, tf) table and run every
+    downstream analysis off it. Consumers derive their aggregates
+    exactly from this relation and skip the corpus re-tokenize + first
+    shuffle when it is registered; otherwise each keeps its standalone
+    plan, because building the artifact inline per query costs MORE
+    than the direct aggregation (the round-4 persist lesson). Parquet
+    on tmpfs rather than .persist(): the write is an ingest cost and
+    the read-back is a plain multi-file scan, so timed queries see no
+    cache-materialization job."""
+    (
+        load(spark, sf, "documents")
+        .select(
+            "doc_id",
+            "lang",
+            "source",
+            F.explode(F.split(F.lower("text"), " ")).alias("token"),
+        )
+        .groupBy("doc_id", "lang", "source", "token")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .repartition(work_partitions(spark, 16))
+        .write.mode("overwrite")
+        .parquet(path)
     )
-    try:
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            d = _load(spark, sf, "documents")
-            (
-                d.select(
-                    "doc_id",
-                    "lang",
-                    "source",
-                    F.explode(F.split(F.lower("text"), " ")).alias("token"),
-                )
-                .groupBy("doc_id", "lang", "source", "token")
-                .agg(F.count(F.lit(1)).alias("tf"))
-                .repartition(work_partitions(spark, 16))
-                .write.mode("overwrite")
-                .parquet(out)
-            )
-        _TF_ART[key] = spark.read.parquet(out)
-    except Exception:
-        return
-
-#: (session, sf) -> 1-row (v) DF — the corpus vocabulary size
-#: (see materialize_vocab_stats)
-_VOCAB_ART: dict = {}
 
 
-def vocab_stats(spark, sf):
-    """The materialized 1-row corpus vocab-size stat (v = count of
-    distinct non-empty whitespace tokens), or None. ANALYZE-style
-    table statistics, the materialize_wm_stats pattern: the perplexity
+artifacts.declare("doc_tokens", "documents", "tokens", _build_doc_tokens)
+
+
+def _build_vocab_stats(spark, sf, path):
+    """1-row (v): the corpus vocabulary size (distinct non-empty
+    whitespace tokens). ANALYZE-style table statistics: the perplexity
     model's add-V smoothing constant is a property of the snapshot, so
-    a long-lived session computes it once at ingest instead of
-    re-aggregating the token dictionary per scoring pass."""
-    from pandas_reporter_spark.tables import _session_key
-
-    return _VOCAB_ART.get((_session_key(spark), sf))
-
-
-def materialize_vocab_stats(spark, sf, base: str = "/dev/shm") -> None:
-    """Build + checkpoint the vocab-size stat once per session. Derives
-    from the doc_token_tf artifact when that is already materialized
-    (dictionary-scale distinct instead of a corpus re-tokenize), else
-    from the corpus. Same tmpfs + mtime-fingerprint + validate idiom as
-    every sidecar; on failure consumers keep their self-derive plans."""
-    import os
-
-    from pandas_reporter_spark.tables import _session_key, load as _load
-
-    key = (_session_key(spark), sf)
-    if key in _VOCAB_ART or not os.path.isdir(base):
-        return
-    try:
-        src_tag = int(os.path.getmtime(os.path.join(sf, "documents.parquet")))
-    except OSError:
-        src_tag = 0
-    out = os.path.join(
-        base,
-        f"prs_vocab_{os.path.basename(os.path.normpath(sf))}_{src_tag}",
+    it is computed once at ingest instead of per scoring pass. Derives
+    from the doc_tokens artifact when that is registered
+    (dictionary-scale distinct instead of a corpus re-tokenize)."""
+    art = artifacts.get(spark, sf, "doc_tokens")
+    if art is not None:
+        toks = art.select("token")
+    else:
+        toks = load(spark, sf, "documents").select(
+            F.explode(F.split(F.lower("text"), " ")).alias("token")
+        )
+    (
+        toks.filter(F.col("token") != "")
+        .agg(F.countDistinct("token").alias("v"))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(path)
     )
-    try:
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            art = doc_token_tf(spark, sf)
-            if art is not None:
-                toks = art.select("token")
-            else:
-                toks = _load(spark, sf, "documents").select(
-                    F.explode(F.split(F.lower("text"), " ")).alias("token")
-                )
-            (
-                toks.filter(F.col("token") != "")
-                .agg(F.countDistinct("token").alias("v"))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(out)
-            )
-        df = spark.read.parquet(out)
-        if df.count() != 1:  # torn artifact — self-derive instead
-            return
-        _VOCAB_ART[key] = df
-    except Exception:
-        return
 
 
-#: (session, sf) -> (postings, doclen, stats) — the at-rest inverted
-#: token index (see materialize_token_index)
-_TOKIDX_ART: dict = {}
+def _open_vocab_stats(spark, sf, path):
+    df = spark.read.parquet(path)
+    n = df.count()
+    if n != 1:
+        raise artifacts.Invalid(f"vocab stats has {n} rows, expected 1")
+    return df
+
+
+artifacts.declare(
+    "vocab_stats", "documents", "vocab", _build_vocab_stats, _open_vocab_stats
+)
+
+
 #: posting-bucket fan-out: partitions of the at-rest postings table.
 #: 64 keeps per-bucket directories coarse enough for splittable files
 #: at test scale; a 100 TB deployment raises it (the probe cost is
@@ -173,22 +106,11 @@ _TOKIDX_ART: dict = {}
 _TOKIDX_BUCKETS = 64
 
 
-def token_index(spark, sf):
-    """The materialized at-rest inverted index, or None — the accessor
-    bm25_scores consults. (postings, doclen, stats):
-    postings (doc_id, token, tf) partitioned by bucket =
+def _build_token_index(spark, sf, path):
+    """The retrieval index at rest, (postings, doclen, stats):
+    postings (doc_id, token, tf) PARTITIONED BY bucket =
     portable-60-bit-md5(token) mod _TOKIDX_BUCKETS; doclen
-    (doc_id, dl); stats 1 row (n_docs, sum_dl)."""
-    from pandas_reporter_spark.tables import _session_key
-
-    return _TOKIDX_ART.get((_session_key(spark), sf))
-
-
-def materialize_token_index(spark, sf, base: str = "/dev/shm") -> None:
-    """Persist the retrieval index at rest — the text-side member of
-    the at-rest artifact family (bucketed fact tables, IVF cells, PQ
-    codes): postings PARTITIONED BY TOKEN-HASH BUCKET, a narrow
-    doc-length sidecar, and the 1-row corpus stats.
+    (doc_id, dl); stats 1 row (n_docs, sum_dl).
 
     The point is what the BM25/RRF probe then looks like at 100 TB: a
     |query-terms|-bucket STATIC partition-pruned scan of the postings
@@ -199,81 +121,46 @@ def materialize_token_index(spark, sf, base: str = "/dev/shm") -> None:
     expressed as parquet layout + Catalyst partition pruning instead
     of a custom store. Postings rows are IDENTICAL to the fresh
     (doc, token, tf) relation, so the probe is bit-identical to the
-    fresh plan (equality pinned in tests/test_text.py).
-
-    Same ingest-amortization and atomic-rename commit discipline as
-    materialize_ivf_index; idempotent, mtime-tagged; on failure
-    consumers keep the fresh plan."""
-    import os
-
-    from pandas_reporter_spark.tables import _session_key, load as _load
-
-    key = (_session_key(spark), sf)
-    if key in _TOKIDX_ART or not os.path.isdir(base):
-        return
-    try:
-        src_tag = int(os.path.getmtime(os.path.join(sf, "documents.parquet")))
-    except OSError:
-        src_tag = 0
-    out = os.path.join(
-        base,
-        f"prs_tokidx_{os.path.basename(os.path.normpath(sf))}_{src_tag}",
-    )
-    post_p = os.path.join(out, "postings")
-    dl_p = os.path.join(out, "doclen")
-    stats_p = os.path.join(out, "stats")
-    try:
-        if not os.path.exists(os.path.join(stats_p, "_SUCCESS")):
-            build = f"{out}.build-{os.getpid()}"
-            d = _load(spark, sf, "documents")
-            tf = (
-                d.select(
-                    "doc_id",
-                    F.explode(F.split(F.lower("text"), " ")).alias("token"),
-                )
-                .filter(F.col("token") != "")
-                .groupBy("doc_id", "token")
-                .agg(F.count(F.lit(1)).alias("tf"))
-            )
-            bucket = (
-                F.conv(F.substring(F.md5("token"), 1, 15), 16, 10).cast("long")
-                % _TOKIDX_BUCKETS
-            ).cast("int")
-            (
-                # hash doc_id in alongside the partition column so each
-                # bucket directory holds splittable files (the IVF
-                # read-parallelism lesson: one file per bucket caps the
-                # probe at |terms| tasks)
-                tf.withColumn("bucket", bucket)
-                .repartition(
-                    work_partitions(spark, 32), F.col("bucket"), F.col("doc_id")
-                )
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(os.path.join(build, "postings"))
-            )
-            tf.groupBy("doc_id").agg(
-                F.sum("tf").alias("dl")
-            ).write.mode("overwrite").parquet(os.path.join(build, "doclen"))
-            # stats LAST: its _SUCCESS is the readiness marker
-            d.agg(F.count(F.lit(1)).alias("n_docs")).crossJoin(
-                tf.agg(F.sum("tf").alias("sum_dl"))
-            ).write.mode("overwrite").parquet(os.path.join(build, "stats"))
-            try:
-                os.rename(build, out)
-            except OSError:
-                import shutil
-
-                shutil.rmtree(build, ignore_errors=True)
-                if not os.path.exists(os.path.join(stats_p, "_SUCCESS")):
-                    raise
-        _TOKIDX_ART[key] = (
-            spark.read.parquet(post_p),
-            spark.read.parquet(dl_p),
-            spark.read.parquet(stats_p),
+    fresh plan (equality pinned in tests/test_text.py)."""
+    d = load(spark, sf, "documents")
+    tf = (
+        d.select(
+            "doc_id",
+            F.explode(F.split(F.lower("text"), " ")).alias("token"),
         )
-    except Exception:
-        return
+        .filter(F.col("token") != "")
+        .groupBy("doc_id", "token")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    bucket = (
+        F.conv(F.substring(F.md5("token"), 1, 15), 16, 10).cast("long")
+        % _TOKIDX_BUCKETS
+    ).cast("int")
+    (
+        # hash doc_id in alongside the partition column so each
+        # bucket directory holds splittable files (the IVF
+        # read-parallelism lesson: one file per bucket caps the
+        # probe at |terms| tasks)
+        tf.withColumn("bucket", bucket)
+        .repartition(
+            work_partitions(spark, 32), F.col("bucket"), F.col("doc_id")
+        )
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(os.path.join(path, "postings"))
+    )
+    tf.groupBy("doc_id").agg(
+        F.sum("tf").alias("dl")
+    ).write.mode("overwrite").parquet(os.path.join(path, "doclen"))
+    d.agg(F.count(F.lit(1)).alias("n_docs")).crossJoin(
+        tf.agg(F.sum("tf").alias("sum_dl"))
+    ).write.mode("overwrite").parquet(os.path.join(path, "stats"))
+
+
+artifacts.declare(
+    "token_index", "documents", "tokidx", _build_token_index,
+    artifacts.parts("postings", "doclen", "stats"),
+)
 
 
 #: Tiny function-word list used by the quality score's stopword ratio.
@@ -301,7 +188,7 @@ def q_text_tokens(spark, sf):
     tokens into `token#salt` and re-merge — same plan, two stages).
     """
     configure(spark)
-    art = doc_token_tf(spark, sf)
+    art = artifacts.get(spark, sf, "doc_tokens")
     if art is not None:
         # tf rows are one-per-(doc, token): SUM(tf) is the occurrence
         # count and COUNT(*) is the document frequency — exact
@@ -517,9 +404,9 @@ def q_text_tfidf(spark, sf):
     # tokenize pass it saves (1.46s persisted vs 1.11s recomputed at
     # sf0.1, min-of-5 — langid history). The tradeoff flips once MORE
     # THAN ONE query wants the token stream: a session that primed the
-    # shared checkpointed artifact (materialize_doc_tokens) starts
+    # shared checkpointed artifact (the `doc_tokens` artifact) starts
     # from it directly — documented in SCALING.md.
-    art = doc_token_tf(spark, sf)
+    art = artifacts.get(spark, sf, "doc_tokens")
     if art is not None:
         tf = art.filter(F.col("token") != "").select("doc_id", "token", "tf")
     else:
@@ -609,7 +496,7 @@ def q_text_langid(spark, sf):
     configure(spark)
 
     d = load(spark, sf, "documents")
-    art = doc_token_tf(spark, sf)
+    art = artifacts.get(spark, sf, "doc_tokens")
     if art is not None:  # profile build off the shared artifact (no
         # empty-token filter here — matches the direct explode exactly)
         lang_counts = art.groupBy("lang", "token").agg(F.sum("tf").alias("n"))
@@ -1265,7 +1152,7 @@ def q_text_logprob(spark, sf):
     """
     configure(spark)
     d = load(spark, sf, "documents")
-    art = doc_token_tf(spark, sf)
+    art = artifacts.get(spark, sf, "doc_tokens")
     if art is not None:
         # tf-weighted forms of the same aggregates — exact: sums of
         # integer lp_micro scaled by integer tf stay on the long path
@@ -1375,7 +1262,7 @@ def q_text_kl_divergence(spark, sf):
     """
     configure(spark)
     d = load(spark, sf, "documents")
-    art = doc_token_tf(spark, sf)
+    art = artifacts.get(spark, sf, "doc_tokens")
     if art is not None:
         st = (
             art.filter(F.col("token") != "")
@@ -1966,7 +1853,7 @@ def bm25_scores(spark, sf):
     for the plan-shape and float-discipline rationale.
 
     When the at-rest inverted index is materialized
-    (materialize_token_index), the probe form runs instead: the
+    (the `token_index` artifact), the probe form runs instead: the
     posting-list fetch becomes a STATIC partition-pruned scan of the
     query terms' buckets, doc lengths come from the narrow sidecar
     (no corpus re-aggregation), and corpus stats are one pre-computed
@@ -1975,7 +1862,7 @@ def bm25_scores(spark, sf):
     are bit-identical (pinned in tests/test_text.py).
 
     Deliberately does NOT consult the shared tokenize artifact
-    (doc_token_tf) the five aggregate-once text queries ride: this
+    (the `doc_tokens` artifact) the five aggregate-once text queries ride: this
     dataflow reads the token relation THREE times (postings, doc
     lengths, corpus stats), and at sf10 three parquet passes over the
     ~300×-row artifact measured 21.1 s vs 4.1 s for re-tokenizing
@@ -1985,7 +1872,7 @@ def bm25_scores(spark, sf):
     import hashlib
 
     configure(spark)
-    idx = token_index(spark, sf)
+    idx = artifacts.get(spark, sf, "token_index")
     if idx is not None:
         postings, doclen, stats_at_rest = idx
         term_buckets = sorted(
@@ -2385,14 +2272,6 @@ def q_agg_entropy(spark, sf):
     )
 
 
-#: Previous DSIR invocation's persisted bucket stream, retired on the
-#: next call (the q_text_perplexity_bigram cache-hygiene pattern: the
-#: returned plan is lazy, so the function cannot unpersist its own
-#: cache). Shared by the unigram and bigram forms — they cache the
-#: same role and never run concurrently in a query path.
-_DSIR_TOK_HANDLES: list = []
-
-
 @query(
     "q_pipeline_dsir",
     oracle="""
@@ -2471,7 +2350,7 @@ def q_pipeline_dsir(spark, sf):
     Reference parity: none (driver-mandated pipeline surface).
     """
     configure(spark)
-    art = doc_token_tf(spark, sf)
+    art = artifacts.get(spark, sf, "doc_tokens")
     if art is not None:
         # the shared tokenize artifact carries (doc, token, tf): the
         # same integer sums weighted by tf — bit-equal scores with
@@ -2515,13 +2394,9 @@ def q_pipeline_dsir(spark, sf):
     # invocation) so tokenize + md5 run ONCE, not once per pass.
     from pyspark import StorageLevel
 
-    while _DSIR_TOK_HANDLES:
-        try:
-            _DSIR_TOK_HANDLES.pop().unpersist()
-        except Exception:
-            pass
-    tok = tok.persist(StorageLevel.MEMORY_AND_DISK)
-    _DSIR_TOK_HANDLES.append(tok)
+    tok = artifacts.hold(
+        "q_pipeline_dsir", tok.persist(StorageLevel.MEMORY_AND_DISK)
+    )
     prof = tok.groupBy("b").agg(
         F.sum(
             F.when(F.col("source") == "src0", F.col("tf")).otherwise(0)
@@ -2764,13 +2639,9 @@ def q_pipeline_dsir_bigram(spark, sf):
     # and scoring consumers (see q_pipeline_dsir / perplexity_bigram)
     from pyspark import StorageLevel
 
-    while _DSIR_TOK_HANDLES:
-        try:
-            _DSIR_TOK_HANDLES.pop().unpersist()
-        except Exception:
-            pass
-    bg = bg.persist(StorageLevel.MEMORY_AND_DISK)
-    _DSIR_TOK_HANDLES.append(bg)
+    bg = artifacts.hold(
+        "q_pipeline_dsir_bigram", bg.persist(StorageLevel.MEMORY_AND_DISK)
+    )
     prof = bg.groupBy("b").agg(
         F.sum(
             F.when(F.col("source") == "src0", 1).otherwise(0)
@@ -2999,7 +2870,7 @@ def q_text_quality_classifier(spark, sf):
         % _QC_BUCKETS
     )
     w = _qc_w_of(bucket)
-    art = doc_token_tf(spark, sf)
+    art = artifacts.get(spark, sf, "doc_tokens")
     if art is not None:
         # artifact path: tf is pre-aggregated, so score per distinct
         # token (Σ tf·w) hashes once per (doc, token)
@@ -3227,12 +3098,6 @@ def q_text_overlap_matrix(spark, sf):
     )
 
 
-#: Previous q_text_perplexity_bigram invocation's persisted bigram
-#: stream, retired on the next call (the plan is returned lazy, so the
-#: function itself can never unpersist its own cache).
-_PPL_BG_HANDLES: list = []
-
-
 @query(
     "q_text_perplexity_bigram",
     oracle="""
@@ -3366,13 +3231,9 @@ def q_text_perplexity_bigram(spark, sf):
     # retires the previous one's handle (ADVICE r13 — without this a
     # bench session accumulates abandoned cached blocks until the
     # ContextCleaner happens to GC them).
-    while _PPL_BG_HANDLES:
-        try:
-            _PPL_BG_HANDLES.pop().unpersist()
-        except Exception:
-            pass
-    bg = bg.persist(StorageLevel.MEMORY_AND_DISK)
-    _PPL_BG_HANDLES.append(bg)
+    bg = artifacts.hold(
+        "q_text_perplexity_bigram", bg.persist(StorageLevel.MEMORY_AND_DISK)
+    )
     # c1 derives from the c12 DICTIONARY, not from a second pass over
     # the corpus bigram stream: h1 is functionally dependent on h12
     # (a bigram determines its predecessor; min() resolves the
@@ -3385,15 +3246,15 @@ def q_text_perplexity_bigram(spark, sf):
     )
     c1 = c12.groupBy("h1").agg(F.sum("c12").alias("c1"))
     # V (distinct vocab) is a SNAPSHOT STATISTIC — prefer the 1-row
-    # at-rest stat (materialize_vocab_stats, the ANALYZE-stats
+    # at-rest stat (the `vocab_stats` artifact, the ANALYZE-stats
     # pattern: computed once at ingest), then the shared tokenize
     # artifact (countDistinct over the (doc, token) relation equals
     # countDistinct over the exploded corpus — the artifact keeps
     # empty tokens, the filter matches the oracle's list_filter), then
     # the standalone corpus pass (the plan the oracle gate always
     # exercises). Identical value on every tier by construction.
-    vs = vocab_stats(spark, sf)
-    art = doc_token_tf(spark, sf)
+    vs = artifacts.get(spark, sf, "vocab_stats")
+    art = artifacts.get(spark, sf, "doc_tokens")
     if vs is not None:
         v = vs
     elif art is not None:
@@ -3972,9 +3833,9 @@ def q_text_bpe_apply(spark, sf):
     """
     configure(spark)
     # at-rest trained tokenizer, when a session has materialized it
-    # (materialize_bpe_merges — bit-equal by construction since the
+    # (the `bpe_merges` artifact — bit-equal by construction since the
     # artifact IS q_text_bpe_train's output; pinned in tests)
-    art = bpe_merges(spark, sf)
+    art = artifacts.get(spark, sf, "bpe_merges")
     merges = art if art is not None else _bpe_learn(spark, sf, _BPE_MERGES)
     d = load(spark, sf, "documents")
     toks = F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
@@ -4325,130 +4186,67 @@ def q_stream_sample_weighted(spark, sf):
     )
 
 
-#: (session, sf) -> collected merge tuples — the at-rest trained
-#: tokenizer (see materialize_bpe_merges)
-_BPE_ART: dict = {}
-
-
-def bpe_merges(spark, sf):
-    """The materialized trained merge table, or None. When a
-    long-lived session has trained once, q_text_bpe_apply's
-    application pass skips the corpus re-train (one corpus word-count
-    shuffle + the dictionary loop)."""
-    from pandas_reporter_spark.tables import _session_key
-
-    return _BPE_ART.get((_session_key(spark), sf))
-
-
-def materialize_bpe_merges(spark, sf, base: str = "/dev/shm") -> None:
-    """Train once per session and persist the merge table — the
+def _build_bpe_merges(spark, sf, path):
+    """Train once per snapshot and persist the merge table — the
     production posture: a tokenizer is TRAINED once at corpus build
     time and shipped as an artifact; every apply pass reads the 8-row
-    table. Parquet on tmpfs with the source-mtime fingerprint (the
-    doc_token_tf discipline: a regenerated snapshot must never reuse
-    a stale artifact). Idempotent; failures leave apply on its
+    table instead of re-training (one corpus word-count shuffle + the
+    dictionary loop)."""
+    spark.createDataFrame(
+        _bpe_learn(spark, sf, _BPE_MERGES),
+        "round int, lhs string, rhs string, pair_count bigint,"
+        " merged string",
+    ).coalesce(1).write.mode("overwrite").parquet(path)
+
+
+def _open_bpe_merges(spark, sf, path):
+    """The collected merge tuples, validated: a complete artifact has
+    rounds exactly 1..k. The path is shared across processes
+    (deliberately — a trained tokenizer is one artifact per snapshot),
+    so a torn directory can read 0 or partial rows without raising;
+    anything but rounds 1..k (including a legitimately merge-exhausted
+    tiny corpus, indistinguishable from a torn read) stays on the
     self-training plan."""
-    import os
-
-    from pandas_reporter_spark.tables import _session_key
-
-    key = (_session_key(spark), sf)
-    if key in _BPE_ART or not os.path.isdir(base):
-        return
-    try:
-        src_tag = int(os.path.getmtime(os.path.join(sf, "documents.parquet")))
-    except OSError:
-        src_tag = 0
-    out = os.path.join(
-        base,
-        f"prs_bpe_{os.path.basename(os.path.normpath(sf))}_{src_tag}",
-    )
-    try:
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            merges = _bpe_learn(spark, sf, _BPE_MERGES)
-            spark.createDataFrame(
-                merges,
-                "round int, lhs string, rhs string, pair_count bigint,"
-                " merged string",
-            ).coalesce(1).write.mode("overwrite").parquet(out)
-        rows = sorted(
-            spark.read.parquet(out).collect(), key=lambda r: r["round"]
+    rows = sorted(spark.read.parquet(path).collect(), key=lambda r: r["round"])
+    rounds = [r["round"] for r in rows]
+    if rounds != list(range(1, _BPE_MERGES + 1)):
+        raise artifacts.Invalid(
+            f"bpe merges has rounds {rounds}, expected 1..{_BPE_MERGES}"
         )
-        # Validate BEFORE caching: the path is shared across processes
-        # (deliberately — a trained tokenizer is one artifact per
-        # snapshot), so a concurrent session's mode('overwrite') can
-        # let this read collect 0 or partial rows without raising.
-        # Caching such a read would silently change every later
-        # q_text_bpe_apply in this session. A complete artifact has
-        # rounds exactly 1..k; anything else (including a legitimately
-        # merge-exhausted tiny corpus, indistinguishable from a torn
-        # read) falls back to the self-training plan uncached.
-        if [r["round"] for r in rows] != list(range(1, _BPE_MERGES + 1)):
-            return
-        _BPE_ART[key] = [
-            (r["round"], r["lhs"], r["rhs"], r["pair_count"], r["merged"])
-            for r in rows
-        ]
-    except Exception:
-        return
+    return [
+        (r["round"], r["lhs"], r["rhs"], r["pair_count"], r["merged"])
+        for r in rows
+    ]
 
 
-#: (session, sf) -> materialized (doc_id, q) classifier-score relation
-#: (see materialize_docq)
-_DOCQ_ART: dict = {}
+artifacts.declare(
+    "bpe_merges", "documents", "bpe", _build_bpe_merges, _open_bpe_merges
+)
 
 
-def docq_scores(spark, sf):
-    """The materialized per-doc normalized classifier score (doc_id,
-    q), or None. The curriculum's staging pass re-reads this ~16 B/doc
-    relation instead of re-tokenizing and re-scoring the corpus — the
-    r12 grid measured the persisted-docq variant at 17.3 s vs 32.5 s
-    re-derived at sf100 (DuckDB 18.4 s)."""
-    from pandas_reporter_spark.tables import _session_key
-
-    return _DOCQ_ART.get((_session_key(spark), sf))
-
-
-def materialize_docq(spark, sf, base: str = "/dev/shm") -> None:
+def _build_docq(spark, sf, path):
     """Score once per snapshot and persist (doc_id, q) — the
     production posture: a quality classifier runs at ingest and its
     scores ride the metadata sidecar; every curriculum/mixing pass
-    reads scores, not text. Parquet on tmpfs with the source-mtime
-    fingerprint; idempotent; failures leave consumers on their
-    self-scoring plans. Bit-equality between the artifact and the
-    inline chain is by construction (same `_docq_rel` plan writes the
-    file) and pinned in tests."""
-    import os
+    reads ~16 B/doc scores, not text (the r12 grid measured the
+    persisted-docq variant at 17.3 s vs 32.5 s re-derived at sf100).
+    Bit-equality with the inline chain is by construction: the same
+    `_docq_rel` plan writes the file."""
+    _docq_rel(spark, sf).write.mode("overwrite").parquet(path)
 
-    from pandas_reporter_spark.tables import _session_key
 
-    key = (_session_key(spark), sf)
-    if key in _DOCQ_ART or not os.path.isdir(base):
-        return
-    try:
-        src_tag = int(os.path.getmtime(os.path.join(sf, "documents.parquet")))
-    except OSError:
-        src_tag = 0
-    out = os.path.join(
-        base,
-        f"prs_docq_{os.path.basename(os.path.normpath(sf))}_{src_tag}",
-    )
-    try:
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            _docq_rel(spark, sf).write.mode("overwrite").parquet(out)
-        art = spark.read.parquet(out)
-        # Validate BEFORE caching (the BPE-artifact discipline): the
-        # path is shared across processes, so a concurrent session's
-        # mode('overwrite') can expose a torn artifact — partial row
-        # groups read without error. A complete docq has exactly one
-        # row per document (every doc contributes >= 1 token; a corpus
-        # where that fails just stays on the inline plan). Both counts
-        # are parquet-footer reads — the primed win is untouched.
-        if art.count() != load(spark, sf, "documents").count():
-            return
-        _DOCQ_ART[key] = art
-    except Exception:
-        return
+def _open_docq(spark, sf, path):
+    """A complete docq has exactly one row per document (every doc
+    contributes >= 1 token; a corpus where that fails just stays on the
+    inline plan). Both counts are parquet-footer reads."""
+    art = spark.read.parquet(path)
+    n, n_docs = art.count(), load(spark, sf, "documents").count()
+    if n != n_docs:
+        raise artifacts.Invalid(f"docq has {n} rows for {n_docs} documents")
+    return art
+
+
+artifacts.declare("docq", "documents", "docq", _build_docq, _open_docq)
 
 
 def _docq_rel(spark, sf):
@@ -4556,7 +4354,7 @@ def q_pipeline_curriculum(spark, sf):
     artifact. Stage assignment is then pure scan-stage expression
     work against 7 literals. The score relation comes from the
     at-rest docq artifact when a session has materialized it
-    (materialize_docq — the production posture: the classifier runs
+    (the `docq` artifact — the production posture: the classifier runs
     at ingest, curricula read the ~16 B/doc score sidecar; measured
     17.3 s vs 32.5 s re-derived at sf100, DuckDB 18.4 s); absent the
     artifact the inline chain scores once and persists, feeding both
@@ -4574,11 +4372,11 @@ def q_pipeline_curriculum(spark, sf):
     """
     configure(spark)
     # At-rest scores when a session has materialized them
-    # (materialize_docq — bit-equal by construction since the artifact
+    # (the `docq` artifact — bit-equal by construction since the artifact
     # IS _docq_rel's output; pinned in tests). Fallback: score inline
     # and persist — the relation feeds both the boundary histogram and
     # the staging pass.
-    art = docq_scores(spark, sf)
+    art = artifacts.get(spark, sf, "docq")
     if art is not None:
         docq = art
     else:

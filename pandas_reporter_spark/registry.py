@@ -78,85 +78,76 @@ _OPERATOR_MODULES = (
 #: with a few relational representatives; the relational long tail
 #: (all green in round 2) re-registers after the fold.
 _PRIORITY = (
-    # ---- ROUND-16 ROTATION. Built from tools/staleness.py with the
-    # r15 vintage (70ec21e) added. Audit state at build time: stale =
-    # exactly the five bodies the r15 timeout snapshot (3acf701)
-    # rewrote without scheduling (the r15 verdict's item 1); no
-    # unrecorded queries (optimization round, no new operators).
-    # Slot budget (50):
-    # (1) the five stale bodies — the minhash exact-ratio prefilter
-    #     front (stales q_dedup_minhash/_capped/_containment), the
-    #     spans md5-identity rewrite, and the q18 join reorder;
-    # (2) bodies this optimization round rewrites (appended as they
-    #     land, displacing tail r11 fillers — the staleness test
-    #     enforces the bookkeeping);
-    # (3) the rest burns the r11 cohort (oldest vintage,
-    #     alphabetical); after r16 the oldest remaining vintage is r12
-    #     plus whatever r11 rows the (2) displacements push out.
-    # (1) stale bodies from the r15 snapshot commit
+    # ---- ARTIFACT-LIFECYCLE ROTATION. Built from tools/staleness.py
+    # with the r16 vintage (561822a) added; at that commit the audit
+    # reported 0 stale. Moving every sidecar onto one artifact
+    # lifecycle (pandas_reporter_spark/artifacts.py) rewrote the
+    # artifact lookup in each consumer's closure and the handle
+    # retirement in four more. Slot budget (50):
+    # (1) the 36 queries whose closure changed, grouped by artifact;
+    # (2) the rest burns the oldest vintages: all eight r11 records,
+    #     then the r12 cohort alphabetically.
+    # (1) doc_tokens
+    "q_pipeline_dsir",
+    "q_sketch_cms",
+    "q_sketch_heavy_hitters",
+    "q_text_kl_divergence",
+    "q_text_langid",
+    "q_text_logprob",
+    "q_text_perplexity_bigram",
+    "q_text_quality_classifier",
+    "q_text_tfidf",
+    "q_text_tokens",
+    # (1) token_index
+    "q_search_hybrid_rrf",
+    "q_text_bm25",
+    # (1) bpe_merges / docq
+    "q_text_bpe_apply",
+    "q_pipeline_curriculum",
+    # (1) lsh_signatures
+    "q_dedup_embedding",
+    "q_similarity_ann_lsh",
+    "q_similarity_join",
+    "q_similarity_join_shuffled",
+    # (1) ivf_index / pq_index / srp_codes
+    "q_similarity_ivf",
+    "q_similarity_pq_adc",
+    "q_similarity_srp",
+    # (1) knn_graph
+    "q_dedup_semdedup",
+    "q_similarity_knn_graph",
+    # (1) minhash
+    "q_dedup_containment",
     "q_dedup_minhash",
     "q_dedup_minhash_capped",
-    "q_dedup_containment",
-    "q_dedup_spans",
-    "q_tpch_q18",
-    # (2) bodies rewritten this round (see OPTIMIZATION_r16.md) — each
-    #     displaces a tail r11 filler:
-    #     - document-stream relayout source (displaced q_union_all,
-    #       q_window_lag_lead)
-    "q_stream_quality_gate",
-    "q_stream_sample_weighted",
-    #     - CDC persist handle retirement (ADVICE r15; displaced
-    #       q_topk_per_group, q_topk)
+    "q_dedup_minhash_incremental",
+    "q_sketch_bloom",
+    # (1) graph
+    "q_graph_pagerank",
+    "q_graph_triangles",
+    # (1) wm_stats
+    "q_agg_weighted_median",
+    "q_agg_weighted_median_approx",
+    # (1) per-query handles only (artifacts.hold)
     "q_dedup_substring",
     "q_dedup_substring_removal",
-    #     - overlap-matrix driver-assembly guard + distributed fallback
-    #       (VERDICT r15 item 5; displaced q_str_substr)
-    "q_text_overlap_matrix",
-    #     - file-sink tmpfs dir retirement (displaced q_str_funcs)
+    "q_pipeline_dsir_bigram",
     "q_stream_file_sink",
-    #     - V from the 1-row vocab-stats artifact, fallback unchanged
-    #       (displaced q_sort)
-    "q_text_perplexity_bigram",
-    # (3) r11 cohort burn (oldest vintage, alphabetical; q_dedup_minhash
-    #     is r11 but already holds a stale slot above)
-    "q_agg_approx_countd",
-    "q_agg_distinct",
-    "q_agg_group_sum",
-    "q_agg_multi",
-    "q_agg_percentile",
-    "q_agg_skew_kurt",
-    "q_cube",
-    "q_date_funcs",
-    "q_dedup_keep_first",
-    "q_embed_stats",
-    "q_except",
-    "q_fillna",
-    "q_filter",
-    "q_filter_compound",
-    "q_grouping_sets",
-    "q_having",
-    "q_intersect",
-    "q_join_anti",
-    "q_join_bucketed_atrest",
-    "q_join_cross",
-    "q_join_full",
-    "q_join_inner",
-    "q_join_left",
-    "q_join_range",
-    "q_join_right",
-    "q_join_semi",
-    "q_limit",
-    "q_product_moe",
-    "q_project",
-    "q_project_arith",
-    "q_project_margin_carry",
-    "q_proportion_moe",
-    "q_ratio_moe",
-    "q_rollup",
-    "q_rse",
-    "q_scan_parquet",
-    "q_sketch_hll",
-    "q_text_url_normalize",
+    # (2) r11 cohort, then r12 alphabetical
+    "q_sort",
+    "q_str_funcs",
+    "q_str_substr",
+    "q_topk",
+    "q_topk_per_group",
+    "q_union_all",
+    "q_window_lag_lead",
+    "q_window_running_sum",
+    "q_agg_entropy",
+    "q_dedup_cluster",
+    "q_dedup_exact",
+    "q_dedup_semantic",
+    "q_embed_gram",
+    "q_embed_kmeans",
 )
 
 # Earlier rotations (r2-r6) and their slot-by-slot rationale live in

@@ -1,138 +1,240 @@
-"""The at-rest ingest contract (VERDICT r13 item 4).
+"""The at-rest ingest contract and the artifact lifecycle.
 
-Coverage: every materialize_* function anywhere in the engine must be
-registered in ingest.MATERIALIZERS (or listed in _NON_INGEST with a
-reason) — a sidecar that exists but never primes is dead weight, and
-one that primes outside the contract re-opens the eleven-idiom drift
-this module closed. Behavior: ingest() builds everything on a tiny
-snapshot and the consumers actually see their artifacts.
+Coverage: ``ingest.MATERIALIZERS`` lists every declared artifact, and
+no hand-rolled sidecar cache or handle list survives outside
+``pandas_reporter_spark.artifacts``. Behavior: ingest() builds
+everything on a tiny snapshot and the consumers see their artifacts;
+torn or failing builds are rejected loudly and leave consumers on their
+self-derive plans; every artifact's primed result equals its unprimed
+one; per-query handles retire only their own query's predecessor.
 """
 
 from __future__ import annotations
 
-import importlib
-import inspect
-import pkgutil
+import dataclasses
+import hashlib
+import os
+import re
+import shutil
+import sys
 
-import pandas_reporter_spark.operators as ops_pkg
+import pytest
+
+from pandas_reporter_spark import artifacts
 from pandas_reporter_spark import ingest as ing
+from pandas_reporter_spark.registry import QUERIES, load_all
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+
+from verify_local import frame_key  # noqa: E402
+
+ENGINE = os.path.join(os.path.dirname(__file__), "..", "pandas_reporter_spark")
+#: the shared read-only sf0.001 snapshot (TESTDATA.md)
+SF = "/root/testdata/sf0.001"
+
+#: one representative consumer query per artifact
+CONSUMER = {
+    "doc_tokens": "q_text_tfidf",
+    "token_index": "q_text_bm25",
+    "bpe_merges": "q_text_bpe_apply",
+    "docq": "q_pipeline_curriculum",
+    "lsh_signatures": "q_similarity_ann_lsh",
+    "ivf_index": "q_similarity_ivf",
+    "pq_index": "q_similarity_pq_adc",
+    "srp_codes": "q_similarity_srp",
+    "knn_graph": "q_similarity_knn_graph",
+    "minhash": "q_dedup_minhash",
+    "graph": "q_graph_pagerank",
+    "wm_stats": "q_agg_weighted_median",
+    "vocab_stats": "q_text_perplexity_bigram",
+}
 
 
-def _engine_materializers():
-    found = {}
-    mods = [
-        importlib.import_module(f"{ops_pkg.__name__}.{m.name}")
-        for m in pkgutil.iter_modules(ops_pkg.__path__)
-    ]
-    mods.append(importlib.import_module("pandas_reporter_spark.sources.queries"))
-    for mod in mods:
-        for name, fn in inspect.getmembers(mod, inspect.isfunction):
-            if name.startswith("materialize_") and fn.__module__ == mod.__name__:
-                found[f"{mod.__name__}.{name}"] = fn
-    return found
+def _private_sf(factory, name):
+    """A private copy of sf0.001: priming the canonical path would flip
+    other tests' plan-shape pins (artifact-primed plans legitimately
+    drop the tokenize explode) for the rest of the shared session."""
+    sf = str(factory.mktemp(name))
+    shutil.rmtree(sf)
+    shutil.copytree(SF, sf)
+    return sf
 
 
-def test_every_materializer_is_in_the_contract():
-    registered = set()
-    for build, _ in ing.MATERIALIZERS.values():
-        # _m closures carry (modname, fn) in their cell contents
-        cells = {
-            k: v.cell_contents
-            for k, v in zip(build.__code__.co_freevars, build.__closure__)
-        }
-        registered.add(f"{cells['modname']}.{cells['fn']}")
-    missing = [
-        qual
-        for qual in _engine_materializers()
-        if qual not in registered
-        and qual.rsplit(".", 1)[1] not in ing._NON_INGEST
-    ]
-    assert not missing, (
-        f"materializers outside the ingest contract (register in "
-        f"MATERIALIZERS or document in _NON_INGEST): {missing}"
+def _result(spark, sf, q):
+    df = QUERIES[q](spark, sf)
+    rows = [tuple(r) for r in df.collect()]
+    digest = hashlib.md5(frame_key(df.columns, rows).encode()).hexdigest()
+    return len(rows), digest
+
+
+def test_materializers_list_every_declared_artifact():
+    load_all()
+    assert len(set(ing.MATERIALIZERS)) == len(ing.MATERIALIZERS)
+    assert set(ing.MATERIALIZERS) == set(artifacts.DECLARED)
+    assert set(CONSUMER) == set(artifacts.DECLARED)
+    # vocab_stats derives from doc_tokens when that is primed
+    order = list(ing.MATERIALIZERS)
+    assert order.index("doc_tokens") < order.index("vocab_stats")
+
+
+def test_no_hand_rolled_sidecar_caches_or_handle_lists():
+    pat = re.compile(
+        r"^\s*(_\w+_ART|_\w+_HANDLES)\s*[:=]|^\s*def materialize_\w+", re.M
     )
+    found = []
+    for d, _, files in os.walk(ENGINE):
+        for f in files:
+            if f.endswith(".py"):
+                p = os.path.join(d, f)
+                found += [f"{p}: {m.group(0).strip()}" for m in pat.finditer(open(p).read())]
+    assert not found, found
 
 
 def test_ingest_builds_and_primes_consumers(spark, tmp_path_factory):
-    # a PRIVATE copy of the snapshot: priming the canonical sf0.001
-    # path would flip other tests' plan-shape pins (artifact-primed
-    # plans legitimately drop the tokenize explode) for the rest of
-    # the shared session
-    import shutil
-
-    sf = str(tmp_path_factory.mktemp("ingest_sf"))
-    shutil.rmtree(sf)
-    shutil.copytree("/root/testdata/sf0.001", sf)
+    sf = _private_sf(tmp_path_factory, "ingest_sf")
     report = ing.ingest(spark, sf)
-    assert set(report) == set(ing.MATERIALIZERS)
+    assert list(report) == list(ing.MATERIALIZERS)
     failed = [n for n, r in report.items() if not r["ok"]]
-    assert not failed, failed
+    assert not failed, {n: report[n]["reason"] for n in failed}
     # ok means "didn't raise"; primed means "the consumer will actually
     # read the sidecar" (ADVICE r14) — on a clean build both hold
     unprimed = [n for n, r in report.items() if not r["primed"]]
-    assert not unprimed, unprimed
-    # spot-check three consumer-visible artifacts
-    from pandas_reporter_spark.operators.similarity import srp_codes_at_rest
-    from pandas_reporter_spark.operators.text import bpe_merges, docq_scores
-
-    assert bpe_merges(spark, sf) is not None
-    assert docq_scores(spark, sf) is not None
-    assert srp_codes_at_rest(spark, sf, 256) is not None
-    # idempotent: second call is a fast no-op for already-cached keys
+    assert not unprimed, {n: report[n]["reason"] for n in unprimed}
+    assert all(r["reason"] is None for r in report.values())
+    for name in ("bpe_merges", "docq", "srp_codes"):
+        assert artifacts.get(spark, sf, name) is not None
+    # idempotent: second call is a fast no-op for already-registered keys
     report2 = ing.ingest(spark, sf)
-    assert all(r["ok"] for r in report2.values())
+    assert all(r["ok"] and r["primed"] for r in report2.values())
 
 
-def test_torn_artifact_is_rejected_not_cached(spark, tmp_path_factory):
-    """The r14 validate-before-cache guard (ADVICE r13): a torn
-    artifact — fewer rows than the source table, as a concurrent
-    mode('overwrite') can expose — must be rejected (consumer stays on
-    its inline plan) and a subsequent rebuild must prime normally."""
-    import os
-    import shutil
-
+def test_torn_artifact_is_rejected_not_cached(
+    spark, tmp_path_factory, monkeypatch
+):
+    """The validate-before-register guard (ADVICE r13): a torn artifact
+    — fewer rows than the source table, as a concurrent overwrite can
+    expose — must be rejected (consumer stays on its inline plan), a
+    build that raises must be contained and reported, and a subsequent
+    clean rebuild must prime normally."""
     from pandas_reporter_spark.operators import similarity as S
     from pandas_reporter_spark.operators import text as T
+    from pandas_reporter_spark.tables import load
 
-    sf = str(tmp_path_factory.mktemp("torn_sf"))
-    shutil.rmtree(sf)
-    shutil.copytree("/root/testdata/sf0.001", sf)
+    sf = _private_sf(tmp_path_factory, "torn_sf")
     base = str(tmp_path_factory.mktemp("torn_base"))
+    unprimed = _result(spark, sf, "q_pipeline_curriculum")
 
     tag = int(os.path.getmtime(os.path.join(sf, "documents.parquet")))
     torn = os.path.join(
         base, f"prs_docq_{os.path.basename(os.path.normpath(sf))}_{tag}"
     )
+    assert artifacts.path(spark, sf, "docq", base) == torn
     # a torn docq: half the docs, but structurally valid parquet with
     # a _SUCCESS marker — indistinguishable from complete without the
     # count check
     T._docq_rel(spark, sf).limit(250).write.mode("overwrite").parquet(torn)
     assert os.path.exists(os.path.join(torn, "_SUCCESS"))
-    T.materialize_docq(spark, sf, base=base)
-    assert T.docq_scores(spark, sf) is None, "torn docq was cached"
-    # the ingest report's primed probe sees through the clean return
-    # (ADVICE r14: ok=True alone would claim the sidecar is live)
-    assert ing._primed(spark, sf, "docq") is False
+    rep = artifacts.build(spark, sf, "docq", base=base)
+    assert artifacts.get(spark, sf, "docq") is None, "torn docq was cached"
+    # the report sees through the clean return (ADVICE r14: ok=True
+    # alone would claim the sidecar is live) and says why
+    assert rep["ok"] is True and rep["primed"] is False
+    assert rep["reason"].startswith("rejected: docq has 250 rows")
 
     # same for the SRP codes
     etag = int(os.path.getmtime(os.path.join(sf, "embeddings.parquet")))
     storn = os.path.join(
         base, f"prs_srp256_{os.path.basename(os.path.normpath(sf))}_{etag}"
     )
-    from pandas_reporter_spark.tables import load
-
     S.srp_codes(load(spark, sf, "embeddings").limit(100), 256).write.mode(
         "overwrite"
     ).parquet(storn)
-    S.materialize_srp_codes(spark, sf, base=base)
-    assert S.srp_codes_at_rest(spark, sf, 256) is None, "torn codes cached"
+    rep = artifacts.build(spark, sf, "srp_codes", base=base)
+    assert artifacts.get(spark, sf, "srp_codes") is None, "torn codes cached"
+    assert rep["primed"] is False and rep["reason"].startswith("rejected:")
 
-    # rebuild from scratch -> both prime
+    # a build that raises: contained, reported, consumer unchanged
+    def boom(spark, sf, path):
+        os.makedirs(os.path.join(path, "partial"))
+        raise RuntimeError("disk full")
+
     shutil.rmtree(torn)
+    monkeypatch.setitem(
+        artifacts.DECLARED, "docq",
+        dataclasses.replace(artifacts.DECLARED["docq"], build=boom),
+    )
+    rep = artifacts.build(spark, sf, "docq", base=base)
+    assert rep["ok"] is False and rep["primed"] is False
+    assert rep["reason"] == "RuntimeError: disk full"
+    assert artifacts.get(spark, sf, "docq") is None
+    assert not os.path.exists(torn)
+    assert not [d for d in os.listdir(base) if ".build-" in d], "build dir leaked"
+    assert _result(spark, sf, "q_pipeline_curriculum") == unprimed
+    monkeypatch.undo()
+
+    # rebuild from scratch -> both prime; a directory without _SUCCESS
+    # (a crashed writer, or an older layout) is replaced by the commit
     shutil.rmtree(storn)
-    T.materialize_docq(spark, sf, base=base)
-    S.materialize_srp_codes(spark, sf, base=base)
-    assert T.docq_scores(spark, sf) is not None
-    assert S.srp_codes_at_rest(spark, sf, 256) is not None
-    assert ing._primed(spark, sf, "docq") is True
-    assert ing._primed(spark, sf, "srp_codes") is True
+    os.makedirs(os.path.join(torn, "stale"))
+    assert artifacts.build(spark, sf, "docq", base=base)["primed"] is True
+    assert not os.path.exists(os.path.join(torn, "stale"))
+    assert artifacts.build(spark, sf, "srp_codes", base=base)["primed"] is True
+    assert artifacts.get(spark, sf, "docq") is not None
+    assert artifacts.get(spark, sf, "srp_codes") is not None
+    assert _result(spark, sf, "q_pipeline_curriculum") == unprimed
+
+
+@pytest.fixture(scope="module")
+def equality_sf(tmp_path_factory):
+    return (
+        _private_sf(tmp_path_factory, "equality_sf"),
+        str(tmp_path_factory.mktemp("equality_base")),
+    )
+
+
+@pytest.mark.parametrize("name", ing.MATERIALIZERS)
+def test_primed_equals_unprimed(spark, equality_sf, name):
+    """Every artifact is invisible to results: its representative
+    consumer returns the same row count and order-insensitive value
+    hash with the artifact registered and with it dropped."""
+    sf, base = equality_sf
+    rep = artifacts.build(spark, sf, name, base=base)
+    assert rep["primed"], rep["reason"]
+    try:
+        primed = _result(spark, sf, CONSUMER[name])
+    finally:
+        artifacts.drop(spark, sf, name)
+    assert primed[0] > 0
+    assert _result(spark, sf, CONSUMER[name]) == primed
+
+
+@pytest.mark.parametrize(
+    "first,second",
+    [
+        ("q_dedup_substring", "q_dedup_substring_removal"),
+        ("q_pipeline_dsir", "q_pipeline_dsir_bigram"),
+    ],
+)
+def test_held_handles_are_per_query(spark, first, second):
+    """A query's persisted frame survives another query's call (the two
+    used to share one handle list) and is retired by its own next call."""
+    load_all()
+    QUERIES[first](spark, SF)
+    held = artifacts._HELD[first]
+    QUERIES[second](spark, SF)
+    assert held.is_cached, f"{second} retired {first}'s live cache"
+    QUERIES[first](spark, SF)
+    assert not held.is_cached
+    assert artifacts._HELD[first].is_cached
+
+
+def test_sink_dir_outlives_its_call_and_is_retired_by_the_next(spark):
+    """q_stream_file_sink's returned frame reads its output dir lazily,
+    so the dir must survive the call and go on the query's next call."""
+    load_all()
+    first = QUERIES["q_stream_file_sink"](spark, SF)
+    held = artifacts._HELD["q_stream_file_sink"]
+    assert first.count() > 0 and os.path.isdir(held)
+    QUERIES["q_stream_file_sink"](spark, SF).count()
+    assert not os.path.exists(held)
+    assert os.path.isdir(artifacts._HELD["q_stream_file_sink"])

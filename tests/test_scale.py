@@ -9,6 +9,7 @@ from __future__ import annotations
 import io
 import contextlib
 
+from pandas_reporter_spark import artifacts
 from pandas_reporter_spark.operators.scale import (
     q_join_bucketed,
     q_join_salted,
@@ -667,17 +668,14 @@ def test_pq_artifact_path_scans_codes_not_vectors(spark, tmp_path):
     """The at-rest PQ query's corpus-scale input must be the CODES
     table; the only embeddings access is the pushed-down vec_id
     point lookup for the query vector."""
-    from pandas_reporter_spark.operators import similarity as S
     from pandas_reporter_spark.registry import QUERIES, load_all
-    from pandas_reporter_spark.tables import _session_key
 
     load_all()
     sf = "/root/testdata/sf0.001"
-    key = (_session_key(spark), sf)
-    S._PQ_ART.pop(key, None)
-    S.materialize_pq_index(spark, sf, base=str(tmp_path))
+    artifacts.drop(spark, sf, "pq_index")
+    artifacts.build(spark, sf, "pq_index", base=str(tmp_path))
     try:
-        assert S.pq_index(spark, sf) is not None
+        assert artifacts.get(spark, sf, "pq_index") is not None
         p = plan_of(QUERIES["q_similarity_pq_adc"](spark, sf))
         # the codes artifact is a scanned input
         assert "codes" in p
@@ -687,4 +685,4 @@ def test_pq_artifact_path_scans_codes_not_vectors(spark, tmp_path):
             if "Scan parquet" in blk and "embeddings.parquet" in blk:
                 assert "EqualTo(vec_id,0)" in blk, blk
     finally:
-        S._PQ_ART.pop(key, None)
+        artifacts.drop(spark, sf, "pq_index")

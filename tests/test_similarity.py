@@ -22,6 +22,7 @@ from pandas_reporter_spark.operators.similarity import (
     lsh_signatures,
     plane_signs,
 )
+from pandas_reporter_spark import artifacts
 from pandas_reporter_spark.registry import QUERIES, load_all
 
 load_all()
@@ -286,26 +287,23 @@ def test_pq_index_artifact_path_matches_fresh(spark, tmp_path):
     riding a materialized codes+codebook artifact must return
     BIT-IDENTICAL rows to the fresh train+encode path (deterministic
     vec_id-prefix training, integer Lloyd, argmin tie-break)."""
-    from pandas_reporter_spark.operators import similarity as S
-    from pandas_reporter_spark.tables import _session_key
 
     load_all()
     sf = "/root/testdata/sf0.001"
-    key = (_session_key(spark), sf)
-    S._PQ_ART.pop(key, None)
+    artifacts.drop(spark, sf, "pq_index")
     fresh = [
         tuple(r)
         for r in QUERIES["q_similarity_pq_adc"](spark, sf).collect()
     ]
-    S.materialize_pq_index(spark, sf, base=str(tmp_path))
+    artifacts.build(spark, sf, "pq_index", base=str(tmp_path))
     try:
-        assert S.pq_index(spark, sf) is not None, "artifact did not build"
+        assert artifacts.get(spark, sf, "pq_index") is not None, "artifact did not build"
         art = [
             tuple(r)
             for r in QUERIES["q_similarity_pq_adc"](spark, sf).collect()
         ]
     finally:
-        S._PQ_ART.pop(key, None)
+        artifacts.drop(spark, sf, "pq_index")
     assert art == fresh
 
 
@@ -313,20 +311,17 @@ def test_ivf_index_artifact_path_matches_fresh(spark, tmp_path):
     """At-rest IVF (round 12): q_similarity_ivf riding the persisted
     centroids + cell-partitioned corpus must return BIT-IDENTICAL rows
     to the fresh path (deterministic integer-mean centroids)."""
-    from pandas_reporter_spark.operators import similarity as S
-    from pandas_reporter_spark.tables import _session_key
 
     load_all()
     sf = "/root/testdata/sf0.001"
-    key = (_session_key(spark), sf)
-    S._IVF_ART.pop(key, None)
+    artifacts.drop(spark, sf, "ivf_index")
     fresh = [
         tuple(r)
         for r in QUERIES["q_similarity_ivf"](spark, sf).collect()
     ]
-    S.materialize_ivf_index(spark, sf, base=str(tmp_path))
+    artifacts.build(spark, sf, "ivf_index", base=str(tmp_path))
     try:
-        assert S.ivf_index(spark, sf) is not None, "artifact did not build"
+        assert artifacts.get(spark, sf, "ivf_index") is not None, "artifact did not build"
         art_df = QUERIES["q_similarity_ivf"](spark, sf)
         # the probe must be a partition-pruned scan of the cell layout
         import io, contextlib
@@ -337,7 +332,7 @@ def test_ivf_index_artifact_path_matches_fresh(spark, tmp_path):
         assert "PartitionFilters" in buf.getvalue()
         art = [tuple(r) for r in art_df.collect()]
     finally:
-        S._IVF_ART.pop(key, None)
+        artifacts.drop(spark, sf, "ivf_index")
     assert art == fresh
 
 
@@ -348,15 +343,12 @@ def test_index_artifacts_idempotent_and_stale_tagged(spark, tmp_path):
     directory instead of silently serving stale codes."""
     import os
 
-    from pandas_reporter_spark.operators import similarity as S
-    from pandas_reporter_spark.tables import _session_key
 
     sf = "/root/testdata/sf0.001"
-    key = (_session_key(spark), sf)
-    for pop in (S._PQ_ART, S._IVF_ART):
-        pop.pop(key, None)
-    S.materialize_pq_index(spark, sf, base=str(tmp_path))
-    S.materialize_ivf_index(spark, sf, base=str(tmp_path))
+    for name in ("pq_index", "ivf_index"):
+        artifacts.drop(spark, sf, name)
+    artifacts.build(spark, sf, "pq_index", base=str(tmp_path))
+    artifacts.build(spark, sf, "ivf_index", base=str(tmp_path))
     dirs = sorted(os.listdir(tmp_path))
     assert any(d.startswith("prs_pqindex_") for d in dirs)
     assert any(d.startswith("prs_ivfindex_") for d in dirs)
@@ -370,16 +362,16 @@ def test_index_artifacts_idempotent_and_stale_tagged(spark, tmp_path):
     }
     # drop the in-memory handles; re-materialize must REGISTER the
     # existing files, not rebuild them
-    for pop in (S._PQ_ART, S._IVF_ART):
-        pop.pop(key, None)
-    S.materialize_pq_index(spark, sf, base=str(tmp_path))
-    S.materialize_ivf_index(spark, sf, base=str(tmp_path))
-    assert S.pq_index(spark, sf) is not None
-    assert S.ivf_index(spark, sf) is not None
+    for name in ("pq_index", "ivf_index"):
+        artifacts.drop(spark, sf, name)
+    artifacts.build(spark, sf, "pq_index", base=str(tmp_path))
+    artifacts.build(spark, sf, "ivf_index", base=str(tmp_path))
+    assert artifacts.get(spark, sf, "pq_index") is not None
+    assert artifacts.get(spark, sf, "ivf_index") is not None
     for d in dirs:
         assert os.path.getmtime(os.path.join(tmp_path, d)) == mtimes[d]
-    for pop in (S._PQ_ART, S._IVF_ART):
-        pop.pop(key, None)
+    for name in ("pq_index", "ivf_index"):
+        artifacts.drop(spark, sf, name)
 
 
 def test_hamming_identical_and_negated_vectors(spark, tmp_path):
@@ -413,7 +405,6 @@ def test_srp_codes_identity_negation_and_at_rest_path(spark, tmp_path):
     bits); the at-rest artifact path returns the identical ranking
     (bit-equal by construction)."""
     from pandas_reporter_spark.operators import similarity as S
-    from pandas_reporter_spark.tables import _session_key
 
     base = _base_vec(7)
     rows = [
@@ -431,18 +422,17 @@ def test_srp_codes_identity_negation_and_at_rest_path(spark, tmp_path):
     assert got[0]["vec_id"] == 1 and by_id[1] == 0
     assert by_id[2] == 256  # dot flips sign on every plane
     assert 0 < by_id[3] < 256
-    key = (_session_key(spark), sf, 256)
-    S._SRP_ART.pop(key, None)
-    S.materialize_srp_codes(spark, sf, 256, base=str(tmp_path / "art"))
+    artifacts.drop(spark, sf, "srp_codes")
+    artifacts.build(spark, sf, "srp_codes", base=str(tmp_path / "art"))
     # base dir doesn't exist -> no artifact; create and retry
     import os
 
     os.makedirs(str(tmp_path / "art"), exist_ok=True)
-    S.materialize_srp_codes(spark, sf, 256, base=str(tmp_path / "art"))
-    assert S.srp_codes_at_rest(spark, sf, 256) is not None
+    artifacts.build(spark, sf, "srp_codes", base=str(tmp_path / "art"))
+    assert artifacts.get(spark, sf, "srp_codes") is not None
     at_rest = S.srp_hamming_topk(spark, sf, 256).collect()
     assert [tuple(r) for r in at_rest] == [tuple(r) for r in got]
-    S._SRP_ART.pop(key, None)
+    artifacts.drop(spark, sf, "srp_codes")
 
 
 def test_random_projection_identical_vector_is_rank_one(spark):
@@ -705,7 +695,7 @@ def test_topk_batch_contains_single_query_answer_and_forms_agree(spark):
 
 
 def test_knn_graph_artifact_bit_equals_fresh_plan(spark, tmp_path_factory):
-    """materialize_knn_graph -> the consumer rides the artifact and its
+    """The knn_graph artifact -> the consumer rides the artifact and its
     rows are BIT-equal to the fresh in-plan derivation (the artifact IS
     the plan's output); torn artifacts (wrong row count) are rejected,
     leaving the consumer on the fresh path."""
@@ -721,7 +711,7 @@ def test_knn_graph_artifact_bit_equals_fresh_plan(spark, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("knn_base"))
 
     fresh = {tuple(r) for r in QUERIES["q_similarity_knn_graph"](spark, sf).collect()}
-    assert S.knn_graph_at_rest(spark, sf) is None
+    assert artifacts.get(spark, sf, "knn_graph") is None
 
     # torn artifact: half the rows, structurally valid, _SUCCESS present
     tag = int(os.path.getmtime(os.path.join(sf, "embeddings.parquet")))
@@ -730,12 +720,12 @@ def test_knn_graph_artifact_bit_equals_fresh_plan(spark, tmp_path_factory):
     )
     full = S._knn_graph_rel(spark, sf)
     full.limit(full.count() // 2).write.mode("overwrite").parquet(out)
-    S.materialize_knn_graph(spark, sf, base=base)
-    assert S.knn_graph_at_rest(spark, sf) is None, "torn graph was cached"
+    artifacts.build(spark, sf, "knn_graph", base=base)
+    assert artifacts.get(spark, sf, "knn_graph") is None, "torn graph was cached"
 
     shutil.rmtree(out)
-    S.materialize_knn_graph(spark, sf, base=base)
-    assert S.knn_graph_at_rest(spark, sf) is not None
+    artifacts.build(spark, sf, "knn_graph", base=base)
+    assert artifacts.get(spark, sf, "knn_graph") is not None
     primed = {tuple(r) for r in QUERIES["q_similarity_knn_graph"](spark, sf).collect()}
     assert primed == fresh and primed
     # every vector in a >=2 cell appears, ranks dense from 1

@@ -11,6 +11,7 @@ import os
 
 import pytest
 
+from pandas_reporter_spark import artifacts
 from pandas_reporter_spark.registry import QUERIES, load_all
 
 load_all()
@@ -98,8 +99,6 @@ def test_doc_token_tf_artifact_is_result_invariant(spark, tmp_path):
     """The shared tokenize artifact must be invisible to results: every
     consumer query returns byte-identical rows whether it starts from
     the materialized (doc, token, tf) relation or its standalone plan."""
-    from pandas_reporter_spark.operators import text as T
-    from pandas_reporter_spark.tables import _session_key
 
     sf = "/root/testdata/sf0.001"
     consumers = (
@@ -113,20 +112,19 @@ def test_doc_token_tf_artifact_is_result_invariant(spark, tmp_path):
     )
     from pandas_reporter_spark.registry import QUERIES
 
-    key = (_session_key(spark), sf)
-    T._TF_ART.pop(key, None)
+    artifacts.drop(spark, sf, "doc_tokens")
     base = {
         q: sorted(map(tuple, QUERIES[q](spark, sf).collect()))
         for q in consumers
     }
     try:
-        T.materialize_doc_tokens(spark, sf, base=str(tmp_path))
-        assert T.doc_token_tf(spark, sf) is not None
+        artifacts.build(spark, sf, "doc_tokens", base=str(tmp_path))
+        assert artifacts.get(spark, sf, "doc_tokens") is not None
         for q in consumers:
             got = sorted(map(tuple, QUERIES[q](spark, sf).collect()))
             assert got == base[q], f"{q} diverged on the artifact path"
     finally:
-        T._TF_ART.pop(key, None)
+        artifacts.drop(spark, sf, "doc_tokens")
 
 
 def test_canonicalize_url_edge_cases(spark):
@@ -205,22 +203,19 @@ def test_token_index_probe_is_result_invariant_and_pruned(spark, tmp_path):
     import io
     import contextlib
 
-    from pandas_reporter_spark.operators import text as T
     from pandas_reporter_spark.registry import QUERIES, load_all
-    from pandas_reporter_spark.tables import _session_key
 
     load_all()
     sf = "/root/testdata/sf0.001"
     consumers = ("q_text_bm25", "q_search_hybrid_rrf")
-    key = (_session_key(spark), sf)
-    T._TOKIDX_ART.pop(key, None)
+    artifacts.drop(spark, sf, "token_index")
     base = {
         q: sorted(map(tuple, QUERIES[q](spark, sf).collect()))
         for q in consumers
     }
     try:
-        T.materialize_token_index(spark, sf, base=str(tmp_path))
-        assert T.token_index(spark, sf) is not None
+        artifacts.build(spark, sf, "token_index", base=str(tmp_path))
+        assert artifacts.get(spark, sf, "token_index") is not None
         for q in consumers:
             got = sorted(map(tuple, QUERIES[q](spark, sf).collect()))
             assert got == base[q], f"{q} diverged on the index path"
@@ -235,7 +230,7 @@ def test_token_index_probe_is_result_invariant_and_pruned(spark, tmp_path):
             "the probe path still scans documents.text"
         )
     finally:
-        T._TOKIDX_ART.pop(key, None)
+        artifacts.drop(spark, sf, "token_index")
 
 
 def _scanned_columns(plan: str) -> set[str]:
@@ -604,20 +599,17 @@ def test_bpe_property_random_corpora_match_python_reference(spark, tmp_path):
 def test_bpe_artifact_path_is_bit_equal(spark, tmp_path):
     """apply via the at-rest trained-merges artifact == the
     self-training path, and the artifact equals the train query."""
-    from pandas_reporter_spark.operators import text as T
-    from pandas_reporter_spark.tables import _session_key
 
     sf = "/root/testdata/sf0.001"
-    key = (_session_key(spark), sf)
-    T._BPE_ART.pop(key, None)
+    artifacts.drop(spark, sf, "bpe_merges")
     fresh = sorted(tuple(r) for r in QUERIES["q_text_bpe_apply"](spark, sf).collect())
-    T.materialize_bpe_merges(spark, sf, base=str(tmp_path))
-    assert T.bpe_merges(spark, sf) is not None
+    artifacts.build(spark, sf, "bpe_merges", base=str(tmp_path))
+    assert artifacts.get(spark, sf, "bpe_merges") is not None
     train = [tuple(r) for r in QUERIES["q_text_bpe_train"](spark, sf).collect()]
-    assert T.bpe_merges(spark, sf) == train
+    assert artifacts.get(spark, sf, "bpe_merges") == train
     via_art = sorted(tuple(r) for r in QUERIES["q_text_bpe_apply"](spark, sf).collect())
     assert via_art == fresh
-    T._BPE_ART.pop(key, None)
+    artifacts.drop(spark, sf, "bpe_merges")
 
 
 def test_bpe_local_loop_matches_distributed(spark):
@@ -639,21 +631,19 @@ def test_bpe_artifact_rejects_torn_read(spark, tmp_path):
     import os
 
     from pandas_reporter_spark.operators import text as T
-    from pandas_reporter_spark.tables import _session_key
 
     sf = "/root/testdata/sf0.001"
-    key = (_session_key(spark), sf)
     src_tag = int(os.path.getmtime(os.path.join(sf, "documents.parquet")))
     out = os.path.join(str(tmp_path), f"prs_bpe_sf0.001_{src_tag}")
     for rows in ([], [(1, "a", "b", 3, "ab"), (2, "c", "d", 2, "cd")]):
-        T._BPE_ART.pop(key, None)
+        artifacts.drop(spark, sf, "bpe_merges")
         spark.createDataFrame(
             rows,
             "round int, lhs string, rhs string, pair_count bigint,"
             " merged string",
         ).coalesce(1).write.mode("overwrite").parquet(out)
-        T.materialize_bpe_merges(spark, sf, base=str(tmp_path))
-        assert T.bpe_merges(spark, sf) is None, rows
+        artifacts.build(spark, sf, "bpe_merges", base=str(tmp_path))
+        assert artifacts.get(spark, sf, "bpe_merges") is None, rows
     # a complete artifact (rounds exactly 1..k) IS accepted
     full = [(i + 1, f"l{i}", f"r{i}", 9 - i, f"l{i}r{i}")
             for i in range(T._BPE_MERGES)]
@@ -661,30 +651,27 @@ def test_bpe_artifact_rejects_torn_read(spark, tmp_path):
         full,
         "round int, lhs string, rhs string, pair_count bigint, merged string",
     ).coalesce(1).write.mode("overwrite").parquet(out)
-    T.materialize_bpe_merges(spark, sf, base=str(tmp_path))
-    assert T.bpe_merges(spark, sf) == full
-    T._BPE_ART.pop(key, None)
+    artifacts.build(spark, sf, "bpe_merges", base=str(tmp_path))
+    assert artifacts.get(spark, sf, "bpe_merges") == full
+    artifacts.drop(spark, sf, "bpe_merges")
 
 
 def test_curriculum_artifact_path_is_bit_equal(spark, tmp_path):
     """curriculum via the at-rest docq score sidecar == the inline
     self-scoring path (the BM25 artifact discipline)."""
-    from pandas_reporter_spark.operators import text as T
-    from pandas_reporter_spark.tables import _session_key
 
     sf = "/root/testdata/sf0.001"
-    key = (_session_key(spark), sf)
-    T._DOCQ_ART.pop(key, None)
+    artifacts.drop(spark, sf, "docq")
     fresh = sorted(
         tuple(r) for r in QUERIES["q_pipeline_curriculum"](spark, sf).collect()
     )
-    T.materialize_docq(spark, sf, base=str(tmp_path))
-    assert T.docq_scores(spark, sf) is not None
+    artifacts.build(spark, sf, "docq", base=str(tmp_path))
+    assert artifacts.get(spark, sf, "docq") is not None
     via_art = sorted(
         tuple(r) for r in QUERIES["q_pipeline_curriculum"](spark, sf).collect()
     )
     assert via_art == fresh
-    T._DOCQ_ART.pop(key, None)
+    artifacts.drop(spark, sf, "docq")
 
 
 def test_curriculum_octiles_are_balanced_and_ordered(spark):

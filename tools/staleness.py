@@ -56,6 +56,7 @@ RECORD_COMMITS = {
     13: "0d9b6f0",
     14: "04b1608",
     15: "70ec21e",
+    16: "561822a",
 }
 
 #: Modules that register queries (mirrors registry._OPERATOR_MODULES).
