@@ -19,17 +19,21 @@ artifact shares one lifecycle, implemented once here:
    self-derive, so a failure costs speed, never correctness.
 
 Each sidecar module calls ``declare`` once with its name, source
-table, directory name and ``build``/``open`` functions. Consumers call
+table, directory name and ``build``/``open`` functions, plus ``after``
+when its build reads another artifact (``ingest`` starts it only once
+those are registered or have failed). Consumers call
 ``get(spark, sf, name)``: a dict lookup, no filesystem access and no
 Spark job on the query path.
 
 ``hold`` is the per-query twin for in-session handles (persisted
 frames, tmpfs sink dirs) that must outlive the call that returns a
-lazy plan: each query's next call retires its own previous handle.
+lazy plan: each query's next call retires its own previous handle, and
+interpreter exit retires the last ones.
 """
 
 from __future__ import annotations
 
+import atexit
 import logging
 import os
 import shutil
@@ -75,6 +79,8 @@ class Artifact:
     open: Callable = _read
     #: (spark, sf) -> str appended to the path (geometry tags)
     suffix: Callable | None = None
+    #: artifacts whose registration `build` reads when present
+    after: tuple[str, ...] = ()
 
 
 #: name -> declaration (filled at operator-module import)
@@ -85,8 +91,10 @@ _REGISTERED: dict[tuple, object] = {}
 _HELD: dict[str, object] = {}
 
 
-def declare(name, source, kind, build, open=_read, suffix=None) -> None:
-    DECLARED[name] = Artifact(name, source, kind, build, open, suffix)
+def declare(
+    name, source, kind, build, open=_read, suffix=None, after=()
+) -> None:
+    DECLARED[name] = Artifact(name, source, kind, build, open, suffix, after)
 
 
 def get(spark, sf: str, name: str):
@@ -158,18 +166,30 @@ def build(spark, sf: str, name: str, base: str = "/dev/shm") -> dict:
     }
 
 
-def hold(query: str, handle):
-    """Keep `handle` alive until `query`'s next call, retiring the
-    handle that call's predecessor left: a persisted DataFrame is
-    unpersisted, a str is a directory and is removed. Keyed by query,
-    so one query never retires another's live handle."""
-    prev = _HELD.pop(query, None)
-    if isinstance(prev, str):
-        shutil.rmtree(prev, ignore_errors=True)
-    elif prev is not None:
+def _retire(handle) -> None:
+    """A persisted DataFrame is unpersisted, a str is a directory and
+    is removed."""
+    if isinstance(handle, str):
+        shutil.rmtree(handle, ignore_errors=True)
+    elif handle is not None:
         try:
-            prev.unpersist()
+            handle.unpersist()
         except Py4JError:  # its session is already stopped
             pass
+
+
+def hold(query: str, handle):
+    """Keep `handle` alive until `query`'s next call, retiring the
+    handle that call's predecessor left. Keyed by query, so one query
+    never retires another's live handle."""
+    _retire(_HELD.pop(query, None))
     _HELD[query] = handle
     return handle
+
+
+@atexit.register
+def _retire_held() -> None:
+    """Retire every held handle: no query calls again after this, so
+    the last tmpfs dirs would otherwise outlive the process."""
+    while _HELD:
+        _retire(_HELD.popitem()[1])

@@ -627,17 +627,11 @@ def _mh_shingles_candidates(docs, id_col="doc_id", spark=None, sf=None,
     pair stream was measured instead and REJECTED (+0.2 s at sf10:
     two extra pair-stream joins cost more than the 38% verify cut).
     None (the capped/candidates path) keeps the oracle-pinned
-    unfiltered candidate semantics."""
+    unfiltered candidate semantics. With ``bucket_cap`` too, the cap
+    drops hot buckets first and the ratio filters the pairs of the
+    rest."""
     from pyspark import StorageLevel
 
-    if bucket_cap is not None and size_ratio is not None:
-        # no current caller passes both, but minhash_pairs forwards
-        # both parameters — losing the hot-bucket guard silently would
-        # be a scale hazard (ADVICE r15)
-        raise ValueError(
-            "bucket_cap with size_ratio is not implemented: the capped "
-            "path keeps the oracle-pinned unfiltered candidate semantics"
-        )
     art = None
     if spark is not None and sf is not None:
         art = artifacts.get(spark, sf, "minhash")
@@ -656,39 +650,16 @@ def _mh_shingles_candidates(docs, id_col="doc_id", spark=None, sf=None,
     # the all-empty-docs mega-bucket out of the pair explosion (its
     # pairs previously died at the jaccard verify, but only after
     # being generated).
+    live = bands.filter(F.col("sig").isNotNull())
     if size_ratio is not None:
-        sz = d.select("doc_id", F.size("hs").alias("sz"))
-        pa, pb = F.col("pa"), F.col("pb")
-        buckets = (
-            bands.filter(F.col("sig").isNotNull())
-            .join(sz, "doc_id")
-            .groupBy("band", "sig")
-            .agg(F.collect_list(F.struct("doc_id", "sz")).alias("ids"))
-            .filter(F.size("ids") >= 2)
-            .repartition(n, "band", "sig")  # coalesce-exempt, see below
-        )
-        cand = (
-            buckets.select(F.explode("ids").alias("pa"), "ids")
-            .select("pa", F.explode("ids").alias("pb"))
-            .filter(
-                (pa["doc_id"] < pb["doc_id"])
-                & (
-                    F.least(pa["sz"], pb["sz"]).cast("double")
-                    >= F.lit(size_ratio - 1e-9)
-                    * F.greatest(pa["sz"], pb["sz"])
-                )
-            )
-            .select(
-                pa["doc_id"].alias("doc_a"), pb["doc_id"].alias("doc_b")
-            )
-            .repartition(n, "doc_a", "doc_b")
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
-        return d, cand
+        # sizes ride the bucket lists for the ratio filter below
+        live = live.join(d.select("doc_id", F.size("hs").alias("sz")), "doc_id")
+        member = F.struct("doc_id", "sz")
+    else:
+        member = F.col("doc_id")
     buckets = (
-        bands.filter(F.col("sig").isNotNull())
-        .groupBy("band", "sig")
-        .agg(F.collect_list("doc_id").alias("ids"))
+        live.groupBy("band", "sig")
+        .agg(F.collect_list(member).alias("ids"))
         .filter(F.size("ids") >= 2)
         # numbered repartition — coalesce-exempt: AQE would shrink
         # this byte-tiny exchange to ~1 partition and serialize the
@@ -708,17 +679,29 @@ def _mh_shingles_candidates(docs, id_col="doc_id", spark=None, sf=None,
         # overwhelmingly retains a small-bucket collision too
         # (planted-dup recall under the cap pinned in tests).
         buckets = buckets.filter(F.size("ids") <= bucket_cap)
+    pairs = buckets.select(F.explode("ids").alias("pa"), "ids").select(
+        "pa", F.explode("ids").alias("pb")
+    )
+    pa, pb = F.col("pa"), F.col("pb")
+    if size_ratio is not None:
+        pairs = pairs.filter(
+            (pa["doc_id"] < pb["doc_id"])
+            & (
+                F.least(pa["sz"], pb["sz"]).cast("double")
+                >= F.lit(size_ratio - 1e-9) * F.greatest(pa["sz"], pb["sz"])
+            )
+        ).select(pa["doc_id"].alias("doc_a"), pb["doc_id"].alias("doc_b"))
+    else:
+        pairs = pairs.select(pa.alias("doc_a"), pb.alias("doc_b")).filter(
+            F.col("doc_a") < F.col("doc_b")
+        )
     # Numbered repartition BEFORE the pair dedup: dropDuplicates then
     # satisfies its clustering from the coalesce-exempt exchange, so
     # the dedup and the downstream array_intersect verify both keep
     # full width under AQE (write-bytes say nothing about per-row
     # compute). Same fix, same measurement, as lsh_candidate_pairs.
-    cand = (
-        buckets.select(F.explode("ids").alias("doc_a"), "ids")
-        .select("doc_a", F.explode("ids").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .repartition(n, "doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
+    cand = pairs.repartition(n, "doc_a", "doc_b").dropDuplicates(
+        ["doc_a", "doc_b"]
     )
     return d, cand
 

@@ -810,8 +810,9 @@ def _build_ivf_index(spark, sf, path):
         # `probes` tasks (measured 4.5 s vs 1.4 s fresh at sf100 —
         # worse than no index); hashing vec_id in spreads every cell
         # over all tasks, so each cell directory holds ~n_tasks
-        # splittable files
-        e.repartition(work_partitions(spark, 32), F.col("label"), F.col("vec_id"))
+        # splittable files. Session width, no higher floor: a 32-way
+        # floor on 4 slots wrote 248 files for 0.35 MB at sf0.01
+        e.repartition(work_partitions(spark), F.col("label"), F.col("vec_id"))
         .write.mode("overwrite")
         .partitionBy("label")
         .parquet(os.path.join(path, "by_cell"))

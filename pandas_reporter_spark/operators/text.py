@@ -95,7 +95,8 @@ def _open_vocab_stats(spark, sf, path):
 
 
 artifacts.declare(
-    "vocab_stats", "documents", "vocab", _build_vocab_stats, _open_vocab_stats
+    "vocab_stats", "documents", "vocab", _build_vocab_stats, _open_vocab_stats,
+    after=("doc_tokens",),
 )
 
 
@@ -140,11 +141,12 @@ def _build_token_index(spark, sf, path):
         # hash doc_id in alongside the partition column so each
         # bucket directory holds splittable files (the IVF
         # read-parallelism lesson: one file per bucket caps the
-        # probe at |terms| tasks)
+        # probe at |terms| tasks). Session width, no higher floor:
+        # under partitionBy each task writes a file per bucket it
+        # holds, and a 32-way floor on 4 slots wrote 756 files for
+        # 0.9 MB at sf0.01 (4.8 s build vs 1.8 s)
         tf.withColumn("bucket", bucket)
-        .repartition(
-            work_partitions(spark, 32), F.col("bucket"), F.col("doc_id")
-        )
+        .repartition(work_partitions(spark), F.col("bucket"), F.col("doc_id"))
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(os.path.join(path, "postings"))

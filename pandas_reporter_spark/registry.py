@@ -87,6 +87,11 @@ _PRIORITY = (
     # (1) the 36 queries whose closure changed, grouped by artifact;
     # (2) the rest burns the oldest vintages: all eight r11 records,
     #     then the r12 cohort alphabetically.
+    # Concurrent ingest then re-laid out two artifacts (token_index
+    # postings, ivf_index by_cell: session-width fan-out) and composed
+    # the minhash bucket cap with the size-ratio prefilter; every
+    # consumer of those is already in (1), so the audit still reports
+    # exactly these 36 stale and the rotation is unchanged.
     # (1) doc_tokens
     "q_pipeline_dsir",
     "q_sketch_cms",

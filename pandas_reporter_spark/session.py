@@ -24,15 +24,13 @@ def _aqe_default() -> str:
     """AQE posture, env-overridable (SPARK_GRAFT_AQE=false to disable).
 
     Default ON — runtime skew-split/coalesce/re-plan is the 100 TB
-    posture and what every test pins. The opt-out exists for
-    sub-second workloads (bench.py at sf0.1): AQE materializes each
-    shuffle stage as its own job and re-plans between them, and that
-    per-stage scheduling round-trip is pure overhead when stages run
-    in tens of milliseconds — measured 6.69s -> 4.77s over the 10
-    slowest batch bench queries (paired A/B, this host). A real
-    deployment makes the same call per-job-size; the engine's plans
-    are identical either way (broadcast thresholds and partition
-    sizing do not depend on AQE).
+    posture, what every test pins, and what bench.py and perfbench
+    time. bench.py opted out at sf0.1 in rounds 8-15 (per-stage
+    re-plan round-trips measured as overhead on that era's plans);
+    an interleaved 115-query re-A/B on the r16 code measured AQE on
+    4.7 s faster in total, and the opt-out was dropped. The env switch
+    stays for A/Bs; the engine's plans are identical either way
+    (broadcast thresholds and partition sizing do not depend on AQE).
     """
     raw = os.environ.get("SPARK_GRAFT_AQE", "true")
     # normalize: Spark's conf parser accepts only true/false, so
@@ -161,6 +159,18 @@ def get_session(app_name: str = "pandas_reporter_spark") -> SparkSession:
         # ~3-5×, so 16 MiB on disk is already a ~50-80 MiB hash
         # relation per executor.
         .config("spark.sql.autoBroadcastJoinThreshold", str(16 * 1024 * 1024))
+        # Spark keeps 100 compiled codegen classes by default; one pass
+        # of perfbench's 7 llm_curation queries compiles ~170, so every
+        # repeated pass evicted and re-compiled them (135-188 Janino
+        # compiles and ~300 freshly loaded classes per pass, which the
+        # JIT then compiled again), work whose cost rose and fell with
+        # the host's speed. At 2000 a repeated pass compiles 0-2
+        # classes. perfbench on a 4-vCPU VM against the 100-entry
+        # default, runs alternated: llm_curation queries_per_s
+        # 1.47 -> 2.03 (10 and 9 runs), census_moe 2.27 -> 2.63 and
+        # CPU per query 1.20 -> 0.97 s (10 pairs). Static: a session
+        # built elsewhere keeps its own value.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for k, v in _runtime_confs().items():
         builder = builder.config(k, v)

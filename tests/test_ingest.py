@@ -3,10 +3,14 @@
 Coverage: ``ingest.MATERIALIZERS`` lists every declared artifact, and
 no hand-rolled sidecar cache or handle list survives outside
 ``pandas_reporter_spark.artifacts``. Behavior: ingest() builds
-everything on a tiny snapshot and the consumers see their artifacts;
-torn or failing builds are rejected loudly and leave consumers on their
-self-derive plans; every artifact's primed result equals its unprimed
-one; per-query handles retire only their own query's predecessor.
+everything side by side on a tiny snapshot, starts an artifact only
+after its declared ``after`` artifacts, and the consumers see their
+artifacts; no build changes a session conf (what makes the concurrent
+builds safe); torn or failing builds are rejected loudly and leave
+consumers on their self-derive plans; every artifact's primed result
+equals its unprimed one; the partitioned writes stay at the session's
+width; per-query handles retire only their own query's predecessor,
+and interpreter exit retires the last ones.
 """
 
 from __future__ import annotations
@@ -16,13 +20,16 @@ import hashlib
 import os
 import re
 import shutil
+import subprocess
 import sys
+import threading
 
 import pytest
 
 from pandas_reporter_spark import artifacts
 from pandas_reporter_spark import ingest as ing
 from pandas_reporter_spark.registry import QUERIES, load_all
+from pandas_reporter_spark.session import configure, work_partitions
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
@@ -60,6 +67,19 @@ def _private_sf(factory, name):
     return sf
 
 
+@pytest.fixture
+def ingest_sf(spark, tmp_path_factory):
+    """A private sf for ingest(), which builds at the default location.
+    Its artifacts there are removed afterwards: the copy keeps the
+    basename and mtime that name them on every run, so a leftover would
+    hold tmpfs memory and turn the next run's builds into reuses."""
+    sf = _private_sf(tmp_path_factory, "ingest_sf")
+    yield sf
+    for name in artifacts.DECLARED:
+        artifacts.drop(spark, sf, name)
+        shutil.rmtree(artifacts.path(spark, sf, name), ignore_errors=True)
+
+
 def _result(spark, sf, q):
     df = QUERIES[q](spark, sf)
     rows = [tuple(r) for r in df.collect()]
@@ -72,9 +92,8 @@ def test_materializers_list_every_declared_artifact():
     assert len(set(ing.MATERIALIZERS)) == len(ing.MATERIALIZERS)
     assert set(ing.MATERIALIZERS) == set(artifacts.DECLARED)
     assert set(CONSUMER) == set(artifacts.DECLARED)
-    # vocab_stats derives from doc_tokens when that is primed
-    order = list(ing.MATERIALIZERS)
-    assert order.index("doc_tokens") < order.index("vocab_stats")
+    for a in artifacts.DECLARED.values():
+        assert set(a.after) <= set(artifacts.DECLARED) - {a.name}, a
 
 
 def test_no_hand_rolled_sidecar_caches_or_handle_lists():
@@ -90,10 +109,44 @@ def test_no_hand_rolled_sidecar_caches_or_handle_lists():
     assert not found, found
 
 
-def test_ingest_builds_and_primes_consumers(spark, tmp_path_factory):
-    sf = _private_sf(tmp_path_factory, "ingest_sf")
+def test_ingest_builds_and_primes_consumers(spark, ingest_sf, monkeypatch):
+    sf = ingest_sf
+    # record, through a wrapped artifacts.build, which builds overlap
+    # and what each saw registered when it started. doc_tokens is held
+    # back until vocab_stats starts or every other build is done, so an
+    # ingest that ignored `after` would start vocab_stats first.
+    real, lock, release = artifacts.build, threading.Lock(), threading.Event()
+    running, peak, seen, done = set(), [0], {}, set()
+    others = set(ing.MATERIALIZERS) - {"doc_tokens", "vocab_stats"}
+
+    def build(spark, sf, name, *a, **k):
+        if name == "doc_tokens":
+            release.wait(timeout=300)
+        with lock:
+            seen[name] = {n for n in artifacts.DECLARED if artifacts.get(spark, sf, n)}
+            running.add(name)
+            peak[0] = max(peak[0], len(running))
+            if name == "vocab_stats":
+                release.set()
+        try:
+            return real(spark, sf, name, *a, **k)
+        finally:
+            with lock:
+                running.discard(name)
+                done.add(name)
+                if others <= done:
+                    release.set()
+
+    monkeypatch.setattr(artifacts, "build", build)
     report = ing.ingest(spark, sf)
+    monkeypatch.undo()
     assert list(report) == list(ing.MATERIALIZERS)
+    assert set(seen) == set(ing.MATERIALIZERS)
+    # vocab_stats derives from doc_tokens when that is primed
+    assert artifacts.DECLARED["vocab_stats"].after == ("doc_tokens",)
+    assert "doc_tokens" in seen["vocab_stats"], "vocab_stats did not wait"
+    if spark.sparkContext.defaultParallelism > 1:
+        assert peak[0] > 1, "ingest built the artifacts one at a time"
     failed = [n for n, r in report.items() if not r["ok"]]
     assert not failed, {n: report[n]["reason"] for n in failed}
     # ok means "didn't raise"; primed means "the consumer will actually
@@ -106,6 +159,54 @@ def test_ingest_builds_and_primes_consumers(spark, tmp_path_factory):
     # idempotent: second call is a fast no-op for already-registered keys
     report2 = ing.ingest(spark, sf)
     assert all(r["ok"] and r["primed"] for r in report2.values())
+
+
+def test_ingest_dependency_chain_longer_than_pool(spark, tmp_path, monkeypatch):
+    """A chain of `after` dependencies longer than the pool is wide, plus
+    independent and two-parent builds, all on fake artifacts: ingest
+    neither deadlocks nor starts a build before its dependencies are
+    registered, and registers every one (thread switches forced often)."""
+    width = spark.sparkContext.defaultParallelism
+    chain = [f"chain{i}" for i in range(width + 3)]
+    after = {c: (p,) for p, c in zip(chain, chain[1:])}
+    after.update({f"free{i}": () for i in range(2 * width)})
+    after["join"] = (chain[-1], "free0")
+    names = [chain[0], *after]
+    late = []
+
+    def declared(name):
+        def build(spark, sf, path):
+            if any(artifacts.get(spark, sf, d) is None for d in after.get(name, ())):
+                late.append(name)
+            os.makedirs(path)
+
+        return artifacts.Artifact(
+            name, "documents", f"fake{name}", build, lambda *_: name,
+            after=after.get(name, ()),
+        )
+
+    monkeypatch.setattr(artifacts, "DECLARED", {n: declared(n) for n in names})
+    monkeypatch.setattr(ing, "MATERIALIZERS", tuple(reversed(names)))
+    real = artifacts.build
+    monkeypatch.setattr(
+        artifacts, "build", lambda *a: real(*a, base=str(tmp_path))
+    )
+    sf, out = str(tmp_path / "fake_sf"), {}
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        t = threading.Thread(
+            target=lambda: out.update(ing.ingest(spark, sf)), daemon=True
+        )
+        t.start()
+        t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not t.is_alive(), "ingest deadlocked"
+    assert list(out) == list(reversed(names))
+    assert not late, f"started before their dependencies: {late}"
+    assert all(r["primed"] for r in out.values()), out
+    assert all(artifacts.get(spark, sf, n) == n for n in names)
 
 
 def test_torn_artifact_is_rejected_not_cached(
@@ -209,6 +310,61 @@ def test_primed_equals_unprimed(spark, equality_sf, name):
 
 
 @pytest.mark.parametrize(
+    "name,table,col",
+    [("token_index", "postings", "bucket"), ("ivf_index", "by_cell", "label")],
+)
+def test_partitioned_writes_stay_at_session_width(
+    spark, equality_sf, name, table, col
+):
+    """Each bucket/cell directory holds at most one file per write task
+    at the session's width: a fixed wider floor multiplies tiny files
+    (756 postings files for 0.9 MB at width 32 on 4 slots)."""
+    sf, base = equality_sf
+    load_all()
+    assert artifacts.build(spark, sf, name, base=base)["primed"]
+    root = os.path.join(artifacts.path(spark, sf, name, base), table)
+    dirs = [d for d in os.listdir(root) if d.startswith(f"{col}=")]
+    assert dirs
+    width = work_partitions(spark)
+    files = {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(root, d)))
+        for d in dirs
+    }
+    assert max(files.values()) <= width, (width, files)
+
+
+def _confs(spark):
+    return (
+        sorted(spark.sparkContext.getConf().getAll()),
+        sorted(spark.conf.getAll.items()),
+    )
+
+
+@pytest.fixture(scope="module")
+def conf_base(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("conf_base"))
+
+
+@pytest.mark.parametrize("name", ing.MATERIALIZERS)
+def test_build_leaves_session_confs_unchanged(spark, equality_sf, conf_base, name):
+    """ingest runs the builds side by side in one session, which is safe
+    only while no build changes a conf another build's plan reads: the
+    context conf and the runtime SQL confs are identical around a
+    build (the session is configured first, as every query does)."""
+    sf, _ = equality_sf
+    load_all()
+    configure(spark)
+    artifacts.drop(spark, sf, name)
+    shutil.rmtree(artifacts.path(spark, sf, name, conf_base), ignore_errors=True)
+    before = _confs(spark)
+    try:
+        assert artifacts.build(spark, sf, name, base=conf_base)["ok"]
+        assert _confs(spark) == before
+    finally:
+        artifacts.drop(spark, sf, name)
+
+
+@pytest.mark.parametrize(
     "first,second",
     [
         ("q_dedup_substring", "q_dedup_substring_removal"),
@@ -238,3 +394,26 @@ def test_sink_dir_outlives_its_call_and_is_retired_by_the_next(spark):
     QUERIES["q_stream_file_sink"](spark, SF).count()
     assert not os.path.exists(held)
     assert os.path.isdir(artifacts._HELD["q_stream_file_sink"])
+
+
+def test_held_handles_are_retired_at_exit(tmp_path):
+    """The last call's handles have no next call to retire them: the
+    interpreter-exit hook does, so a held tmpfs dir never outlives the
+    process."""
+    held = tmp_path / "sink"
+    held.mkdir()
+    code = (
+        "from pandas_reporter_spark import artifacts\n"
+        "class Frame:\n"
+        "    def unpersist(self): print('unpersisted')\n"
+        f"artifacts.hold('q_dir', {str(held)!r})\n"
+        "artifacts.hold('q_frame', Frame())\n"
+    )
+    root = os.path.join(os.path.dirname(__file__), "..")
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True,
+        text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert not held.exists()
+    assert out.stdout.split() == ["unpersisted"]
