@@ -92,6 +92,10 @@ _PRIORITY = (
     # the minhash bucket cap with the size-ratio prefilter; every
     # consumer of those is already in (1), so the audit still reports
     # exactly these 36 stale and the rotation is unchanged.
+    # The replicate MOE then became one SQL expression: q_varrep_moe's
+    # body changed (stale, 37th) and q_varrep_source reaches the same
+    # formula through varrep_frame (outside the module-local audit);
+    # both take the last two (2) slots.
     # (1) doc_tokens
     "q_pipeline_dsir",
     "q_sketch_cms",
@@ -138,6 +142,9 @@ _PRIORITY = (
     "q_dedup_substring_removal",
     "q_pipeline_dsir_bigram",
     "q_stream_file_sink",
+    # (1) replicate MOE as one SQL expression
+    "q_varrep_moe",
+    "q_varrep_source",
     # (2) r11 cohort, then r12 alphabetical
     "q_sort",
     "q_str_funcs",
@@ -151,8 +158,6 @@ _PRIORITY = (
     "q_dedup_cluster",
     "q_dedup_exact",
     "q_dedup_semantic",
-    "q_embed_gram",
-    "q_embed_kmeans",
 )
 
 # Earlier rotations (r2-r6) and their slot-by-slot rationale live in

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Runtime-settable SQL configs, applied both at build time and to
@@ -69,7 +71,7 @@ def configure(spark: SparkSession) -> SparkSession:
     for k, v in _runtime_confs().items():
         try:
             spark.conf.set(k, v)
-        except Exception as e:  # immutable in this deployment — say so
+        except AnalysisException as e:  # immutable in this deployment — say so
             warnings.warn(f"could not set {k}={v}: {e}")
     try:
         shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -98,7 +100,7 @@ def work_partitions(spark: SparkSession, floor: int = 8) -> int:
     """
     try:
         dp = int(spark.sparkContext.defaultParallelism)
-    except Exception:  # session without a live context (shouldn't happen)
+    except (AttributeError, Py4JJavaError):  # context stopped (Python / JVM side)
         dp = _cpus()
     return max(floor, dp)
 
@@ -171,6 +173,19 @@ def get_session(app_name: str = "pandas_reporter_spark") -> SparkSession:
         # CPU per query 1.20 -> 0.97 s (10 pairs). Static: a session
         # built elsewhere keeps its own value.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # PySpark's call-site capture adds ~10 py4j round trips to every
+        # Column operation (11-13 per F.col / * / cast / alias) to record
+        # a Python file:line that only ANSI runtime errors report, and
+        # the engine runs with ANSI off. With it on, a census_moe pass
+        # spent 2.0-2.2 s building plans against 2.8-2.9 s running them
+        # (perfbench traced, 4-vCPU VM); pinned off with the one-
+        # expression replicate MOE, 0.7-0.8 s, and queries_per_s went
+        # 2.64 -> 3.46 (10 pairs). PySpark reads the setting once per
+        # process, on the first Column operation, and reads false on a
+        # thread with no active session, so unpinned it depended on call
+        # order (true after `relayout`, false after `ingest`). Static:
+        # only the builder can set it; `configure` cannot.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in _runtime_confs().items():
         builder = builder.config(k, v)

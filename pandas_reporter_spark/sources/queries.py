@@ -155,22 +155,18 @@ def q_varrep_moe(spark, sf):
     Replicates are deterministic offsets of o_totalprice; the registered
     check pins the successive-difference formula end-to-end
     (1.645·sqrt((4/80)·Σ(repᵢ−est)²)) as an 80-term codegen'd
-    expression — no shuffle, scan-speed at any scale.
+    expression — no shuffle, scan-speed at any scale. The replicates
+    are SQL text, so the JVM parses the whole formula in one call.
     """
     configure(spark)
     o = load(spark, sf, "orders").select("o_orderkey", "o_totalprice")
     reps = [
-        (
-            F.col("o_totalprice")
-            + ((F.lit(i) * F.col("o_orderkey")) % 7 - 3).cast("double")
-        )
+        f"o_totalprice + CAST(({i} * o_orderkey) % 7 - 3 AS DOUBLE)"
         for i in range(1, 81)
     ]
     return o.select(
         "o_orderkey",
-        F.round(moe_from_replicates(F.col("o_totalprice"), reps), 6).alias(
-            "moe_rep"
-        ),
+        F.round(moe_from_replicates("o_totalprice", reps), 6).alias("moe_rep"),
     )
 
 

@@ -15,13 +15,13 @@ the ACS Variance Replicate Table documentation quoted in FIXTURES.md §4:
 
 The replicate MOE is a pure Column expression over the 80 replicate
 columns — Σ(rep−est)² unrolls to an 80-term codegen'd sum, no shuffle,
-no UDF; at 100 TB this runs at scan speed.
+no UDF; at 100 TB this runs at scan speed. It is built from one SQL
+string, so building it costs one parse, not a JVM call per node.
 """
 
 from __future__ import annotations
 
 import os
-from functools import reduce
 from typing import Callable, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -81,16 +81,30 @@ def get_varrep_dataframe(
     return df.filter(F.col("TBLID") == tableid)
 
 
-def moe_from_replicates(est, reps: Sequence) -> Column:
-    """MOE = Z90 · sqrt((4/n)·Σ(repᵢ − est)²) over replicate columns."""
-    e = F.col(est).cast("double") if isinstance(est, str) else est.cast("double")
-    terms = []
-    for r in reps:
-        c = F.col(r).cast("double") if isinstance(r, str) else r.cast("double")
-        d = c - e
-        terms.append(d * d)
-    ss = reduce(lambda a, b: a + b, terms)
-    return F.lit(Z90) * F.sqrt(F.lit(4.0 / len(terms)) * ss)
+def replicate_moe_sql(est: str, reps: Sequence[str]) -> str:
+    """SQL text of Z90 · sqrt((4/n)·Σ(repᵢ − est)²).
+
+    `est` and each of `reps` is a column name or a SQL expression. The
+    sum is written flat (``t1 + t2 + …``): the parser builds the same
+    left fold as nested parentheses would, but a left-nested string is
+    as deep as it is long and takes ~3x as long to parse in a cold JVM.
+    Literals carry a ``D`` suffix, since a bare ``1.645`` is a DECIMAL.
+    """
+    e = f"CAST(({est}) AS DOUBLE)"
+    diffs = [f"(CAST(({r}) AS DOUBLE) - {e})" for r in reps]
+    ss = " + ".join(f"{d} * {d}" for d in diffs)
+    return f"{Z90!r}D * sqrt({4.0 / len(diffs)!r}D * ({ss}))"
+
+
+def moe_from_replicates(est: str, reps: Sequence[str]) -> Column:
+    """MOE = Z90 · sqrt((4/n)·Σ(repᵢ − est)²) over replicate columns.
+
+    One `F.expr`: the JVM parses the whole formula in one call, where a
+    Column built node by node costs at least one py4j round trip per
+    node (for `q_varrep_moe`'s 80 replicates: ~1,600, and ~12,000 with
+    PySpark's call-site capture on; this form costs ~40 for the query).
+    """
+    return F.expr(replicate_moe_sql(est, reps))
 
 
 def varrep_frame(df: DataFrame) -> DataFrame:

@@ -19,6 +19,8 @@ def spark():
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.ansi.enabled", "false")
+        # the call-site posture `session.get_session` ships (static conf)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
     yield s

@@ -10,11 +10,14 @@ from test_basic.py:221-234 and test_censusapi.py:15-34.
 from __future__ import annotations
 
 import json
+import operator
 import os
+from functools import reduce
 
 import pytest
 from pyspark.sql import functions as F
 
+from pandas_reporter_spark.functions.moe import Z90
 from pandas_reporter_spark.sources import (
     CensusReporterURL,
     URLError,
@@ -31,6 +34,7 @@ from pandas_reporter_spark.sources.crjson import (
     cr_row_generator,
     get_cr_dataframe,
 )
+from pandas_reporter_spark.sources.varrep import replicate_moe_sql
 
 FIXTURES = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -298,6 +302,96 @@ def test_varrep_csv_source_shape_and_moe(spark):
         (F.abs(F.round("MOE_REP", 2) - F.col("MOE")) < 0.01).alias("ok")
     )
     assert all(r.ok for r in rt.collect())
+
+
+def _moe_columns(est, reps):
+    """Reference: the replicate MOE built Column by Column, the form the
+    one-expression SQL text replaced."""
+    e = est.cast("double")
+    terms = [(r.cast("double") - e) * (r.cast("double") - e) for r in reps]
+    ss = reduce(operator.add, terms)
+    return F.lit(Z90) * F.sqrt(F.lit(4.0 / len(terms)) * ss)
+
+
+def _same_plan_and_rows(new, ref):
+    """Optimized plans are `sameResult`-equal and collected rows equal."""
+    new_plan, ref_plan = (
+        df._jdf.queryExecution().optimizedPlan() for df in (new, ref)
+    )
+    assert new_plan.sameResult(ref_plan)
+    assert new.columns == ref.columns
+    rows = sorted(new.collect())
+    assert rows and rows == sorted(ref.collect())
+
+
+def test_varrep_moe_sql_matches_column_formula(spark):
+    from pandas_reporter_spark.registry import QUERIES, load_all
+    from pandas_reporter_spark.tables import load
+
+    load_all()
+    sf = "/root/testdata/sf0.001"
+    o = load(spark, sf, "orders").select("o_orderkey", "o_totalprice")
+    reps = [
+        F.col("o_totalprice")
+        + ((F.lit(i) * F.col("o_orderkey")) % 7 - 3).cast("double")
+        for i in range(1, 81)
+    ]
+    ref = o.select(
+        "o_orderkey",
+        F.round(_moe_columns(F.col("o_totalprice"), reps), 6).alias("moe_rep"),
+    )
+    _same_plan_and_rows(QUERIES["q_varrep_moe"](spark, sf), ref)
+
+
+def test_varrep_frame_matches_column_formula(spark):
+    from pandas_reporter_spark.sources.varrep import get_varrep_dataframe
+
+    df = get_varrep_dataframe(spark)
+    reps = [F.col(f"VAR_REP{i}") for i in range(1, 81)]
+    ref = df.withColumn("MOE_REP", _moe_columns(F.col("ESTIMATE"), reps))
+    _same_plan_and_rows(varrep_frame(df), ref)
+
+
+def test_varrep_moe_builds_in_few_round_trips(spark, monkeypatch):
+    """Building the 80-replicate query is a handful of JVM calls, not
+    one or more per Column node (~1,600 built as Columns, and
+    11,000-13,000 with call-site capture on)."""
+    from py4j.clientserver import ClientServerConnection
+
+    from pandas_reporter_spark.registry import QUERIES, load_all
+
+    load_all()
+    sf = "/root/testdata/sf0.001"
+    QUERIES["q_varrep_moe"](spark, sf)  # first call caches the scan
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    QUERIES["q_varrep_moe"](spark, sf)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 100
+
+
+def test_replicate_moe_sql_depth_does_not_grow_with_replicates():
+    """The sum is flat text: a left-nested sum is as deep as it is long,
+    and its parse time in a cold JVM grows with that depth."""
+
+    def depth(sql):
+        d = deepest = 0
+        for ch in sql:
+            d += (ch == "(") - (ch == ")")
+            deepest = max(deepest, d)
+        assert d == 0
+        return deepest
+
+    def text(n):
+        return replicate_moe_sql("e + 1", [f"r{i} * 2" for i in range(n)])
+
+    assert depth(text(8)) == depth(text(80))
 
 
 # -- S13: citation -----------------------------------------------------------
