@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pandas_reporter_spark.functions import moe as moe_fns
-from pandas_reporter_spark.tables import davg, dsum
+from pandas_reporter_spark.tables import davg, dsum, local_frame
 
 MARGIN_SUFFIX = "_m90"
 
@@ -277,7 +277,7 @@ class CensusFrame:
         ]
         out_names = ["column"] + [str(i) for i in range(len(rows))]
         schema = ", ".join(f"`{n}` string" for n in out_names)
-        tdf = self.df.sparkSession.createDataFrame(data, schema=schema)
+        tdf = local_frame(self.df.sparkSession, data, schema)
         return CensusFrame(tdf, release=self.release)
 
     # -- renamed views (R6) ----------------------------------------------------

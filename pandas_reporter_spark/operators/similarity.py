@@ -27,7 +27,7 @@ from pyspark.sql.window import Window as W
 from pandas_reporter_spark import artifacts
 from pandas_reporter_spark.registry import query
 from pandas_reporter_spark.session import configure, work_partitions
-from pandas_reporter_spark.tables import load
+from pandas_reporter_spark.tables import load, local_frame
 
 
 def dot(a, b):
@@ -1564,9 +1564,7 @@ def _pq_train(spark, sub, k_cells, train_n):
             cbook = np.array(new_book, dtype=np.int64)
         for ci, cq in zip(cells, cbook):
             out.append((m, int(ci), [int(v) for v in cq]))
-    return spark.createDataFrame(
-        out, "m int, cell bigint, cq array<bigint>"
-    )
+    return local_frame(spark, out, "m int, cell bigint, cq array<bigint>")
 
 
 def _pq_encode(spark, sub, cents):
@@ -3440,7 +3438,7 @@ def q_search_eval_ndcg(spark, sf):
         "dcg_nano long, ndcg_r6 double"
     )
     if not qrows:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     qblock = []
     for r in sorted(qrows, key=lambda r: r["vec_id"]):
         qv = np.asarray(r["embedding"], dtype=np.float64)
@@ -3525,7 +3523,7 @@ def q_search_eval_ndcg(spark, sf):
         .collect()
     }
     if not t1:  # empty corpus: every metric set is empty
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     t1_order = [j for j in range(len(qid_arr)) if int(qid_arr[j]) in t1]
     t1_qid = np.array([qid_arr[j] for j in t1_order], dtype=np.int64)
     t1_cid = np.array([t1[int(q)][0] for q in t1_qid], dtype=np.int64)

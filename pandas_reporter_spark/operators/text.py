@@ -21,7 +21,7 @@ from pyspark.sql.window import Window as W
 from pandas_reporter_spark import artifacts
 from pandas_reporter_spark.registry import query
 from pandas_reporter_spark.session import configure, work_partitions
-from pandas_reporter_spark.tables import davg, load
+from pandas_reporter_spark.tables import davg, load, local_frame
 
 #: BPE-ish pre-tokenizer: letter runs | digit runs | single non-space symbol.
 #: Kept to a regex subset with identical semantics in Java regex (Spark)
@@ -3072,7 +3072,8 @@ def q_text_overlap_matrix(spark, sf):
             out.append(
                 (a, b, shared, na, nb, (1000000 * shared) // (na + nb - shared))
             )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             out,
             "src_a string, src_b string, n_shared bigint, n_a bigint,"
             " n_b bigint, jacc_micro bigint",
@@ -3503,7 +3504,8 @@ def q_text_bpe_train(spark, sf):
     """
     configure(spark)
     merges = _bpe_learn(spark, sf, _BPE_MERGES)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges,
         "round int, lhs string, rhs string, pair_count bigint, merged string",
     )
@@ -4056,9 +4058,7 @@ def q_text_vocab_coverage(spark, sf):
         F.row_number().over(w).cast("bigint").alias("rnk"),
         F.sum("n").over(w).cast("bigint").alias("cum"),
     )
-    th = spark.createDataFrame(
-        [(v,) for v in _VOCAB_SIZES], "n_vocab int"
-    )
+    th = local_frame(spark, [(v,) for v in _VOCAB_SIZES], "n_vocab int")
     return (
         th.crossJoin(F.broadcast(tot))
         .withColumn(
@@ -4194,7 +4194,8 @@ def _build_bpe_merges(spark, sf, path):
     time and shipped as an artifact; every apply pass reads the 8-row
     table instead of re-training (one corpus word-count shuffle + the
     dictionary loop)."""
-    spark.createDataFrame(
+    local_frame(
+        spark,
         _bpe_learn(spark, sf, _BPE_MERGES),
         "round int, lhs string, rhs string, pair_count bigint,"
         " merged string",
@@ -4403,7 +4404,7 @@ def q_pipeline_curriculum(spark, sf):
         .cast("bigint")
         .alias("n"),
     )
-    ks = spark.createDataFrame([(k,) for k in range(1, 8)], "k int")
+    ks = local_frame(spark, [(k,) for k in range(1, 8)], "k int")
     b = (
         cum.join(
             F.broadcast(ks),

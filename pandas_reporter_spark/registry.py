@@ -96,6 +96,12 @@ _PRIORITY = (
     # body changed (stale, 37th) and q_varrep_source reaches the same
     # formula through varrep_frame (outside the module-local audit);
     # both take the last two (2) slots.
+    # Driver-built frames then became one Arrow local relation
+    # (tables.local_frame): four more bodies changed (stale: eval_ndcg,
+    # bpe_train, overlap_matrix, vocab_coverage; curriculum and pq_adc
+    # are already in (1)), and q_source_cr_pivot / q_census_workflow
+    # reach the new path through sources.crjson.cr_frame (outside the
+    # module-local audit). The six take the last six (2) slots.
     # (1) doc_tokens
     "q_pipeline_dsir",
     "q_sketch_cms",
@@ -145,6 +151,13 @@ _PRIORITY = (
     # (1) replicate MOE as one SQL expression
     "q_varrep_moe",
     "q_varrep_source",
+    # (1) driver-built frames as one Arrow local relation
+    "q_source_cr_pivot",
+    "q_census_workflow",
+    "q_search_eval_ndcg",
+    "q_text_bpe_train",
+    "q_text_overlap_matrix",
+    "q_text_vocab_coverage",
     # (2) r11 cohort, then r12 alphabetical
     "q_sort",
     "q_str_funcs",
@@ -152,12 +165,6 @@ _PRIORITY = (
     "q_topk",
     "q_topk_per_group",
     "q_union_all",
-    "q_window_lag_lead",
-    "q_window_running_sum",
-    "q_agg_entropy",
-    "q_dedup_cluster",
-    "q_dedup_exact",
-    "q_dedup_semantic",
 )
 
 # Earlier rotations (r2-r6) and their slot-by-slot rationale live in

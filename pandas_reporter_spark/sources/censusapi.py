@@ -14,8 +14,8 @@ which doesn't exist):
 
 All network is behind an injectable fetcher; catalog/response fixtures
 live in tests. The array-of-arrays → DataFrame step builds an explicit
-StructType (numeric columns double, geo columns string) before
-createDataFrame — never inference on API data.
+StructType (numeric columns double, geo columns string) before the
+frame is built (`tables.local_frame`) — never inference on API data.
 """
 
 from __future__ import annotations
@@ -27,6 +27,8 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+from pandas_reporter_spark.tables import local_frame
 
 CATALOG_URL = "https://api.census.gov/data.json"
 
@@ -122,7 +124,7 @@ class Dataset:
             [(v if h in _GEO_COLS else _num(v)) for h, v in zip(header, r)]
             for r in rows
         ]
-        df = spark.createDataFrame(typed, StructType(fields))
+        df = local_frame(spark, typed, StructType(fields))
         if "state" in header and "county" in header and "GEOID" not in header:
             df = df.withColumn(
                 "GEOID", F.concat(F.lit("05000US"), F.col("state"), F.col("county"))

@@ -16,7 +16,8 @@ Recovered contract (reference censusreporter.py:178-282):
 Two ingest paths share the column contract:
 
 - `cr_frame` — ONE response, driver-side pivot (a response is a few
-  hundred rows × columns: metadata scale), then a distributed frame.
+  hundred rows × columns: metadata scale), then a local relation
+  (`tables.local_frame`: one Arrow table, no parallelized RDD).
 - `cr_bulk_frame` — MANY responses: `spark.read.json` over the cache
   dir with an explicit Map-typed schema (one record per file via
   multiLine), `explode` of the geoid map and a wide map-extract
@@ -44,6 +45,7 @@ from pyspark.sql.types import (
 
 from pandas_reporter_spark.frame import CensusFrame
 from pandas_reporter_spark.sources.url import CensusReporterURL, fetch_json
+from pandas_reporter_spark.tables import local_frame
 
 
 def _lead_col(name: str, position: int) -> dict:
@@ -126,7 +128,7 @@ def cr_rows(data: dict, table_id: str) -> Tuple[list[list], list[dict], dict]:
 
 def cr_frame(spark: SparkSession, data: dict, table_id: str) -> CensusFrame:
     """S5: materialize the pivot as a CensusFrame with explicit schema
-    (schema-from-API is built BEFORE createDataFrame — SURVEY §1.4)."""
+    (schema-from-API is built BEFORE the frame — SURVEY §1.4)."""
     rows, columns, release = cr_rows(data, table_id)
     fields = [
         StructField(
@@ -134,7 +136,7 @@ def cr_frame(spark: SparkSession, data: dict, table_id: str) -> CensusFrame:
         )
         for c in columns
     ]
-    df = spark.createDataFrame(rows, StructType(fields))
+    df = local_frame(spark, rows, StructType(fields))
     out = CensusFrame(df, release=release)
     out.meta = {c["code"]: c for c in columns}
     return out

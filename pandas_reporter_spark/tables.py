@@ -8,10 +8,12 @@ lineitem events documents embeddings — one parquet each under
 from __future__ import annotations
 
 import os
+from typing import Sequence, Union
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLES = (
     "region",
@@ -381,11 +383,49 @@ def _session_key(spark: SparkSession) -> str:
     reuse the address for a NEW session after the old one is stopped,
     silently serving DataFrames bound to a dead SparkContext. The
     applicationId is unique per started context; fall back to id() only
-    if the context is already gone (entries then die unused)."""
+    if the context is already gone (entries then die unused). Stopped
+    from Python, `_jsc` is None (AttributeError); a failing JVM call
+    raises Py4JJavaError. Stopped only on the JVM side, the context
+    still reports its own (never reused) id. Anything else is a bug and
+    propagates."""
     try:
         return spark.sparkContext.applicationId
-    except Exception:  # stopped context — key can't collide with a live one
+    except (AttributeError, Py4JJavaError):  # key can't collide with a live one
         return f"dead-{id(spark)}"
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: Union[StructType, str]
+) -> DataFrame:
+    """A driver-built list of rows as a DataFrame over a local relation.
+
+    `spark.createDataFrame(rows, schema)` pickles the rows and
+    parallelizes them over the session's default parallelism; the plan
+    scans that RDD (`Scan ExistingRDD`, no size statistics) and every
+    action on it runs a job that unpickles the rows task by task —
+    0.26 s of run time for the 3-row Census Reporter pivot. Built as one
+    Arrow table instead (one typed array per column, types from the
+    schema), the frame is a `LocalRelation`: a `LocalTableScan` the
+    planner sizes and broadcasts, 0.03 s for the same pivot.
+
+    Values are exact: pyarrow keeps NaN apart from NULL and int64 above
+    2^53 (a pandas intermediate would turn None into NaN and route
+    nullable bigints through float64). `schema` is a StructType or a
+    DDL string; each row holds one value per field, in field order."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=f.type)
+            for i, f in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def pack_ascii(col) -> Column:

@@ -136,3 +136,33 @@ def test_work_partitions_falls_back_on_a_stopped_context():
         "print(live, jvm_stopped, session.work_partitions(spark, 1))\n"
     )
     assert _run_fresh(code).split() == ["2", "3", "3"]
+
+
+def test_session_key_falls_back_on_a_stopped_context():
+    """Stopped from Python, the context has no `_jsc`: the key falls
+    back to a dead-session key. Stopped only on the JVM side, it keeps
+    its own never-reused id."""
+    code = (
+        "from pandas_reporter_spark import session, tables\n"
+        "spark = session.get_session('session-key-test')\n"
+        "live = tables._session_key(spark)\n"
+        "spark.sparkContext._jsc.sc().stop()\n"
+        "jvm_stopped = tables._session_key(spark)\n"
+        "spark.stop()\n"
+        "py_stopped = tables._session_key(spark)\n"
+        "print(jvm_stopped == live, py_stopped == f'dead-{id(spark)}')\n"
+    )
+    assert _run_fresh(code).split() == ["True", "True"]
+
+
+def test_session_key_propagates_other_errors():
+    """Only what a stopped context raises falls back; a bug surfaces."""
+    from pandas_reporter_spark.tables import _session_key
+
+    class Broken:
+        @property
+        def sparkContext(self):
+            raise RuntimeError("not a stopped context")
+
+    with pytest.raises(RuntimeError):
+        _session_key(Broken())

@@ -150,6 +150,21 @@ def test_cr_frame_materializes_census_frame(spark):
     assert cf.lookup("003").name == "B99001003"
 
 
+@pytest.mark.parametrize("q", ["q_source_cr_pivot", "q_census_workflow"])
+def test_cr_pivot_queries_scan_a_local_relation(spark, q):
+    """The driver-side pivot reaches Spark as a local relation: no job
+    over a parallelized Python RDD (`Scan ExistingRDD`)."""
+    from pandas_reporter_spark.registry import QUERIES, load_all
+    from pandas_reporter_spark.tables import sf_dir
+
+    load_all()
+    df = QUERIES[q](spark, sf_dir())
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
 def test_cr_bulk_frame_equals_per_file_pivots(spark):
     """S3 scale path: spark.read.json over ≥2 responses == the union of
     driver-side per-file pivots, column-for-column and value-for-value."""

@@ -18,8 +18,9 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
-from pandas_reporter_spark.tables import TABLES, load
+from pandas_reporter_spark.tables import TABLES, load, local_frame
 
 _FAMILIES = {
     "integral": {"tinyint", "smallint", "int", "bigint"},
@@ -178,3 +179,145 @@ def test_pack_ascii_roundtrip_and_order(spark):
     for group in by_len.values():
         for a, b in combinations(sorted(group), 2):
             assert packed[a] < packed[b], (a, b)
+
+
+# -- driver-built frames: one Arrow local relation ---------------------------
+
+
+def _executed_plan(df) -> str:
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _row_reprs(df) -> list:
+    """Collected rows as reprs: NaN equals NaN, and None stays apart."""
+    return [repr(tuple(r)) for r in df.collect()]
+
+
+@pytest.mark.parametrize("as_ddl", [False, True], ids=["structtype", "ddl"])
+def test_local_frame_is_a_local_table_scan(spark, as_ddl):
+    ddl = "k int, v double, s string"
+    schema = ddl if as_ddl else StructType.fromDDL(ddl)
+    df = local_frame(spark, [(1, 0.5, "a"), (2, None, None)], schema)
+    plan = _executed_plan(df)
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
+def test_local_frame_values_round_trip_exactly(spark):
+    import math
+
+    big = 2**62 + 1  # not representable in float64
+    rows = [(float("nan"), None, big, [1, big, None]), (None, 1.5, None, [])]
+    got = local_frame(
+        spark, rows, "x double, y double, n bigint, a array<bigint>"
+    ).collect()
+    assert math.isnan(got[0]["x"]) and got[1]["x"] is None
+    assert got[0]["y"] is None and got[1]["y"] == 1.5
+    assert got[0]["n"] == big and got[1]["n"] is None
+    assert got[0]["a"] == [1, big, None] and got[1]["a"] == []
+    empty = local_frame(spark, [], "n bigint, a array<bigint>")
+    assert empty.collect() == []
+    assert "LocalTableScan" in _executed_plan(empty)
+
+
+def _census_struct(names, numeric):
+    return StructType(
+        [
+            StructField(n, DoubleType() if n in numeric else StringType(), True)
+            for n in names
+        ]
+    )
+
+
+#: One case per converted site: its schema and rows of the shape it
+#: builds (nulls and NaN where the site can produce them).
+_SITE_CASES = {
+    "crjson.cr_frame": (
+        _census_struct(
+            ["geoid", "name", "B99001001", "B99001001_m90"],
+            {"B99001001", "B99001001_m90"},
+        ),
+        [("14000US06073000100", "Tract 1", 10.0, 1.0),
+         ("14000US06073000400", "Tract 4", None, float("nan"))],
+    ),
+    "censusapi.fetch_dataframe": (
+        _census_struct(["GEONAME", "POP", "state", "county"], {"POP"}),
+        [("San Diego County", 3299521.0, "06", "073"), ("X", None, "06", "001")],
+    ),
+    "frame.CensusFrame.T": (
+        "`column` string, `0` string, `1` string",
+        [("geoid", "1", "2"), ("col0", "1.0", None)],
+    ),
+    "text.q_text_overlap_matrix": (
+        "src_a string, src_b string, n_shared bigint, n_a bigint,"
+        " n_b bigint, jacc_micro bigint",
+        [("books", "web", 3, 10, 12, 157894)],
+    ),
+    "text.bpe_merges": (
+        "round int, lhs string, rhs string, pair_count bigint,"
+        " merged string",
+        [(1, "t", "h", 420, "th"), (2, "th", "e", 377, "the")],
+    ),
+    "text.q_text_vocab_coverage": (
+        "n_vocab int",
+        [(16,), (256,), (4096,)],
+    ),
+    "text.q_pipeline_curriculum": (
+        "k int",
+        [(k,) for k in range(1, 8)],
+    ),
+    "similarity._pq_train": (
+        "m int, cell bigint, cq array<bigint>",
+        [(0, 3, [-12, 0, 2**40]), (1, 7, [5, -5, 1])],
+    ),
+    "similarity.q_search_eval_ndcg": (
+        "qid long, hits10 long, rank_of_true1 long, rr_nano long, "
+        "dcg_nano long, ndcg_r6 double",
+        [],
+    ),
+}
+
+
+@pytest.mark.parametrize("site", sorted(_SITE_CASES))
+def test_local_frame_equals_the_parallelized_frame(spark, site):
+    """Per converted site: the same schema and the same collected rows
+    as `createDataFrame(rows, schema)`, the path it replaced."""
+    schema, rows = _SITE_CASES[site]
+    new = local_frame(spark, rows, schema)
+    ref = spark.createDataFrame(rows, schema)
+    assert new.schema == ref.schema
+    assert _row_reprs(new) == _row_reprs(ref)
+
+
+def test_no_driver_frame_built_outside_local_frame():
+    """Every driver-side list of rows becomes a frame through
+    `tables.local_frame`; a direct `createDataFrame` call would
+    parallelize the rows as an RDD again."""
+    import ast
+
+    engine = os.path.join(os.path.dirname(__file__), "..", "pandas_reporter_spark")
+    found = []
+    for d, _, files in os.walk(engine):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            p = os.path.join(d, f)
+            tree = ast.parse(open(p).read())
+            allowed = {
+                id(n)
+                for fn in tree.body
+                if f == "tables.py"
+                and isinstance(fn, ast.FunctionDef)
+                and fn.name == "local_frame"
+                for n in ast.walk(fn)
+            }
+            found += [
+                f"{p}:{n.lineno}"
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "createDataFrame"
+                and id(n) not in allowed
+            ]
+    assert not found, found
