@@ -8,13 +8,15 @@ docs/BENCH_DETAIL_latest.json. The compact line is last so a
 tail-capture parser always gets it whole.
 
 Each query is forced end-to-end with the noop sink (full execution on
-executors, no driver collect skew). One warm-up pass of the flagship
-amortizes JVM/codegen warm-up out of the numbers, mirroring how a
-long-lived cluster session behaves.
+executors, no driver collect skew). `prepare_session` first brings the
+session to the steady state of a long-lived cluster session (warm JVM,
+laid-out tables, built sidecars, compiled code); tools/ab.py and
+tools/stream_profile.py time that same state.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -231,126 +233,92 @@ def _bench_overrides():
     }
 
 
+WARM_DIR = "/root/testdata/sf0.001"
+
+
+@contextlib.contextmanager
+def _step(name: str):
+    """One prep step: a failure is printed and costs only that step's
+    warmth, never the run (the same rule as a failed bench query)."""
+    try:
+        yield
+    except Exception as exc:
+        print(f"prep: {name} FAILED: {exc!r}", file=sys.stderr)
+
+
+def prepare_session(spark, sf_dir: str, fns) -> None:
+    """Bring `spark` to the steady state the bench times, for `sf_dir`.
+
+    A long-lived cluster session has its JVM warm, its tables laid out,
+    its sidecars built, its Python workers resident and its generated
+    code compiled; every timing tool calls this one function so they
+    all time that same state. In order:
+
+    1. warm-up run of q_tpch_q1 (JVM + parquet footer cache);
+    2. `tables.relayout`: the driver snapshot is ONE row group per
+       table, so every scan and shuffle-map stage would be a single
+       task, a layout no real ingest produces;
+    3. `ingest`: every at-rest sidecar, unprimed ones named on stderr
+       with their reason (consumers self-derive);
+    4. the one-time input builds of q_join_bucketed and
+       q_partition_pruned_scan (table prep a cluster pays once);
+    5. the Python worker pool (workers import pandas/numpy on first use);
+    6. one untimed run of each callable in `fns` at sf0.001: Janino
+       caches compiled whole-stage code by generated source, which
+       depends on the expression tree, not the input path, so the tiny
+       run compiles each query shape once (q_dedup_minhash at sf0.1:
+       12.5 s cold, 3.4 s after this warm).
+    """
+    import __spark_entry__ as e
+    from pandas_reporter_spark.ingest import ingest
+    from pandas_reporter_spark.tables import relayout
+
+    qs = e.queries()
+    with _step("warm-up"):
+        run(qs["q_tpch_q1"](spark, sf_dir))
+    with _step("relayout"):
+        relayout(spark, sf_dir)
+    with _step("ingest"):
+        for name, rep in ingest(spark, sf_dir).items():
+            if not rep["primed"]:
+                print(f"ingest: {name} not primed: {rep['reason']}", file=sys.stderr)
+    for prime in ("q_join_bucketed", "q_partition_pruned_scan"):
+        with _step(prime):
+            qs[prime](spark, sf_dir).limit(1).collect()
+
+    def _ident(it):
+        yield from it
+
+    with _step("python pool"):
+        run(spark.range(0, 256, 1, 32).mapInPandas(_ident, "id long"))
+    if os.path.isdir(WARM_DIR):
+        for fn in fns:
+            with _step(f"codegen {fn.__name__}"):
+                run(fn(spark, WARM_DIR))
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    # AQE ON — the engine's production default and the posture the
-    # driver's correctness gate has always exercised. Rounds 8-15
-    # overrode it to false here (per-stage re-plan round-trips measured
-    # as overhead on that era's plans); a full 115-query interleaved
-    # re-A/B on the r16 code (one session, arm order alternating,
-    # min-of-3 both arms) measured AQE ON 4.7 s FASTER in total
-    # (52.87 → 48.19 s; 51 queries >20 ms better, 25 worse — the
-    # dictionary-exchange-heavy text/dedup/TPC-H rows gain 0.1-0.4 s
-    # each from partition coalescing). The off-override had become a
-    # local-only tuning the optimization rules call out; removing it
-    # also restores the scale-adaptive partitioning posture
-    # (OPTIMIZATION_r16.md). The caller's env still wins for A/Bs.
-
+    # AQE stays on, the engine's production default: a one-session
+    # interleaved A/B over all rows measured it faster in total
+    # (OPTIMIZATION_r16.md). The caller's env still wins.
     from pandas_reporter_spark.session import get_session
     import __spark_entry__ as e
 
     qs = {**e.queries(), **_bench_overrides()}
     spark = get_session("bench")
+    prepare_session(spark, sf_dir, [qs[n] for n in BENCH_QUERIES if n in qs])
+    # The warm run's sf0.001-sized persisted intermediates stay cached:
+    # clearing them also drops reusable state, and measured slower.
 
-    try:
-        run(qs["q_tpch_q1"](spark, sf_dir))  # warm-up (JVM + parquet footer cache)
-    except Exception:
-        pass  # warm-up must never fail the bench
-
-    # Prime the one-time INPUT builds (bucketed saveAsTable, partitioned
-    # rewrite) outside the timed loop: they are table-prep side effects a
-    # cluster pays once, not per-query cost. The scale module's _BUILT
-    # cache makes the timed calls below steady-state reads.
-    #
-    # Same argument for the physical re-layout: the driver snapshot is
-    # ONE row group per table, so every scan/shuffle-map stage is a
-    # single task — a layout no 100 TB ingest would produce. Rewrite
-    # the big tables as multi-file parquet once (identical data;
-    # tables.relayout) so scans parallelize the way they would on any
-    # real deployment.
-    try:
-        from pandas_reporter_spark.tables import relayout
-
-        relayout(spark, sf_dir)
-    except Exception:
-        pass  # originals still work
-
-    # At-rest sidecars: ONE ingest contract builds every artifact
-    # (pandas_reporter_spark.ingest.MATERIALIZERS — tokenize relation,
-    # inverted token index, trained BPE table, docq scores, LSH/IVF/PQ/
-    # SRP embedding tiers, minhash signatures, bigram graph, weighted-
-    # median stats). Idempotent; consumers self-derive on any failure,
-    # which the report names with its reason.
-    from pandas_reporter_spark.ingest import ingest
-
-    for name, rep in ingest(spark, sf_dir).items():
-        if not rep["primed"]:
-            print(f"ingest: {name} not primed: {rep['reason']}", file=sys.stderr)
-    # Opt-in at-rest co-bucketed fact layout (SCALING.md round-10 A/B:
-    # Q3/Q5/Q18 marginals 4-5× better). OFF by default so headline
-    # numbers stay comparable across rounds; a deployment turns it on.
-    if os.environ.get("SPARK_GRAFT_BUCKETED", "").strip().lower() in (
-        "1", "true", "yes", "on",
-    ):
-        try:
-            from pandas_reporter_spark.tables import use_bucketed_layout
-
-            use_bucketed_layout(spark, sf_dir)
-        except Exception:
-            pass
-    for prime in ("q_join_bucketed", "q_partition_pruned_scan"):
-        if prime in qs:
-            try:
-                qs[prime](spark, sf_dir).limit(1).collect()
-            except Exception:
-                pass
-
-    # Warm the Python worker pool (workers import pandas/numpy on first
-    # use; a long-lived cluster session has them resident, same argument
-    # as the JVM warm-up above).
-    def _ident(it):
-        for pdf in it:
-            yield pdf
-
-    spark.range(0, 256, 1, 32).mapInPandas(_ident, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    # Codegen warm-up: run every bench query once at the smallest SF,
-    # untimed. Janino caches compiled whole-stage code by generated
-    # source, which depends on the expression tree, not the input path
-    # — so the tiny-SF pass compiles the wide unrolled projections
-    # (64-minhash, 63-bit simhash, LSH planes) once, exactly as a
-    # long-lived cluster pays compile once per query shape, not per
-    # run. Measured: q_dedup_minhash 12.5s cold → 3.4s after this
-    # prime at sf0.1.
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir):
-        for name in BENCH_QUERIES:
-            if name in qs:
-                try:
-                    run(qs[name](spark, warm_dir))
-                except Exception:
-                    pass  # warm-up must never fail the bench
-    # (r8 A/B: clearing the cache here — to drop the warm pass's
-    # sf0.001-sized persisted intermediates — measured WORSE, 34.5s →
-    # 36.6s full-bench: the dropped blocks also included reusable
-    # sf0.1 state and every self-persisting plan repaid
-    # materialization in pass 1. Left as-was deliberately.)
-
-    # Best-of-3 per query: single-shot timings on this host show
-    # nondeterministic 5-15s spikes (GC pauses / CPU bursts) on
-    # otherwise-identical runs — whole-run totals of an unchanged build
-    # measured 39.8s / 61.5s / 43.9s back-to-back (round 6) —
-    # min-over-repetitions is the standard steady-state estimator under
-    # such noise and matches what a warmed long-lived cluster session
-    # delivers.
-    # A one-query failure must cost one entry (recorded null), never the
-    # round's bench: round 4's single streaming AnalysisException zeroed
-    # the whole run. The JSON line always prints.
+    # Best-of-3 per query: single runs on this host spike by seconds
+    # (GC pauses, CPU bursts), and min-over-repetitions is the
+    # steady-state estimator a warm long-lived session delivers. A
+    # failed query costs its own entry (recorded null), never the run:
+    # the JSON lines always print.
     timings: dict[str, float | None] = {}
     for _pass in range(3):
         for name in BENCH_QUERIES:
@@ -377,18 +345,12 @@ def main() -> None:
         "sf": sf,
         "failed": failed,
         # rows timed as the production pass, not the registered
-        # correctness harness (see _bench_overrides) — flagged so
-        # cross-round comparisons know which rows changed meaning
-        # (q_sketch_hll switched in r7; comparisons to r6 and
-        # earlier for these names are apples-to-oranges)
+        # correctness harness (see _bench_overrides)
         "overridden": sorted(_bench_overrides()),
     }
-    # Two stdout lines, detail FIRST, compact LAST (VERDICT r14 item 2):
-    # the per-query dict outgrew the driver's tail capture around r8
-    # (BENCH_r*.json parsed:null since), so the line the driver's
-    # tail-parse sees whole is the short one. The full per-query detail
-    # stays on line 1 and in docs/BENCH_DETAIL_latest.json for
-    # cross-round diffing.
+    # Two stdout lines, detail FIRST, compact LAST: the per-query dict
+    # outgrows a tail capture, so the line a tail-parse sees whole is
+    # the short one. The detail also lands in BENCH_DETAIL_latest.json.
     print(json.dumps(detail))
     try:
         here = os.path.dirname(os.path.abspath(__file__))

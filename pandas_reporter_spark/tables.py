@@ -7,6 +7,7 @@ lineitem events documents embeddings — one parquet each under
 
 from __future__ import annotations
 
+import logging
 import os
 from typing import Sequence, Union
 
@@ -14,6 +15,8 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
+
+log = logging.getLogger(__name__)
 
 TABLES = (
     "region",
@@ -139,7 +142,8 @@ def relayout(spark: SparkSession, sf: str, base: str = "/dev/shm") -> None:
                 df = spark.read.parquet(src)
             df.repartition(n).write.mode("overwrite").parquet(dst)
         _RELAYOUT_DIRS[sf] = out
-    except Exception:  # read-only /dev/shm, no space: originals still work
+    except Exception as e:  # read-only /dev/shm, no space: originals still work
+        log.warning("relayout of %s failed, reading the originals: %s", sf, e, exc_info=e)
         return
     # drop memoized single-file scans for this sf so reads re-resolve
     for key in [k for k in _LOAD_CACHE if k[1] == sf]:
@@ -186,8 +190,8 @@ def use_bucketed_layout(
     query on this session benefits. At 100 TB co-bucketing the two
     fact tables at ingest is the difference between shuffling ~all
     fact bytes per join and shuffling none; locally it is a one-time
-    write the bench pays in its prime phase (opt-in:
-    SPARK_GRAFT_BUCKETED=1), exactly like `relayout`.
+    write, exactly like `relayout`. Nothing turns it on by default:
+    the bench times the stock layout.
 
     Sorted buckets additionally let the sort-merge join skip its sort
     (SortExec sees the required ordering satisfied per bucket file).

@@ -120,6 +120,20 @@ def test_relayout_redirect_preserves_data(spark, tmp_path):
             del tables._LOAD_CACHE[k]
 
 
+def test_relayout_failure_is_logged_and_falls_back(spark, tmp_path, caplog):
+    """A relayout that cannot read its source says so and leaves the
+    sf on its original files."""
+    from pandas_reporter_spark import tables
+
+    sf = tmp_path / "torn_sf"
+    sf.mkdir()
+    (sf / "lineitem.parquet").write_bytes(b"not parquet")
+    with caplog.at_level("WARNING", logger="pandas_reporter_spark.tables"):
+        tables.relayout(spark, str(sf), base=str(tmp_path))
+    assert str(sf) not in tables._RELAYOUT_DIRS
+    assert any("relayout" in r.getMessage() and r.exc_info for r in caplog.records)
+
+
 @pytest.mark.parametrize("sf", _SF_DIRS)
 def test_documents_text_is_ascii(spark, sf):
     """Pin the ASCII invariant the multimodal byte-arithmetic oracles

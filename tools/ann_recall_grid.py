@@ -33,7 +33,6 @@ def main():
     out_path = sys.argv[1]
     sf_dirs = dict(a.split("=", 1) for a in sys.argv[2:])
     reps = int(os.environ.get("SPARK_GRAFT_AB_REPS", "2"))
-    os.environ.setdefault("SPARK_GRAFT_AQE", "false")
 
     from pandas_reporter_spark.operators import similarity as S
     from pandas_reporter_spark.registry import QUERIES, load_all

@@ -47,7 +47,6 @@ def main():
     sf_dirs = dict(a.split("=", 1) for a in sys.argv[3:])
     reps = int(os.environ.get("SPARK_GRAFT_AB_REPS", "2"))
     duck1_hi = os.environ.get("SPARK_GRAFT_NEWOPS_DUCK1") == "1"
-    os.environ.setdefault("SPARK_GRAFT_AQE", "false")
 
     from pandas_reporter_spark.registry import ORACLES, QUERIES, load_all
     from pandas_reporter_spark.session import get_session

@@ -156,7 +156,6 @@ def _duck_con(sf_dir: str):
 
 def main():
     out_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/scale_bench.json"
-    os.environ.setdefault("SPARK_GRAFT_AQE", "false")
 
     from pandas_reporter_spark.registry import ORACLES, QUERIES, load_all
     from pandas_reporter_spark.session import get_session

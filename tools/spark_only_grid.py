@@ -24,7 +24,6 @@ def main():
     names = [q.strip() for q in sys.argv[2].split(",") if q.strip()]
     sf_dirs = dict(a.split("=", 1) for a in sys.argv[3:])
     reps = int(os.environ.get("SPARK_GRAFT_AB_REPS", "2"))
-    os.environ.setdefault("SPARK_GRAFT_AQE", "false")
 
     from pandas_reporter_spark.registry import QUERIES, load_all
     from pandas_reporter_spark.session import get_session

@@ -1,7 +1,7 @@
 """Per-phase breakdown of the streaming bench rows.
 
-Runs each streaming query N times after the bench's own warm-up/prime
-sequence and reports, per run: wall seconds, and the engine's own
+Runs each streaming query N times after `bench.prepare_session` and
+reports, per run: wall seconds, and the engine's own
 durationMs phases from StreamingQueryProgress (addBatch, getBatch,
 latestOffset, queryPlanning, walCommit, commitOffsets, triggerExecution)
 summed over the run's micro-batches — the measurement VERDICT r15 item 3
@@ -39,7 +39,6 @@ def main() -> None:
         args = args[2:]
     names = args or STREAMING
 
-    # bench posture since r16: AQE on (production default); env wins for A/Bs
     import __spark_entry__ as e
     import bench
     from pandas_reporter_spark.operators import events
@@ -47,19 +46,7 @@ def main() -> None:
 
     qs = e.queries()
     spark = get_session("stream_profile")
-    bench.run(qs["q_tpch_q1"](spark, SF_DIR))
-    try:
-        from pandas_reporter_spark.tables import relayout
-
-        relayout(spark, SF_DIR)
-    except Exception:
-        pass
-    try:
-        from pandas_reporter_spark.ingest import ingest
-
-        ingest(spark, SF_DIR)
-    except Exception:
-        pass
+    bench.prepare_session(spark, SF_DIR, [qs[n] for n in names])
 
     out: dict[str, list] = {}
     for name in names:

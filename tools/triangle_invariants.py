@@ -95,7 +95,6 @@ def check(spark, sf_dir, alt_width=37):
 def main():
     out_path = sys.argv[1]
     sf_dirs = dict(a.split("=", 1) for a in sys.argv[2:])
-    os.environ.setdefault("SPARK_GRAFT_AQE", "false")
 
     from pandas_reporter_spark.registry import load_all
     from pandas_reporter_spark.session import get_session
