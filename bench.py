@@ -246,6 +246,12 @@ def _step(name: str):
         print(f"prep: {name} FAILED: {exc!r}", file=sys.stderr)
 
 
+def _print_unprimed(step: str, report: dict) -> None:
+    for name, rep in report.items():
+        if not rep["primed"]:
+            print(f"{step}: {name} not primed: {rep['reason']}", file=sys.stderr)
+
+
 def prepare_session(spark, sf_dir: str, fns) -> None:
     """Bring `spark` to the steady state the bench times, for `sf_dir`.
 
@@ -257,7 +263,8 @@ def prepare_session(spark, sf_dir: str, fns) -> None:
     1. warm-up run of q_tpch_q1 (JVM + parquet footer cache);
     2. `tables.relayout`: the driver snapshot is ONE row group per
        table, so every scan and shuffle-map stage would be a single
-       task, a layout no real ingest produces;
+       task, a layout no real ingest produces; unprimed copies are
+       named on stderr with their reason (the table reads its file);
     3. `ingest`: every at-rest sidecar, unprimed ones named on stderr
        with their reason (consumers self-derive);
     4. the one-time input builds of q_join_bucketed and
@@ -277,11 +284,9 @@ def prepare_session(spark, sf_dir: str, fns) -> None:
     with _step("warm-up"):
         run(qs["q_tpch_q1"](spark, sf_dir))
     with _step("relayout"):
-        relayout(spark, sf_dir)
+        _print_unprimed("relayout", relayout(spark, sf_dir))
     with _step("ingest"):
-        for name, rep in ingest(spark, sf_dir).items():
-            if not rep["primed"]:
-                print(f"ingest: {name} not primed: {rep['reason']}", file=sys.stderr)
+        _print_unprimed("ingest", ingest(spark, sf_dir))
     for prime in ("q_join_bucketed", "q_partition_pruned_scan"):
         with _step(prime):
             qs[prime](spark, sf_dir).limit(1).collect()

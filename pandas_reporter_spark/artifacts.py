@@ -18,10 +18,13 @@ artifact shares one lifecycle, implemented once here:
    logs a warning and is reported with its reason. Consumers then
    self-derive, so a failure costs speed, never correctness.
 
-Each sidecar module calls ``declare`` once with its name, source
-table, directory name and ``build``/``open`` functions, plus ``after``
-when its build reads another artifact (``ingest`` starts it only once
-those are registered or have failed). Consumers call
+Each sidecar module, and ``tables`` for its relayout copies, calls
+``declare`` once with its name, source table, directory name and
+``build``/``open`` functions, plus ``after`` when its build reads
+another artifact. ``run`` is the one runner: it builds a list of
+artifacts side by side and starts each only once its ``after``
+artifacts are registered or have failed; ``ingest`` runs the sidecars
+through it and ``tables.relayout`` the copies. Consumers call
 ``get(spark, sf, name)``: a dict lookup, no filesystem access and no
 Spark job on the query path.
 
@@ -39,12 +42,12 @@ import os
 import shutil
 import time
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass
 from pathlib import Path
 
 from py4j.protocol import Py4JError
-
-from pandas_reporter_spark.tables import _session_key, src_mtime
+from pyspark.util import inheritable_thread_target
 
 log = logging.getLogger(__name__)
 
@@ -85,8 +88,8 @@ class Artifact:
 
 #: name -> declaration (filled at operator-module import)
 DECLARED: dict[str, Artifact] = {}
-#: (session_key, sf, name) -> the value `open` returned
-_REGISTERED: dict[tuple, object] = {}
+#: (session_key, sf, name) -> (its directory, the value `open` returned)
+_REGISTERED: dict[tuple, tuple[str, object]] = {}
 #: query name -> the handle its previous call left alive
 _HELD: dict[str, object] = {}
 
@@ -97,17 +100,33 @@ def declare(
     DECLARED[name] = Artifact(name, source, kind, build, open, suffix, after)
 
 
+def _key(spark, sf: str, name: str) -> tuple:
+    # imported here: `tables` imports this module to declare its copies
+    from pandas_reporter_spark.tables import _session_key
+
+    return (_session_key(spark), sf, name)
+
+
 def get(spark, sf: str, name: str):
     """The registered artifact value, or None (consumer self-derives)."""
-    return _REGISTERED.get((_session_key(spark), sf, name))
+    hit = _REGISTERED.get(_key(spark, sf, name))
+    return None if hit is None else hit[1]
+
+
+def lookup(session_key: str, sf: str, name: str) -> tuple[str, object] | None:
+    """(directory, value) of a registered artifact, or None: `get` for a
+    caller that already holds the session key or reads the files."""
+    return _REGISTERED.get((session_key, sf, name))
 
 
 def drop(spark, sf: str, name: str) -> None:
     """Unregister an artifact for this session (files stay on disk)."""
-    _REGISTERED.pop((_session_key(spark), sf, name), None)
+    _REGISTERED.pop(_key(spark, sf, name), None)
 
 
 def path(spark, sf: str, name: str, base: str = "/dev/shm") -> str:
+    from pandas_reporter_spark.tables import src_mtime
+
     a = DECLARED[name]
     tag = f"{os.path.basename(os.path.normpath(sf))}_{src_mtime(sf, a.source)}"
     extra = a.suffix(spark, sf) if a.suffix else ""
@@ -124,7 +143,7 @@ def build(spark, sf: str, name: str, base: str = "/dev/shm") -> dict:
     reason}: `ok` is False when a step raised, `primed` is True when
     consumers will read the artifact, `reason` says why not."""
     t0 = time.time()
-    key = (_session_key(spark), sf, name)
+    key = _key(spark, sf, name)
     ok, reason, err, tmp = True, None, None, None
     if key not in _REGISTERED:
         a = DECLARED[name]
@@ -146,7 +165,7 @@ def build(spark, sf: str, name: str, base: str = "/dev/shm") -> dict:
                         # concurrent build's commit and is kept.
                         shutil.rmtree(out, ignore_errors=True)
                         os.rename(tmp, out)
-            _REGISTERED[key] = a.open(spark, sf, out)
+            _REGISTERED[key] = (out, a.open(spark, sf, out))
         except Invalid as e:
             reason = f"rejected: {e}"
         except Exception as e:
@@ -164,6 +183,40 @@ def build(spark, sf: str, name: str, base: str = "/dev/shm") -> dict:
         "seconds": round(time.time() - t0, 3),
         "reason": reason,
     }
+
+
+def run(spark, sf: str, names, base: str = "/dev/shm") -> dict[str, dict]:
+    """Build (or reuse) and register `names` for snapshot `sf` side by
+    side, one thread each on a pool as wide as the session's
+    ``defaultParallelism``, so Spark's scheduler fills the slots one
+    build's small jobs leave idle with another build's tasks. A build
+    starts once its declared ``after`` artifacts are registered or have
+    failed. Returns {name: `build`'s report entry} in `names` order;
+    builds overlap, so the per-artifact ``seconds`` can sum to more
+    than the call's wall time."""
+
+    def build_after(deps, name):
+        wait(deps)
+        return build(spark, sf, name, base)
+
+    futures = {}
+    with ThreadPoolExecutor(spark.sparkContext.defaultParallelism) as pool:
+
+        # an artifact is queued after its `after` artifacts, so a build
+        # that waits on them waits only on builds already running
+        # (the queue is FIFO) and the pool cannot deadlock
+        def submit(name):
+            if name not in futures:
+                deps = [submit(d) for d in DECLARED[name].after]
+                # wrapped per build: each gets its own copy of the
+                # caller's local properties (job group, pool, tags)
+                task = inheritable_thread_target(spark)(build_after)
+                futures[name] = pool.submit(task, deps, name)
+            return futures[name]
+
+        for name in names:
+            submit(name)
+    return {name: futures[name].result() for name in names}
 
 
 def _retire(handle) -> None:

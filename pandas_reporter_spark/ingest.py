@@ -8,13 +8,12 @@ commit, validate before register), idempotently, and reports what it
 built. Consumers keep their self-derive fallbacks: a failed or
 rejected artifact costs only the primed speed, never correctness.
 
-The builds run side by side, one thread each on a pool as wide as the
-session's ``defaultParallelism``, so Spark's scheduler fills the slots
-one build's small jobs leave idle with another build's tasks. The only
-ordering is an artifact's declared ``after``: ``vocab_stats`` starts
-once ``doc_tokens`` is registered (or has failed), because it derives
-from it when primed. No build changes a session conf, which is what
-makes running them together safe (pinned in tests/test_ingest.py).
+The builds run side by side on ``artifacts.run``, the runner
+``tables.relayout`` shares. The only ordering is an artifact's
+declared ``after``: ``vocab_stats`` starts once ``doc_tokens`` is
+registered (or has failed), because it derives from it when primed.
+No build changes a session conf, which is what makes running them
+together safe (pinned in tests/test_ingest.py).
 
 The report is ``{name: {ok, primed, seconds, reason}}`` in
 ``MATERIALIZERS`` order. ``ok`` is False when a build or read step
@@ -31,14 +30,12 @@ and payoff table lives in SCALING.md ("The at-rest ingest contract").
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor, wait
-
 from pyspark.sql import SparkSession
-from pyspark.util import inheritable_thread_target
 
 from pandas_reporter_spark import artifacts
 
-#: Every declared artifact, in report order, with its consumer queries.
+#: Every declared sidecar, in report order, with its consumer queries
+#: (the other declared artifacts are `tables.LAYOUTS`).
 MATERIALIZERS: tuple[str, ...] = (
     # q_text_tokens tfidf langid logprob kl_divergence quality_classifier
     # perplexity_bigram, q_pipeline_dsir, q_sketch_cms heavy_hitters
@@ -78,26 +75,4 @@ def ingest(spark: SparkSession, sf: str) -> dict[str, dict]:
     from pandas_reporter_spark.registry import load_all
 
     load_all()  # operator-module import runs every declare()
-
-    def build(deps, name):
-        wait(deps)
-        return artifacts.build(spark, sf, name)
-
-    futures = {}
-    with ThreadPoolExecutor(spark.sparkContext.defaultParallelism) as pool:
-
-        # an artifact is queued after its `after` artifacts, so a build
-        # that waits on them waits only on builds already running
-        # (the queue is FIFO) and the pool cannot deadlock
-        def submit(name):
-            if name not in futures:
-                deps = [submit(d) for d in artifacts.DECLARED[name].after]
-                # wrapped per build: each gets its own copy of the
-                # caller's local properties (job group, pool, tags)
-                task = inheritable_thread_target(spark)(build)
-                futures[name] = pool.submit(task, deps, name)
-            return futures[name]
-
-        for name in MATERIALIZERS:
-            submit(name)
-    return {name: futures[name].result() for name in MATERIALIZERS}
+    return artifacts.run(spark, sf, MATERIALIZERS)

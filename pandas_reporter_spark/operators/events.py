@@ -157,7 +157,7 @@ def q_events_session(spark, sf):
 # ---------------------------------------------------------------------------
 
 
-#: raw (pre-normalization) events schema per (session, sf) — see
+#: raw (pre-normalization) events schema per (session, files) — see
 #: _read_events_stream
 _RAW_SCHEMA_CACHE: dict = {}
 
@@ -279,68 +279,30 @@ def _read_events_stream(spark, sf: str) -> DataFrame:
     Shares `tables.normalize_ts` with the batch loader so the two paths
     can't drift: whatever physical ts type the driver snapshot writes
     (ns-INT64, µs-NTZ, µs-LTZ), the stream surfaces event-time as LTZ —
-    `withWatermark` rejects anything else.
+    `withWatermark` rejects anything else. The files are the ones
+    `tables.stream_source` names: the session's multi-file relayout
+    copy (ts already a TIMESTAMP there) or the snapshot.
     """
     import os
 
-    from pandas_reporter_spark import tables
-    from pandas_reporter_spark.tables import _session_key
+    from pandas_reporter_spark.tables import _session_key, stream_source
 
-    batch = load(spark, sf, "events")  # sets nanosAsLong conf
-    # Prefer the multi-file relayout copy when the session built one:
-    # the driver snapshot is ONE row group, so a stream sourced from it
-    # runs its entire map side (scan → filter/join → shuffle write) as
-    # a SINGLE task per micro-batch — the dominant term of the
-    # streaming bench floor (addBatch 599 ms of a 1.24 s enrich run,
-    # measured sf0.1). A real landing dir is many files by
-    # construction; the relayout copy reproduces that shape.
-    lay = tables._RELAYOUT_DIRS.get(sf)
-    if lay is not None:
-        dst = os.path.join(lay, "events")
-        if os.path.exists(os.path.join(dst, "_SUCCESS")):
-            key = (_session_key(spark), dst)
-            schema = _RAW_SCHEMA_CACHE.get(key)
-            if schema is None:
-                schema = spark.read.parquet(dst).schema
-                _RAW_SCHEMA_CACHE[key] = schema
-            s = (
-                spark.readStream.schema(schema)
-                .option("pathGlobFilter", "*.parquet")  # skip _SUCCESS
-                .parquet(dst)
-            )
-            # ts already normalized by relayout; normalize_ts is a
-            # no-op on a proper timestamp, kept for uniformity
-            return normalize_ts(s).select(*batch.columns)
-    key = (_session_key(spark), sf)
+    batch = load(spark, sf, "events")  # on the snapshot, sets nanosAsLong
+    src, glob = stream_source(spark, sf, "events")
+    files = os.path.join(src, glob)
+    key = (_session_key(spark), files)
     raw_schema = _RAW_SCHEMA_CACHE.get(key)
     if raw_schema is None:
-        # footer-only read; memoized like tables._LOAD_CACHE (the file
-        # is immutable for a session, and every streaming query paid
+        # footer-only read; memoized like tables._LOAD_CACHE (the files
+        # are immutable for a session, and every streaming query paid
         # this listing+inference again)
-        raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
+        raw_schema = spark.read.parquet(files).schema
         _RAW_SCHEMA_CACHE[key] = raw_schema
-    # The file stream source monitors a DIRECTORY (on a cluster: the
-    # landing dir new files drop into). Two physical layouts exist:
-    # the driver snapshot is a single FILE at {sf}/events.parquet
-    # (monitor {sf}, glob to that one name), while writer-produced
-    # tables — the make_sfn synthetic trees, any real ingest — are a
-    # DIRECTORY of part files (monitor the directory itself, glob
-    # *.parquet to skip _SUCCESS). Globbing the file name against a
-    # directory layout matches ZERO part files and silently streamed
-    # nothing — caught by the sf1 oracle sweep (round 8).
-    src = os.path.join(sf, "events.parquet")
-    if os.path.isdir(src):
-        s = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(src)
-        )
-    else:
-        s = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf)
-        )
+    s = (
+        spark.readStream.schema(raw_schema)
+        .option("pathGlobFilter", glob)
+        .parquet(src)
+    )
     return normalize_ts(s).select(*batch.columns)
 
 

@@ -2842,38 +2842,6 @@ _TOPKB_Q = 8
 _TOPKB_K = 10
 
 
-def topk_batch_legs(spark, sf, n_q: int = _TOPKB_Q, k: int = _TOPKB_K):
-    """Batch top-k as n_q concurrent TakeOrderedAndProject legs — the
-    q_embed_matryoshka-measured regime for SMALL batches: each leg
-    keeps a local top-k per task and ships k x n_tasks rows to the
-    driver merge; no corpus-width shuffle at any batch size, at the
-    cost of one scan per query (noop-cached across legs by the OS
-    page cache / parquet footer reuse)."""
-    configure(spark)
-    e = load(spark, sf, "embeddings")
-    legs = []
-    for qid in range(n_q):
-        q = e.filter(F.col("vec_id") == qid).select(
-            F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
-        )
-        legs.append(
-            e.filter(F.col("vec_id") != qid)
-            .crossJoin(F.broadcast(q))
-            .select(
-                "qid",
-                "vec_id",
-                "label",
-                cosine(F.col("embedding"), F.col("qv")).alias("c"),
-            )
-            .orderBy(F.col("c").desc(), "vec_id")
-            .limit(k)
-        )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out
-
-
 def topk_batch_salted(spark, sf, n_q: int = _TOPKB_Q, k: int = _TOPKB_K):
     """Batch top-k as ONE corpus scan + two-phase rank — the LARGE-
     batch regime: the scan crossJoins the broadcast query block
@@ -2952,8 +2920,8 @@ def q_similarity_topk_batch(spark, sf):
     legs, and it is flat in batch size (0.38 -> 0.93 s from batch 8
     to 64 at sf10) because the scoring loop amortizes the scan across
     the whole query block while nothing corpus-width ever shuffles.
-    The JVM forms remain as engine paths (topk_batch_legs /
-    topk_batch_salted) and as the A/B's equality oracle.
+    The salted JVM form remains as an engine path (topk_batch_salted)
+    and as the A/B's equality oracle.
 
     Reference parity: none (driver-mandated similarity surface).
     """

@@ -3319,40 +3319,17 @@ _DOCS_STREAM_SCHEMA = (
 
 
 def _read_documents_stream(spark, sf: str):
-    """readStream over the documents corpus, preferring the session's
-    multi-file relayout copy (events._read_events_stream's lesson,
-    applied to the document streams): the driver snapshot is ONE
-    row-group file, so a stream sourced from it runs its entire map
-    side — scan → score/key → shuffle write — as a SINGLE task per
-    micro-batch no matter how many cores exist. A real landing dir is
-    many files by construction; the relayout copy reproduces that
-    shape. Identical rows either way; fork layout per source shape
-    (driver snapshot = single FILE {sf}/documents.parquet; synthetic
-    trees = a DIRECTORY of part files)."""
-    import os
+    """readStream over the documents corpus, from the files
+    `tables.stream_source` names: the session's multi-file relayout
+    copy when it has one, else the snapshot. Identical rows either
+    way."""
+    from pandas_reporter_spark.tables import stream_source
 
-    from pandas_reporter_spark import tables
-
-    lay = tables._RELAYOUT_DIRS.get(sf)
-    if lay is not None:
-        dst = os.path.join(lay, "documents")
-        if os.path.exists(os.path.join(dst, "_SUCCESS")):
-            return (
-                spark.readStream.schema(_DOCS_STREAM_SCHEMA)
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(dst)
-            )
-    p = os.path.join(sf, "documents.parquet")
-    if os.path.isdir(p):
-        return (
-            spark.readStream.schema(_DOCS_STREAM_SCHEMA)
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(p)
-        )
+    src, glob = stream_source(spark, sf, "documents")
     return (
         spark.readStream.schema(_DOCS_STREAM_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
+        .option("pathGlobFilter", glob)
+        .parquet(src)
     )
 
 
@@ -4284,8 +4261,6 @@ def _docq_rel(spark, sf):
         ).alias("q"),
     )
 
-
-_CURR_STAGES = 8
 
 _CURRICULUM_ORACLE = f"""
     -- curriculum staging by exact octiles of the length-normalized

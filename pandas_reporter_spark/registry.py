@@ -102,6 +102,12 @@ _PRIORITY = (
     # are already in (1)), and q_source_cr_pivot / q_census_workflow
     # reach the new path through sources.crjson.cr_frame (outside the
     # module-local audit). The six take the last six (2) slots.
+    # The relayout copies then moved onto the artifact lifecycle, and
+    # both stream readers take their files from tables.stream_source:
+    # nine stream closures changed (stale, 42nd-50th; q_stream_file_sink
+    # is already in (1)). They take the nine slots that held unflagged
+    # queries: q_varrep_source, q_source_cr_pivot, q_census_workflow
+    # and all six (2) entries, so the prefix is exactly the 50 stale.
     # (1) doc_tokens
     "q_pipeline_dsir",
     "q_sketch_cms",
@@ -150,21 +156,21 @@ _PRIORITY = (
     "q_stream_file_sink",
     # (1) replicate MOE as one SQL expression
     "q_varrep_moe",
-    "q_varrep_source",
     # (1) driver-built frames as one Arrow local relation
-    "q_source_cr_pivot",
-    "q_census_workflow",
     "q_search_eval_ndcg",
     "q_text_bpe_train",
     "q_text_overlap_matrix",
     "q_text_vocab_coverage",
-    # (2) r11 cohort, then r12 alphabetical
-    "q_sort",
-    "q_str_funcs",
-    "q_str_substr",
-    "q_topk",
-    "q_topk_per_group",
-    "q_union_all",
+    # (1) stream sources: relayout copies via tables.stream_source
+    "q_events_late",
+    "q_events_stateful",
+    "q_events_stream_dedup",
+    "q_events_stream_session",
+    "q_stream_enrich",
+    "q_stream_stream_join",
+    "q_stream_topk",
+    "q_stream_quality_gate",
+    "q_stream_sample_weighted",
 )
 
 # Earlier rotations (r2-r6) and their slot-by-slot rationale live in

@@ -6,6 +6,8 @@ Engine posture (SURVEY §4.3-4.4):
 - AQE on (runtime re-plan, skew-join handling, partition coalescing).
 - UTC session timezone (oracle timestamps are tz-naive UTC).
 - Arrow for any pandas interchange (vectorized Pandas UDF path).
+- TIMESTAMP(NANOS) parquet read as long (events.ts; `tables.load`
+  normalizes it).
 - Shuffle partitions sized to cores, not the 200 default: correct for
   local[N]; on a real cluster this is set per-deploy (AQE coalesces
   down when partitions run small, so erring high is safe at scale).
@@ -47,6 +49,10 @@ _STATIC_CONFS = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # events.parquet's ts is TIMESTAMP(NANOS), which the parquet reader
+    # rejects without this (`tables.load`); set with the posture, so the
+    # side-by-side relayout builds read events without changing a conf
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 
@@ -127,6 +133,28 @@ def scaled_partitions(
     return max(floor, math.ceil(max(n_rows, 1) / rows_per_part))
 
 
+def _driver_mem_default(phys_bytes: int | None = None) -> str:
+    """The driver heap `get_session` asks for unless
+    SPARK_GRAFT_DRIVER_MEM says otherwise: half the host's physical
+    memory (`phys_bytes`, read from the OS when None) in whole GiB,
+    at least 1g and at most 48g.
+
+    local[N] is ONE JVM doing driver + all executor work: 32 concurrent
+    tasks' shuffle/broadcast/codegen state in a 16g heap caused
+    measurable GC drag on a long query sequence (bench headline 45.9s
+    at 16g -> 39.8s at 48g on a 32-core host, with the heavy tail —
+    fuzzy dedup, LSH joins — improving up to 2x). A fixed 48g ignores
+    the host, though: on a 15 GB VM one sf0.01 bench JVM grew to ~11 GB
+    RSS, and a second Spark process on the host lost its JVM. Half
+    leaves the other half to the JVM's off-heap memory, the Python
+    workers and the tmpfs artifacts. On a real cluster the equivalent
+    knobs are executor memory and spark.memory.fraction, set
+    per-deploy."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, phys_bytes // 2**31))}g"
+
+
 def get_session(app_name: str = "pandas_reporter_spark") -> SparkSession:
     """Build (or fetch) the engine's local session.
 
@@ -138,14 +166,10 @@ def get_session(app_name: str = "pandas_reporter_spark") -> SparkSession:
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        # local[N] is ONE JVM doing driver + all executor work: 32
-        # concurrent tasks' shuffle/broadcast/codegen state in a 16g
-        # heap caused measurable GC drag on a long query sequence
-        # (bench headline 45.9s at 16g -> 39.8s at 48g, with the heavy
-        # tail — fuzzy dedup, LSH joins — improving up to 2x). On a
-        # real cluster the equivalent knobs are executor memory and
-        # spark.memory.fraction, set per-deploy.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_mem_default(),
+        )
         .config("spark.ui.enabled", "false")
         # 16 MiB, not the 64 MiB of rounds 2-6: the sf1 scale run
         # (tools/scale_bench.py, round 7) caught the generous setting

@@ -7,7 +7,6 @@ lineitem events documents embeddings — one parquet each under
 
 from __future__ import annotations
 
-import logging
 import os
 from typing import Sequence, Union
 
@@ -16,7 +15,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
-log = logging.getLogger(__name__)
+from pandas_reporter_spark import artifacts
 
 TABLES = (
     "region",
@@ -30,11 +29,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-# Small dimensions worth broadcasting in joins (≤ a few thousand rows at
-# any SF that fits a dimension role; at 100 TB these remain < the 64 MB
-# broadcast threshold).
-BROADCAST_DIMS = {"region", "nation", "supplier"}
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
@@ -69,11 +63,6 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-#: sf_dir -> relayout dir holding multi-file copies of the big tables
-#: (see `relayout`). Process-local: only a caller that explicitly ran
-#: `relayout` (the bench) ever reads the copies.
-_RELAYOUT_DIRS: dict[str, str] = {}
-
 #: Output file count per re-laid-out table, sized so each file is a
 #: few hundred KB to a few MB at sf0.1 — enough scan tasks to feed the
 #: local cores without tiny-file overhead.
@@ -91,9 +80,26 @@ _RELAYOUT_SPLITS = {
 }
 
 
-def relayout(spark: SparkSession, sf: str, base: str = "/dev/shm") -> None:
-    """Rewrite the big driver tables as multi-file parquet and redirect
-    subsequent `load` calls for this sf_dir to the copies.
+def _declare_layout(table: str, n: int) -> str:
+    name = f"layout_{table}"
+
+    def build(spark, sf, path):
+        # `load` normalizes events.ts, so the copy stores a TIMESTAMP
+        load(spark, sf, table).repartition(n).write.parquet(path)
+
+    artifacts.declare(name, table, name, build)
+    return name
+
+
+#: The relayout copies, one artifact per table in `_RELAYOUT_SPLITS`.
+LAYOUTS = tuple(_declare_layout(t, n) for t, n in _RELAYOUT_SPLITS.items())
+
+
+def relayout(
+    spark: SparkSession, sf: str, base: str = "/dev/shm"
+) -> dict[str, dict]:
+    """Build the multi-file copies of the big driver tables for `sf`
+    and make `load` (and `stream_source`) read them in this session.
 
     WHY: the driver snapshots are one file with ONE row group per
     table, so every scan — and, worse, every shuffle-map stage over a
@@ -106,48 +112,14 @@ def relayout(spark: SparkSession, sf: str, base: str = "/dev/shm") -> None:
     already pays for the bucketed-join and partition-pruned inputs —
     a cluster pays it at ingest, not per query.
 
-    Identical data, different physical layout: results are unaffected
-    (every registered aggregate is accumulation-order independent by
-    construction — tables.dsum). Idempotent per (sf, base); failures
-    fall back to the original files."""
-    if sf in _RELAYOUT_DIRS or not os.path.isdir(base):
-        return
-    # fingerprint the source snapshot's mtime into the copy path: a
-    # regenerated testdata dir (round 4 changed the events physical
-    # type) must never silently reuse a stale tmpfs layout
-    try:
-        src_tag = int(
-            max(
-                os.path.getmtime(os.path.join(sf, f"{n}.parquet"))
-                for n in _RELAYOUT_SPLITS
-                if os.path.exists(os.path.join(sf, f"{n}.parquet"))
-            )
-        )
-    except (OSError, ValueError):
-        src_tag = 0
-    out = os.path.join(
-        base,
-        f"prs_layout_{os.path.basename(os.path.normpath(sf))}_{src_tag}",
-    )
-    try:
-        for name, n in _RELAYOUT_SPLITS.items():
-            src = os.path.join(sf, f"{name}.parquet")
-            dst = os.path.join(out, name)
-            if not os.path.exists(src) or os.path.exists(os.path.join(dst, "_SUCCESS")):
-                continue
-            if name == "events":
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-                df = normalize_ts(spark.read.parquet(src))
-            else:
-                df = spark.read.parquet(src)
-            df.repartition(n).write.mode("overwrite").parquet(dst)
-        _RELAYOUT_DIRS[sf] = out
-    except Exception as e:  # read-only /dev/shm, no space: originals still work
-        log.warning("relayout of %s failed, reading the originals: %s", sf, e, exc_info=e)
-        return
-    # drop memoized single-file scans for this sf so reads re-resolve
-    for key in [k for k in _LOAD_CACHE if k[1] == sf]:
-        del _LOAD_CACHE[key]
+    Each copy is an artifact (`LAYOUTS`) on the one lifecycle in
+    `artifacts`, built side by side by `artifacts.run` like `ingest`'s
+    sidecars, and the report has `ingest`'s shape: {name: {ok, primed,
+    seconds, reason}}. Identical data, different physical layout:
+    results are unaffected (every registered aggregate is
+    accumulation-order independent by construction — tables.dsum). A
+    copy that fails leaves its table on the original file."""
+    return artifacts.run(spark, sf, LAYOUTS, base)
 
 
 def src_mtime(sf: str, name: str) -> int:
@@ -342,34 +314,58 @@ def load(spark: SparkSession, sf: str, name: str) -> DataFrame:
     converter), so a save/restore scoped to DataFrame creation would
     make a later ACTION on an ns-file frame fail. No driver table other
     than events carries a nanos column, and an unrelated nanos read
-    surfacing as long is a visible type, not silent corruption.
+    surfacing as long is a visible type, not silent corruption. It is
+    part of the session posture (`session.configure`), so on a
+    configured session this set changes nothing; it stays for sessions
+    that read a table before any query configured them.
+
+    Served, first match: the bucketed catalog table
+    (`use_bucketed_layout`), the session's relayout copy (`relayout`),
+    the memoized scan of the snapshot file.
     """
     key = (_session_key(spark), sf, name)
+    bucketed = _BUCKETED_TABLES.get(key[:2], {})
+    # a relayout copy's registered frame is its memoized scan
+    copy = None if name in bucketed else artifacts.lookup(*key[:2], f"layout_{name}")
+    if copy is not None:
+        return copy[1]
     cached = _LOAD_CACHE.get(key)
     if cached is not None:
         return cached
-    bucketed = _BUCKETED_TABLES.get((_session_key(spark), sf))
-    if bucketed is not None and name in bucketed:
-        df = spark.table(bucketed[name])
-        _LOAD_CACHE[key] = df
-        return df
-    lay = _RELAYOUT_DIRS.get(sf)
-    if lay is not None and name in _RELAYOUT_SPLITS:
-        dst = os.path.join(lay, name)
-        if os.path.exists(os.path.join(dst, "_SUCCESS")):
-            # multi-file copy written by `relayout` (ts already
-            # normalized there for events)
-            df = spark.read.parquet(dst)
-            _LOAD_CACHE[key] = df
-            return df
     path = os.path.join(sf, f"{name}.parquet")
-    if name == "events":
+    if name in bucketed:
+        df = spark.table(bucketed[name])
+    elif name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = normalize_ts(spark.read.parquet(path))
     else:
         df = spark.read.parquet(path)
     _LOAD_CACHE[key] = df
     return df
+
+
+def stream_source(spark: SparkSession, sf: str, name: str) -> tuple[str, str]:
+    """(directory, pathGlobFilter) for a file stream over table `name`.
+
+    The session's relayout copy when it has one: the driver snapshot
+    is ONE row group, so a stream sourced from it runs its entire map
+    side (scan → filter/join → shuffle write) as a SINGLE task per
+    micro-batch — the dominant term of the streaming bench floor
+    (addBatch 599 ms of a 1.24 s enrich run, measured sf0.1). A real
+    landing dir is many files by construction; the copy reproduces
+    that shape. Otherwise the table itself: a DIRECTORY of part files
+    (the make_sfn synthetic trees, any real ingest) is monitored as
+    is, and the snapshot's single FILE through its parent directory,
+    globbed to its name. Globbing the file name against a directory
+    layout matches ZERO part files and silently streamed nothing —
+    caught by the sf1 oracle sweep (round 8)."""
+    copy = artifacts.lookup(_session_key(spark), sf, f"layout_{name}")
+    if copy is not None:
+        return copy[0], "*.parquet"
+    path = os.path.join(sf, f"{name}.parquet")
+    if os.path.isdir(path):
+        return path, "*.parquet"
+    return sf, f"{name}.parquet"
 
 
 #: Memoized unresolved-scan DataFrames. `spark.read.parquet` performs a

@@ -1,16 +1,17 @@
 """The at-rest ingest contract and the artifact lifecycle.
 
-Coverage: ``ingest.MATERIALIZERS`` lists every declared artifact, and
-no hand-rolled sidecar cache or handle list survives outside
-``pandas_reporter_spark.artifacts``. Behavior: ingest() builds
-everything side by side on a tiny snapshot, starts an artifact only
-after its declared ``after`` artifacts, and the consumers see their
-artifacts; no build changes a session conf (what makes the concurrent
-builds safe); torn or failing builds are rejected loudly and leave
-consumers on their self-derive plans; every artifact's primed result
-equals its unprimed one; the partitioned writes stay at the session's
-width; per-query handles retire only their own query's predecessor,
-and interpreter exit retires the last ones.
+Coverage: every declared artifact is one of ``ingest.MATERIALIZERS``
+or ``tables.LAYOUTS``, and no hand-rolled sidecar cache or handle list
+survives outside ``pandas_reporter_spark.artifacts``. Behavior:
+ingest() builds everything side by side on a tiny snapshot, starts an
+artifact only after its declared ``after`` artifacts, and the
+consumers see their artifacts; no build, sidecar or relayout copy,
+changes a session conf (what makes the concurrent builds safe); torn
+or failing builds are rejected loudly and leave consumers on their
+self-derive plans; every artifact's primed result equals its unprimed
+one; the partitioned writes stay at the session's width; per-query
+handles retire only their own query's predecessor, and interpreter
+exit retires the last ones.
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ from pandas_reporter_spark import artifacts
 from pandas_reporter_spark import ingest as ing
 from pandas_reporter_spark.registry import QUERIES, load_all
 from pandas_reporter_spark.session import configure, work_partitions
+from pandas_reporter_spark.tables import _RELAYOUT_SPLITS, LAYOUTS
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
@@ -88,10 +90,14 @@ def _result(spark, sf, q):
 
 
 def test_materializers_list_every_declared_artifact():
+    """Each declared artifact belongs to exactly one of ingest's
+    sidecars or relayout's copies."""
     load_all()
     assert len(set(ing.MATERIALIZERS)) == len(ing.MATERIALIZERS)
-    assert set(ing.MATERIALIZERS) == set(artifacts.DECLARED)
-    assert set(CONSUMER) == set(artifacts.DECLARED)
+    assert len(set(LAYOUTS)) == len(LAYOUTS) == len(_RELAYOUT_SPLITS)
+    assert not set(ing.MATERIALIZERS) & set(LAYOUTS)
+    assert set(ing.MATERIALIZERS) | set(LAYOUTS) == set(artifacts.DECLARED)
+    assert set(CONSUMER) == set(ing.MATERIALIZERS)
     for a in artifacts.DECLARED.values():
         assert set(a.after) <= set(artifacts.DECLARED) - {a.name}, a
 
@@ -189,7 +195,9 @@ def test_ingest_dependency_chain_longer_than_pool(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(ing, "MATERIALIZERS", tuple(reversed(names)))
     real = artifacts.build
     monkeypatch.setattr(
-        artifacts, "build", lambda *a: real(*a, base=str(tmp_path))
+        artifacts,
+        "build",
+        lambda spark, sf, name, _base: real(spark, sf, name, str(tmp_path)),
     )
     sf, out = str(tmp_path / "fake_sf"), {}
     interval = sys.getswitchinterval()
@@ -345,12 +353,13 @@ def conf_base(tmp_path_factory):
     return str(tmp_path_factory.mktemp("conf_base"))
 
 
-@pytest.mark.parametrize("name", ing.MATERIALIZERS)
+@pytest.mark.parametrize("name", ing.MATERIALIZERS + LAYOUTS)
 def test_build_leaves_session_confs_unchanged(spark, equality_sf, conf_base, name):
-    """ingest runs the builds side by side in one session, which is safe
-    only while no build changes a conf another build's plan reads: the
-    context conf and the runtime SQL confs are identical around a
-    build (the session is configured first, as every query does)."""
+    """ingest and relayout run their builds side by side in one
+    session, which is safe only while no build changes a conf another
+    build's plan reads: the context conf and the runtime SQL confs are
+    identical around a build (the session is configured first, as
+    every query does)."""
     sf, _ = equality_sf
     load_all()
     configure(spark)

@@ -166,3 +166,17 @@ def test_session_key_propagates_other_errors():
 
     with pytest.raises(RuntimeError):
         _session_key(Broken())
+
+
+def test_driver_heap_default_follows_physical_memory():
+    """Half the host's memory in whole GiB, between 1g and 48g; the
+    default reads the host."""
+    from pandas_reporter_spark.session import _driver_mem_default
+
+    gib = 2**30
+    assert _driver_mem_default(15 * gib) == "7g"
+    assert _driver_mem_default(96 * gib) == "48g"
+    assert _driver_mem_default(512 * gib) == "48g"
+    assert _driver_mem_default(gib) == "1g"
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert _driver_mem_default() == _driver_mem_default(host)

@@ -9,9 +9,11 @@ from test_basic.py:221-234 and test_censusapi.py:15-34.
 
 from __future__ import annotations
 
+import gc
 import json
 import operator
 import os
+import threading
 from functools import reduce
 
 import pytest
@@ -370,7 +372,15 @@ def test_varrep_frame_matches_column_formula(spark):
 def test_varrep_moe_builds_in_few_round_trips(spark, monkeypatch):
     """Building the 80-replicate query is a handful of JVM calls, not
     one or more per Column node (~1,600 built as Columns, and
-    11,000-13,000 with call-site capture on)."""
+    11,000-13,000 with call-site capture on).
+
+    Only the building thread's calls count. py4j tells the JVM about
+    every collected JavaObject with a memory-delete command (`m\nd\n`),
+    sent through the same `send_command` by its finalizer thread: a
+    backlog from earlier tests' objects, drained during the call, once
+    counted 556. No collection runs during the call either, so none
+    can add to that backlog (or, where deletes are sent inline, to the
+    count)."""
     from py4j.clientserver import ClientServerConnection
 
     from pandas_reporter_spark.registry import QUERIES, load_all
@@ -380,14 +390,21 @@ def test_varrep_moe_builds_in_few_round_trips(spark, monkeypatch):
     QUERIES["q_varrep_moe"](spark, sf)  # first call caches the scan
     calls = []
     send = ClientServerConnection.send_command
+    builder = threading.get_ident()
 
     def counting(self, command):
-        calls.append(command)
+        if threading.get_ident() == builder:
+            calls.append(command)
         return send(self, command)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counting)
-    QUERIES["q_varrep_moe"](spark, sf)
-    monkeypatch.undo()
+    gc.collect()
+    gc.disable()
+    try:
+        QUERIES["q_varrep_moe"](spark, sf)
+    finally:
+        gc.enable()
+        monkeypatch.undo()
     assert 0 < len(calls) <= 100
 
 

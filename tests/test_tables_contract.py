@@ -88,9 +88,9 @@ def test_table_contract(spark, sf, table):
 def test_relayout_redirect_preserves_data(spark, tmp_path):
     """`tables.relayout` must be invisible to results: same schema, same
     rows, different physical layout (multiple files). Uses its own base
-    dir so the shared-session _RELAYOUT_DIRS state never leaks into
-    other tests."""
-    from pandas_reporter_spark import tables
+    dir and unregisters the copies afterwards, so no other test reads
+    them."""
+    from pandas_reporter_spark import artifacts, tables
 
     sf = "/root/testdata/sf0.001"
     before = {}
@@ -102,10 +102,12 @@ def test_relayout_redirect_preserves_data(spark, tmp_path):
             df.agg({df.columns[0]: "sum"}).collect()[0][0],
         )
     try:
-        tables.relayout(spark, sf, base=str(tmp_path))
-        assert sf in tables._RELAYOUT_DIRS
+        report = tables.relayout(spark, sf, base=str(tmp_path))
+        assert list(report) == list(tables.LAYOUTS)
+        assert all(r["ok"] and r["primed"] for r in report.values()), report
         for t in ("lineitem", "events", "documents"):
             df = load(spark, sf, t)
+            assert df is artifacts.get(spark, sf, f"layout_{t}")
             # redirected scan reads >1 input file
             n_files = len(df.inputFiles())
             assert n_files == tables._RELAYOUT_SPLITS[t], (t, n_files)
@@ -115,23 +117,29 @@ def test_relayout_redirect_preserves_data(spark, tmp_path):
                 df.agg({df.columns[0]: "sum"}).collect()[0][0],
             ) == before[t]
     finally:
-        tables._RELAYOUT_DIRS.pop(sf, None)
-        for k in [k for k in tables._LOAD_CACHE if k[1] == sf]:
-            del tables._LOAD_CACHE[k]
+        for name in tables.LAYOUTS:
+            artifacts.drop(spark, sf, name)
 
 
 def test_relayout_failure_is_logged_and_falls_back(spark, tmp_path, caplog):
-    """A relayout that cannot read its source says so and leaves the
-    sf on its original files."""
-    from pandas_reporter_spark import tables
+    """A relayout that cannot read its source says so, with the
+    exception, and leaves the sf on its original files."""
+    from pandas_reporter_spark import artifacts, tables
 
     sf = tmp_path / "torn_sf"
     sf.mkdir()
     (sf / "lineitem.parquet").write_bytes(b"not parquet")
-    with caplog.at_level("WARNING", logger="pandas_reporter_spark.tables"):
-        tables.relayout(spark, str(sf), base=str(tmp_path))
-    assert str(sf) not in tables._RELAYOUT_DIRS
-    assert any("relayout" in r.getMessage() and r.exc_info for r in caplog.records)
+    with caplog.at_level("WARNING", logger="pandas_reporter_spark.artifacts"):
+        report = tables.relayout(spark, str(sf), base=str(tmp_path))
+    rep = report["layout_lineitem"]
+    assert not rep["ok"] and not rep["primed"] and rep["reason"], rep
+    assert artifacts.get(spark, str(sf), "layout_lineitem") is None
+    assert tables.stream_source(spark, str(sf), "lineitem") == (
+        str(sf), "lineitem.parquet"
+    )
+    assert any(
+        "layout_lineitem" in r.getMessage() and r.exc_info for r in caplog.records
+    )
 
 
 @pytest.mark.parametrize("sf", _SF_DIRS)
