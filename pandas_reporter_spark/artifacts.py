@@ -10,7 +10,8 @@ artifact shares one lifecycle, implemented once here:
 2. reuse: a directory holding ``_SUCCESS`` is complete and is not
    rebuilt;
 3. build: into ``<path>.build-<pid>``, committed by one atomic rename,
-   so no reader ever sees a partial directory;
+   so no reader ever sees a partial directory; a build dir whose
+   process has died is removed before the next build of that path;
 4. validate, then register: the artifact's ``open`` reads it back and
    raises ``Invalid`` if it is torn; only a valid artifact is
    registered under ``(session_key, sf, name)``;
@@ -18,10 +19,11 @@ artifact shares one lifecycle, implemented once here:
    logs a warning and is reported with its reason. Consumers then
    self-derive, so a failure costs speed, never correctness.
 
-Each sidecar module, and ``tables`` for its relayout copies, calls
-``declare`` once with its name, source table, directory name and
-``build``/``open`` functions, plus ``after`` when its build reads
-another artifact. ``run`` is the one runner: it builds a list of
+Each sidecar module, ``tables`` for its relayout copies and its
+bucketed layout, and ``operators.scale`` for its three inputs call
+``declare`` once per artifact with its name, source table, directory
+name and ``build``/``open`` functions, plus ``after`` when its build
+reads another artifact. ``run`` is the one runner: it builds a list of
 artifacts side by side and starts each only once its ``after``
 artifacts are registered or have failed; ``ingest`` runs the sidecars
 through it and ``tables.relayout`` the copies. Consumers call
@@ -31,7 +33,8 @@ Spark job on the query path.
 ``hold`` is the per-query twin for in-session handles (persisted
 frames, tmpfs sink dirs) that must outlive the call that returns a
 lazy plan: each query's next call retires its own previous handle, and
-interpreter exit retires the last ones.
+interpreter exit retires the last ones. ``scratch`` is the one place a
+query gets a directory to write into: a fresh one, held that way.
 """
 
 from __future__ import annotations
@@ -40,6 +43,7 @@ import atexit
 import logging
 import os
 import shutil
+import tempfile
 import time
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor, wait
@@ -137,6 +141,23 @@ def _ready(out: str) -> bool:
     return os.path.exists(os.path.join(out, "_SUCCESS"))
 
 
+def _reap(out: str) -> None:
+    """Remove the ``<out>.build-<pid>`` dirs whose builder has died: no
+    one will commit or remove them. A live pid (or one this process may
+    not signal) is a concurrent build and keeps its dir."""
+    parent, stem = os.path.split(out)
+    for n in os.listdir(parent):
+        head, _, pid = n.rpartition(".build-")
+        if head != stem or not pid.isdigit():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(parent, n), ignore_errors=True)
+        except PermissionError:
+            pass
+
+
 def build(spark, sf: str, name: str, base: str = "/dev/shm") -> dict:
     """Build (or reuse) and register one artifact for snapshot `sf`.
     Idempotent. Returns the ingest report entry {ok, primed, seconds,
@@ -152,6 +173,7 @@ def build(spark, sf: str, name: str, base: str = "/dev/shm") -> dict:
                 raise FileNotFoundError(f"artifact root {base} is not a directory")
             out = path(spark, sf, name, base)
             if not _ready(out):
+                _reap(out)
                 tmp = f"{out}.build-{os.getpid()}"
                 shutil.rmtree(tmp, ignore_errors=True)
                 a.build(spark, sf, tmp)
@@ -238,6 +260,18 @@ def hold(query: str, handle):
     _retire(_HELD.pop(query, None))
     _HELD[query] = handle
     return handle
+
+
+def scratch(query: str) -> str:
+    """A fresh directory for one call of `query` to write into, on
+    tmpfs when present (no fsync on a throwaway write).
+
+    Lifetime: a frame the call returns over this directory is readable
+    until `query`'s next call, which removes the directory; interpreter
+    exit removes the last one. A caller that keeps a result longer
+    collects or persists it first."""
+    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    return hold(query, tempfile.mkdtemp(prefix=f"prs_{query}_", dir=base))
 
 
 @atexit.register

@@ -552,7 +552,6 @@ def q_stream_file_sink(spark, sf):
     keep reruns deterministic.
     """
     import os
-    import tempfile
 
     configure(spark)
     s = _read_events_stream(spark, sf)
@@ -562,22 +561,14 @@ def q_stream_file_sink(spark, sf):
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("win_start"), "event_type", "n")
     )
-    # throwaway run: checkpoint WAL + sink output on tmpfs when present
-    # (the same ~0.4 s fsync saving _run_stream documents); a real
-    # deployment passes durable locations for both. out_dir must
-    # outlive THIS call (the returned frame reads it lazily), so each
-    # invocation retires the PREVIOUS one's dir instead — the persist
-    # handle-retirement discipline applied to tmpfs (without it every
-    # invocation leaked a parquet dir into /dev/shm for the process
-    # lifetime; 36 found after one bench session, r16).
-    import shutil
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    out_dir = artifacts.hold(
-        "q_stream_file_sink",
-        tempfile.mkdtemp(prefix="pr_spark_stream_sink_", dir=base),
-    )
-    ckpt = tempfile.mkdtemp(prefix="pr_spark_stream_ckpt_", dir=base)
+    # throwaway run: checkpoint WAL + sink output in the call's scratch
+    # dir (tmpfs when present: the same ~0.4 s fsync saving _run_stream
+    # documents); a real deployment passes durable locations for both.
+    # The returned frame reads out_dir lazily, so the dir lives until
+    # this query's next call (`artifacts.scratch`).
+    scratch = artifacts.scratch("q_stream_file_sink")
+    out_dir = os.path.join(scratch, "out")
+    ckpt = os.path.join(scratch, "checkpoint")
 
     def write_batch(bdf: DataFrame, batch_id: int) -> None:
         # mode=append + checkpointed batch ids = effectively-once here;
@@ -599,10 +590,6 @@ def q_stream_file_sink(spark, sf):
         )
         q.awaitTermination()
         _capture_progress(q)
-    # the WAL is throwaway once the finite run terminated; out_dir must
-    # SURVIVE — the returned frame reads it lazily (retired by the
-    # NEXT invocation, see above)
-    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(out_dir)
 
 

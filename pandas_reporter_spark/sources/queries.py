@@ -12,10 +12,10 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
+from pandas_reporter_spark import artifacts
 from pandas_reporter_spark.registry import query
 from pandas_reporter_spark.session import configure
 from pandas_reporter_spark.sources.crjson import cr_bulk_frame, cr_frame
@@ -25,22 +25,6 @@ from pandas_reporter_spark.sources.varrep import (
     varrep_frame,
 )
 from pandas_reporter_spark.tables import dsum, load
-
-
-def _scratch(name: str, sf: str) -> str:
-    """Per-process, per-sf scratch dir for roundtrip/compaction sinks.
-
-    A FIXED shared path races any concurrent session (one process's
-    mode('overwrite') deletes part files another is mid-read on — a
-    spurious correctness FAIL) and collides across users on a shared
-    /tmp. Keying by sf basename + pid makes the path private to this
-    process while staying STABLE within it (so Spark's per-path file-
-    listing cache sees overwrites by the same process, which
-    invalidate it correctly)."""
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"prs_{name}_{os.path.basename(os.path.normpath(sf))}_{os.getpid()}",
-    )
 
 
 _FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
@@ -128,7 +112,7 @@ def q_source_csv_roundtrip(spark, sf):
     li = load(spark, sf, "lineitem").select(
         "l_returnflag", "l_quantity"
     )
-    out = _scratch("csv_roundtrip", sf)
+    out = artifacts.scratch("q_source_csv_roundtrip")
     li.write.mode("overwrite").option("header", True).csv(out)
     back = spark.read.csv(out, header=True, schema="l_returnflag string, l_quantity double")
     return back.groupBy("l_returnflag").agg(
@@ -240,7 +224,7 @@ def q_sink_parquet(spark, sf):
     agg = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("n"), dsum("l_extendedprice").alias("sum_price")
     )
-    out = os.path.join(tempfile.gettempdir(), "prs_sink_parquet")
+    out = artifacts.scratch("q_sink_parquet")
     agg.write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
@@ -324,7 +308,7 @@ def q_source_schema_merge(spark, sf):
     """
     configure(spark)
     d = load(spark, sf, "documents")
-    root = tempfile.mkdtemp(prefix="prs_schema_merge_")
+    root = artifacts.scratch("q_source_schema_merge")
     d.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", "source"
     ).write.mode("overwrite").parquet(os.path.join(root, "batch1"))
@@ -373,7 +357,7 @@ def q_source_jsonl_roundtrip(spark, sf):
     """
     configure(spark)
     d = load(spark, sf, "documents")
-    out = _scratch("jsonl_roundtrip", sf)
+    out = artifacts.scratch("q_source_jsonl_roundtrip")
     d.write.mode("overwrite").json(out)
     back = spark.read.schema(
         "doc_id long, text string, lang string, source string, n_chars long"
@@ -438,7 +422,7 @@ def q_sink_compaction(spark, sf):
     # empty file (n_files=1), matching the oracle's NULL-sum row,
     # instead of raising on int(None)
     n_files = max(1, (int(st["sc"] or 0) + _COMPACT_CHARS - 1) // _COMPACT_CHARS)
-    out = _scratch("compaction", sf)
+    out = artifacts.scratch("q_sink_compaction")
     d.repartition(n_files).write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     h = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("long")

@@ -8,6 +8,7 @@ lineitem events documents embeddings — one parquet each under
 from __future__ import annotations
 
 import os
+import re
 from typing import Sequence, Union
 
 from py4j.protocol import Py4JJavaError
@@ -107,18 +108,20 @@ def relayout(
     (measured: the lineitem⨝orders shuffle join drops 0.62s → 0.30s at
     sf0.1 once lineitem has 16 files). At the 100 TB design point this
     situation cannot arise: ingest controls file/row-group sizing
-    (SCALING.md), and a table is thousands of splits. Re-laying-out
-    once per session is the same one-time table-prep cost the bench
-    already pays for the bucketed-join and partition-pruned inputs —
-    a cluster pays it at ingest, not per query.
+    (SCALING.md), and a table is thousands of splits. The copies are
+    one-time table prep, like the bucketed layout (`BUCKETED`) and the
+    scale queries' inputs (`operators.scale.INPUTS`): a cluster pays it
+    at ingest, not per query.
 
     Each copy is an artifact (`LAYOUTS`) on the one lifecycle in
     `artifacts`, built side by side by `artifacts.run` like `ingest`'s
     sidecars, and the report has `ingest`'s shape: {name: {ok, primed,
-    seconds, reason}}. Identical data, different physical layout:
-    results are unaffected (every registered aggregate is
-    accumulation-order independent by construction — tables.dsum). A
-    copy that fails leaves its table on the original file."""
+    seconds, reason}}. The files are reused across sessions and
+    processes (`_SUCCESS`); only the registration is per session.
+    Identical data, different physical layout: results are unaffected
+    (every registered aggregate is accumulation-order independent by
+    construction — tables.dsum). A copy that fails leaves its table on
+    the original file."""
     return artifacts.run(spark, sf, LAYOUTS, base)
 
 
@@ -136,23 +139,92 @@ def src_mtime(sf: str, name: str) -> int:
         return 0
 
 
-#: (session_key, sf) -> {table_name: catalog_table} for tables written
-#: bucketed at rest (see use_bucketed_layout). Consulted by `load`
-#: ahead of the relayout copies.
-_BUCKETED_TABLES: dict = {}
+#: Buckets per table of the at-rest layout, one file each.
+_N_BUCKETS = 32
 
-#: fact tables co-bucketed on the orderkey join column
-_BUCKET_SPEC = {"lineitem": "l_orderkey", "orders": "o_orderkey"}
+#: fact tables co-bucketed (and sorted) on the orderkey join column
+_BUCKET_KEYS = {"lineitem": "l_orderkey", "orders": "o_orderkey"}
+
+#: a bucketed write's file name ends in its bucket id
+#: (`part-00000-<uuid>_00007.c000.snappy.parquet`), Spark's own rule
+_BUCKET_ID = re.compile(r".*_(\d+)(?:\..*)?$")
+
+
+def _table_name(path: str) -> str:
+    """The catalog name of the bucketed table over directory `path`."""
+    return re.sub(r"\W+", "_", path).strip("_")
+
+
+def write_bucketed(df: DataFrame, col: str, n: int, path: str) -> None:
+    """Write `df` under `path` in `n` buckets on `col`, each sorted on
+    `col`. Spark writes buckets only through a catalog table, so this
+    goes through a throwaway external one; DROP leaves the files."""
+    tbl = _table_name(path)
+    (
+        df.write.format("parquet")
+        .bucketBy(n, col)
+        .sortBy(col)
+        .option("path", path)
+        .saveAsTable(tbl)
+    )
+    df.sparkSession.sql(f"DROP TABLE `{tbl}`")
+
+
+def open_bucketed(
+    spark: SparkSession, schema: StructType, col: str, n: int, path: str
+) -> DataFrame:
+    """The bucketed files under `path` as a catalog table: bucket ids
+    live in the file names, so the table is metadata only (CREATE ...
+    LOCATION, milliseconds), exactly how a metastore-backed deployment
+    reads a table an earlier job wrote. Idempotent; the refresh drops
+    a file listing cached from an earlier build at the same path."""
+    tbl = _table_name(path)
+    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema)
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS `{tbl}` ({cols}) USING parquet"
+        f" CLUSTERED BY ({col}) SORTED BY ({col}) INTO {n} BUCKETS"
+        f" LOCATION '{path}'"
+    )
+    spark.catalog.refreshTable(tbl)
+    return spark.table(tbl)
+
+
+def _declare_bucketed(table: str, col: str) -> str:
+    name = f"bucketed_{table}"
+
+    def build(spark, sf, path):
+        # cluster rows by the bucket hash first, so each bucket is one
+        # task's output: one file, not a fragment from every task
+        df = load(spark, sf, table).repartition(_N_BUCKETS, F.col(col))
+        write_bucketed(df, col, _N_BUCKETS, path)
+
+    def open_(spark, sf, path):
+        ids = sorted(
+            int(m.group(1))
+            for f in os.listdir(path)
+            if not f.startswith(("_", ".")) and (m := _BUCKET_ID.match(f))
+        )
+        if ids != list(range(_N_BUCKETS)):
+            raise artifacts.Invalid(
+                f"{len(ids)} files for {_N_BUCKETS} buckets, want one each"
+            )
+        schema = load(spark, sf, table).schema
+        return open_bucketed(spark, schema, col, _N_BUCKETS, path)
+
+    artifacts.declare(name, table, name, build, open_)
+    return name
+
+
+#: The at-rest layout, one artifact per table in `_BUCKET_KEYS`.
+BUCKETED = tuple(_declare_bucketed(t, c) for t, c in _BUCKET_KEYS.items())
 
 
 def use_bucketed_layout(
-    spark: SparkSession,
-    sf: str,
-    n_buckets: int = 32,
-    base: str = "/dev/shm",
+    spark: SparkSession, sf: str, base: str = "/dev/shm"
 ) -> bool:
-    """Write lineitem/orders co-bucketed (and sorted) on orderkey and
-    redirect subsequent `load` calls to the bucketed catalog tables.
+    """Build (or reuse) lineitem/orders co-bucketed and sorted on
+    orderkey (`BUCKETED`), so `load` serves the bucketed tables in this
+    session. Returns True when both are registered.
 
     The at-rest layout lever for the TPC-H join family (VERDICT r8
     item 4): orders⨝lineitem — and any groupBy on the bucket key —
@@ -165,129 +237,44 @@ def use_bucketed_layout(
     write, exactly like `relayout`. Nothing turns it on by default:
     the bench times the stock layout.
 
+    Each table is an artifact on the one lifecycle in `artifacts`:
+    the files are session-independent, so a later session (or the
+    same one after `artifacts.drop`) reuses them and pays only the
+    catalog CREATE (r11: rewriting them per process cost 200 s and
+    double tmpfs at sf100). Registration is activation: `load` serves
+    a registered bucketed table ahead of the relayout copy, and
+    `artifacts.drop` of both names turns the layout off again.
+
     Sorted buckets additionally let the sort-merge join skip its sort
     (SortExec sees the required ordering satisfied per bucket file).
-    Returns True when the layout is active for this (session, sf).
 
     Activation also sets two planner confs that only pay off when the
-    one-file-per-bucket sorted invariant THIS function establishes
-    holds (r11, measured in docs/BUCKETED_SF100_r11.json):
+    one-file-per-bucket sorted invariant holds, which each table's
+    `open` checks before it registers (r11, measured in
+    docs/BUCKETED_SF100_r11.json):
     `spark.sql.legacy.bucketedTableScan.outputOrdering` lets the scan
     report its per-bucket sort order (Spark dropped the default claim
-    in 3.0 because multi-file buckets interleave; our writer clusters
-    to exactly one file per bucket, and Spark still re-verifies
-    single-file-ness per scan before reporting, so the conf is safe
-    even for other bucketed tables in the session), and
+    in 3.0 because multi-file buckets interleave; Spark still
+    re-verifies single-file-ness per scan before reporting, so the
+    conf is safe even for other bucketed tables in the session), and
     `spark.sql.execution.replaceHashWithSortAgg` turns any groupBy on
     the bucket key into a zero-sort zero-hash-table STREAMING
     SortAggregate over the sorted bucket files (TPC-H Q3's orderkey
     pre-agg: 8.7 -> 6.5 s at sf100; the rule only fires when the
     child's ordering already satisfies the keys, so it can never add
-    a sort elsewhere). Set once at layout activation — the function
-    that owns the invariant — not per query.
+    a sort elsewhere). Set once at layout activation, not per query.
     """
-    key = (_session_key(spark), sf)
-    if key in _BUCKETED_TABLES:
-        return True
-    if not os.path.isdir(base):
+    artifacts.run(spark, sf, BUCKETED, base)
+    if not bucketed_active(spark, sf):
         return False
-    try:
-        src_tag = int(
-            max(
-                os.path.getmtime(os.path.join(sf, f"{n}.parquet"))
-                for n in _BUCKET_SPEC
-                if os.path.exists(os.path.join(sf, f"{n}.parquet"))
-            )
-        )
-    except (OSError, ValueError):
-        src_tag = 0
-    # The parquet FILES are session-independent (bucket ids live in
-    # the file names, exactly how a metastore-backed deployment reads
-    # a bucketed table written by an earlier job); only the catalog
-    # METADATA is per-session. A later session therefore re-REGISTERS
-    # the existing files with CREATE TABLE ... CLUSTERED BY ...
-    # LOCATION (milliseconds) instead of re-paying the relayout write
-    # (r11: the pid-tagged copies made every fresh process rewrite
-    # ~12 GB at sf100 — 200 s and double tmpfs). The src_tag in the
-    # name keeps a regenerated source from silently reusing stale
-    # buckets.
-    import re
-
-    # sanitize: 'sf0.1' would otherwise read as schema.table
-    safe = re.sub(r"[^A-Za-z0-9]+", "_", os.path.basename(os.path.normpath(sf)))
-    tag = f"{safe}_{src_tag}_b{n_buckets}"
-    out = os.path.join(base, f"prs_bucketed_{tag}")
-    names = {}
-    try:
-        for name, bucket_col in _BUCKET_SPEC.items():
-            tbl = f"prs_{name}_atrest_{tag}"
-            path = os.path.join(out, name)
-            if not spark.catalog.tableExists(tbl):
-                if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                    # The directory is SHARED across processes (the
-                    # whole point of dropping the pid from the tag in
-                    # r11) but two fresh processes can race here, both
-                    # seeing a missing _SUCCESS (ADVICE r11, medium).
-                    # Commit protocol: build into a process-unique
-                    # dir, then atomically os.rename into place — a
-                    # complete, _SUCCESS-bearing file set appears at
-                    # `path` in one step or not at all; the loser's
-                    # rename fails (ENOTEMPTY/EEXIST) and it registers
-                    # over the winner's files instead.
-                    build_tbl = f"{tbl}_build_{os.getpid()}"
-                    build_path = f"{path}.build-{os.getpid()}"
-                    # one file per bucket: cluster rows by the bucket
-                    # hash before the bucketed write so each bucket is
-                    # a single contiguous file, not #tasks fragments
-                    (
-                        load(spark, sf, name)
-                        .repartition(n_buckets, F.col(bucket_col))
-                        .write.mode("overwrite")
-                        .format("parquet")
-                        .bucketBy(n_buckets, bucket_col)
-                        .sortBy(bucket_col)
-                        .option("path", build_path)
-                        .saveAsTable(build_tbl)
-                    )
-                    # external table: DROP leaves the files in place
-                    spark.sql(f"DROP TABLE {build_tbl}")
-                    try:
-                        os.rename(build_path, path)
-                    except OSError:
-                        import shutil
-
-                        shutil.rmtree(build_path, ignore_errors=True)
-                        if not os.path.exists(
-                            os.path.join(path, "_SUCCESS")
-                        ):
-                            raise  # not a lost race: surface it
-                # register metadata over the committed files (this
-                # process's rename or a concurrent winner's)
-                cols = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}"
-                    for f in load(spark, sf, name).schema.fields
-                )
-                spark.sql(
-                    f"CREATE TABLE {tbl} ({cols}) USING parquet"
-                    f" CLUSTERED BY ({bucket_col})"
-                    f" SORTED BY ({bucket_col})"
-                    f" INTO {n_buckets} BUCKETS LOCATION '{path}'"
-                )
-            names[name] = tbl
-        _BUCKETED_TABLES[key] = names
-        spark.conf.set(
-            "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
-        )
-        spark.conf.set("spark.sql.execution.replaceHashWithSortAgg", "true")
-    except Exception:  # no space / read-only base: originals still work
-        return False
-    for k in [k for k in _LOAD_CACHE if k[1] == sf and k[2] in names]:
-        del _LOAD_CACHE[k]
+    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+    spark.conf.set("spark.sql.execution.replaceHashWithSortAgg", "true")
     return True
 
 
 def bucketed_active(spark: SparkSession, sf: str) -> bool:
-    """True when `use_bucketed_layout` is in effect for (session, sf).
+    """True when both at-rest bucketed tables are registered for
+    (session, sf) (`use_bucketed_layout`).
 
     Lets a query pick a physical shape by LAYOUT, the way a
     cost-based planner would consult table properties: e.g. TPC-H Q3
@@ -296,7 +283,8 @@ def bucketed_active(spark: SparkSession, sf: str) -> bool:
     exchange, sort-agg retained); on the stock layout the same semi
     would exchange raw lineitem rows that the pre-agg's map-side
     partial would otherwise have collapsed first."""
-    return (_session_key(spark), sf) in _BUCKETED_TABLES
+    key = _session_key(spark)
+    return all(artifacts.lookup(key, sf, n) for n in BUCKETED)
 
 
 def load(spark: SparkSession, sf: str, name: str) -> DataFrame:
@@ -319,23 +307,22 @@ def load(spark: SparkSession, sf: str, name: str) -> DataFrame:
     configured session this set changes nothing; it stays for sessions
     that read a table before any query configured them.
 
-    Served, first match: the bucketed catalog table
-    (`use_bucketed_layout`), the session's relayout copy (`relayout`),
-    the memoized scan of the snapshot file.
+    Served, first match: the session's registered bucketed table
+    (`use_bucketed_layout`), its relayout copy (`relayout`), the
+    memoized scan of the snapshot file.
     """
     key = (_session_key(spark), sf, name)
-    bucketed = _BUCKETED_TABLES.get(key[:2], {})
-    # a relayout copy's registered frame is its memoized scan
-    copy = None if name in bucketed else artifacts.lookup(*key[:2], f"layout_{name}")
-    if copy is not None:
-        return copy[1]
+    # a registered artifact's frame is its memoized scan
+    hit = artifacts.lookup(*key[:2], f"bucketed_{name}") or artifacts.lookup(
+        *key[:2], f"layout_{name}"
+    )
+    if hit is not None:
+        return hit[1]
     cached = _LOAD_CACHE.get(key)
     if cached is not None:
         return cached
     path = os.path.join(sf, f"{name}.parquet")
-    if name in bucketed:
-        df = spark.table(bucketed[name])
-    elif name == "events":
+    if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = normalize_ts(spark.read.parquet(path))
     else:

@@ -1,7 +1,8 @@
 """The at-rest ingest contract and the artifact lifecycle.
 
-Coverage: every declared artifact is one of ``ingest.MATERIALIZERS``
-or ``tables.LAYOUTS``, and no hand-rolled sidecar cache or handle list
+Coverage: every declared artifact is one of ``ingest.MATERIALIZERS``,
+``tables.LAYOUTS``, ``tables.BUCKETED`` or ``operators.scale.INPUTS``,
+and no hand-rolled sidecar cache, handle list, input cache or temp dir
 survives outside ``pandas_reporter_spark.artifacts``. Behavior:
 ingest() builds everything side by side on a tiny snapshot, starts an
 artifact only after its declared ``after`` artifacts, and the
@@ -9,9 +10,12 @@ consumers see their artifacts; no build, sidecar or relayout copy,
 changes a session conf (what makes the concurrent builds safe); torn
 or failing builds are rejected loudly and leave consumers on their
 self-derive plans; every artifact's primed result equals its unprimed
-one; the partitioned writes stay at the session's width; per-query
-handles retire only their own query's predecessor, and interpreter
-exit retires the last ones.
+one, and a scale query returns the same rows without its input; the
+partitioned writes stay at the session's width; per-query handles
+retire only their own query's predecessor, and interpreter exit
+retires the last ones; a sink query's scratch dir outlives its call
+until the next one, and a process that ran every sink and scale query
+leaves no directory behind but the committed artifacts.
 """
 
 from __future__ import annotations
@@ -29,13 +33,15 @@ import pytest
 
 from pandas_reporter_spark import artifacts
 from pandas_reporter_spark import ingest as ing
+from pandas_reporter_spark.operators.scale import INPUTS
 from pandas_reporter_spark.registry import QUERIES, load_all
 from pandas_reporter_spark.session import configure, work_partitions
-from pandas_reporter_spark.tables import _RELAYOUT_SPLITS, LAYOUTS
+from pandas_reporter_spark.tables import _RELAYOUT_SPLITS, BUCKETED, LAYOUTS
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
 from verify_local import frame_key  # noqa: E402
+from test_session import _run_fresh  # noqa: E402
 
 ENGINE = os.path.join(os.path.dirname(__file__), "..", "pandas_reporter_spark")
 #: the shared read-only sf0.001 snapshot (TESTDATA.md)
@@ -91,12 +97,13 @@ def _result(spark, sf, q):
 
 def test_materializers_list_every_declared_artifact():
     """Each declared artifact belongs to exactly one of ingest's
-    sidecars or relayout's copies."""
+    sidecars, relayout's copies, the at-rest bucketed layout and the
+    scale queries' inputs."""
     load_all()
-    assert len(set(ing.MATERIALIZERS)) == len(ing.MATERIALIZERS)
-    assert len(set(LAYOUTS)) == len(LAYOUTS) == len(_RELAYOUT_SPLITS)
-    assert not set(ing.MATERIALIZERS) & set(LAYOUTS)
-    assert set(ing.MATERIALIZERS) | set(LAYOUTS) == set(artifacts.DECLARED)
+    lists = (ing.MATERIALIZERS, LAYOUTS, BUCKETED, INPUTS)
+    listed = [name for names in lists for name in names]
+    assert sorted(listed) == sorted(artifacts.DECLARED)
+    assert len(LAYOUTS) == len(_RELAYOUT_SPLITS)
     assert set(CONSUMER) == set(ing.MATERIALIZERS)
     for a in artifacts.DECLARED.values():
         assert set(a.after) <= set(artifacts.DECLARED) - {a.name}, a
@@ -112,6 +119,28 @@ def test_no_hand_rolled_sidecar_caches_or_handle_lists():
             if f.endswith(".py"):
                 p = os.path.join(d, f)
                 found += [f"{p}: {m.group(0).strip()}" for m in pat.finditer(open(p).read())]
+    assert not found, found
+
+
+def test_no_temp_dirs_or_input_caches_outside_artifacts():
+    """Every directory the engine writes comes from `artifacts`: no
+    other module makes temp dirs or keeps its own registry of built
+    inputs or bucketed tables."""
+    uses = re.compile(r"^\s*(import|from)\s+tempfile\b|\btempfile\.", re.M)
+    caches = re.compile(r"^\s*(_BUILT|_BUCKETED_TABLES)\s*[:=]", re.M)
+    found = []
+    for d, _, files in os.walk(ENGINE):
+        for f in files:
+            p = os.path.join(d, f)
+            if not f.endswith(".py"):
+                continue
+            pats = [caches]
+            if p != os.path.join(ENGINE, "artifacts.py"):
+                pats.append(uses)
+            src = open(p).read()
+            found += [
+                f"{p}: {m.group(0).strip()}" for r in pats for m in r.finditer(src)
+            ]
     assert not found, found
 
 
@@ -317,6 +346,38 @@ def test_primed_equals_unprimed(spark, equality_sf, name):
     assert _result(spark, sf, CONSUMER[name]) == primed
 
 
+#: the scale query that reads each input artifact
+SCALE_CONSUMER = {
+    "bucket_slice": "q_join_bucketed",
+    "part_docs": "q_partition_pruned_scan",
+    "sorted_docs": "q_layout_sorted_scan",
+}
+
+
+@pytest.mark.parametrize("name", INPUTS)
+def test_scale_query_without_its_input_returns_the_same_rows(
+    spark, equality_sf, monkeypatch, name
+):
+    """A scale query whose input artifact cannot be built reads the
+    table through `load` instead: the same rows as over the artifact."""
+    sf, base = equality_sf
+    load_all()
+    assert artifacts.build(spark, sf, name, base=base)["primed"]
+    try:
+        primed = _result(spark, sf, SCALE_CONSUMER[name])
+    finally:
+        artifacts.drop(spark, sf, name)
+
+    def boom(spark, sf, path):
+        raise RuntimeError("disk full")
+
+    declared = dataclasses.replace(artifacts.DECLARED[name], build=boom)
+    monkeypatch.setitem(artifacts.DECLARED, name, declared)
+    assert primed[0] > 0
+    assert _result(spark, sf, SCALE_CONSUMER[name]) == primed
+    assert artifacts.get(spark, sf, name) is None
+
+
 @pytest.mark.parametrize(
     "name,table,col",
     [("token_index", "postings", "bucket"), ("ivf_index", "by_cell", "label")],
@@ -393,16 +454,67 @@ def test_held_handles_are_per_query(spark, first, second):
     assert artifacts._HELD[first].is_cached
 
 
-def test_sink_dir_outlives_its_call_and_is_retired_by_the_next(spark):
-    """q_stream_file_sink's returned frame reads its output dir lazily,
-    so the dir must survive the call and go on the query's next call."""
+#: the queries that write a sink and return a frame reading it back
+SINK_QUERIES = (
+    "q_stream_file_sink",
+    "q_sink_parquet",
+    "q_sink_compaction",
+    "q_source_csv_roundtrip",
+    "q_source_jsonl_roundtrip",
+    "q_source_schema_merge",
+)
+
+
+@pytest.mark.parametrize("query", SINK_QUERIES)
+def test_sink_dir_outlives_its_call_and_is_retired_by_the_next(spark, query):
+    """A sink query's returned frame reads its scratch dir lazily, so
+    the dir must survive the call and go on the query's next call."""
     load_all()
-    first = QUERIES["q_stream_file_sink"](spark, SF)
-    held = artifacts._HELD["q_stream_file_sink"]
+    first = QUERIES[query](spark, SF)
+    held = artifacts._HELD[query]
     assert first.count() > 0 and os.path.isdir(held)
-    QUERIES["q_stream_file_sink"](spark, SF).count()
+    QUERIES[query](spark, SF).count()
     assert not os.path.exists(held)
-    assert os.path.isdir(artifacts._HELD["q_stream_file_sink"])
+    assert os.path.isdir(artifacts._HELD[query])
+
+
+#: the queries that read an input artifact they build on first use
+SCALE_QUERIES = (
+    "q_join_bucketed",
+    "q_partition_pruned_scan",
+    "q_layout_sorted_scan",
+    "q_join_bucketed_atrest",
+)
+
+
+def test_a_process_leaves_only_its_committed_artifacts(spark, tmp_path_factory):
+    """A fresh process runs every sink query twice and every scale
+    query once on a private snapshot, then exits. Its private TMPDIR
+    then holds no ``prs_*`` dir, and the only dirs it added to
+    /dev/shm are the committed input artifacts (removed here): no
+    scratch dir and no build dir."""
+    if not os.path.isdir("/dev/shm"):
+        pytest.skip("no /dev/shm")
+    sf = _private_sf(tmp_path_factory, "residue_sf")
+    tmp = tmp_path_factory.mktemp("residue_tmp")
+    committed = [artifacts.path(spark, sf, n) for n in BUCKETED + INPUTS]
+    before = set(os.listdir("/dev/shm"))
+    code = (
+        "from pandas_reporter_spark import session\n"
+        "from pandas_reporter_spark.registry import QUERIES, load_all\n"
+        "spark = session.get_session('residue-test')\n"
+        "load_all()\n"
+        f"for q in {SINK_QUERIES * 2 + SCALE_QUERIES!r}:\n"
+        f"    QUERIES[q](spark, {sf!r}).collect()\n"
+    )
+    try:
+        _run_fresh(code, TMPDIR=str(tmp))
+        assert not [n for n in os.listdir(tmp) if n.startswith("prs_")]
+        added = set(os.listdir("/dev/shm")) - before
+        assert added == {os.path.basename(p) for p in committed}
+    finally:
+        for p in committed:
+            shutil.rmtree(p, ignore_errors=True)
 
 
 def test_held_handles_are_retired_at_exit(tmp_path):

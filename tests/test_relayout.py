@@ -3,8 +3,9 @@
 Each copy (``tables.LAYOUTS``) is invisible to results: a build that
 fails or is torn leaves its table on the original file with identical
 rows and is reported with its reason, a ``.build-<pid>`` directory is
-never read, and the stream queries, which read the copies through
-``tables.stream_source``, return the same rows with and without them.
+never read (and is removed once its process has died), and the stream
+queries, which read the copies through ``tables.stream_source``,
+return the same rows with and without them.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ import dataclasses
 import hashlib
 import os
 import shutil
+import subprocess
 import sys
 from urllib.parse import urlparse
 
@@ -94,14 +96,20 @@ def test_failed_or_torn_copy_falls_back_to_the_original(
     assert tables.stream_source(spark, sf, table)[1] == f"{table}.parquet"
     assert not [d for d in os.listdir(base) if ".build-" in d], "build dir leaked"
 
-    # torn leftovers: another process's build dir, and a copy at the
-    # committed path without _SUCCESS (a crashed writer)
-    foreign = f"{out}.build-{os.getpid() + 1}"
-    for d in (foreign, out):
+    # torn leftovers: the build dir of a builder that died (removed),
+    # one of a live process (a concurrent build: kept), and a copy at
+    # the committed path without _SUCCESS (a crashed writer)
+    child = subprocess.Popen([sys.executable, "-c", ""])
+    child.wait()
+    dead = f"{out}.build-{child.pid}"
+    live = f"{out}.build-{os.getppid()}"
+    for d in (dead, live, out):
         tables.load(spark, sf, table).limit(5).write.parquet(d)
     os.remove(os.path.join(out, "_SUCCESS"))
     try:
         assert tables.relayout(spark, sf, base)[name]["primed"]
+        assert not os.path.exists(dead)
+        assert os.path.isdir(live)
         df = tables.load(spark, sf, table)
         files = df.inputFiles()
         assert len(files) == tables._RELAYOUT_SPLITS[table], files
@@ -109,7 +117,8 @@ def test_failed_or_torn_copy_falls_back_to_the_original(
         assert tables.stream_source(spark, sf, table) == (out, "*.parquet")
         assert _digest(df) == expected
     finally:
-        shutil.rmtree(foreign, ignore_errors=True)
+        shutil.rmtree(dead, ignore_errors=True)
+        shutil.rmtree(live, ignore_errors=True)
         _unregister(spark, sf)
 
 

@@ -395,22 +395,16 @@ def test_kmv_ranks_the_dictionary_not_the_corpus(spark):
 
 def test_at_rest_bucketed_layout_redirects_and_joins_shuffle_free(spark):
     """tables.use_bucketed_layout: the full lineitem/orders tables
-    written co-bucketed on orderkey; `load` redirects transparently and
-    an orders⨝lineitem join on the bucket key plans with no Exchange
-    under the join (the q_join_bucketed property, now at-rest for every
-    downstream query)."""
+    written co-bucketed on orderkey in 32 buckets; `load` serves them
+    transparently and an orders⨝lineitem join on the bucket key plans
+    with no Exchange under the join (the q_join_bucketed property, now
+    at-rest for every downstream query)."""
     from pyspark.sql import functions as F
 
     from pandas_reporter_spark import tables
 
-    key = (tables._session_key(spark), SF)
-
-    def _drop_cache():
-        for k in [k for k in tables._LOAD_CACHE if k[1] == SF]:
-            del tables._LOAD_CACHE[k]
-
     try:
-        assert tables.use_bucketed_layout(spark, SF, n_buckets=4)
+        assert tables.use_bucketed_layout(spark, SF)
         li = tables.load(spark, SF, "lineitem")
         o = tables.load(spark, SF, "orders")
         j = (
@@ -426,15 +420,49 @@ def test_at_rest_bucketed_layout_redirects_and_joins_shuffle_free(spark):
         assert "Exchange" not in below_join
         n1 = li.join(o, li.l_orderkey == o.o_orderkey).count()
     finally:
-        # the redirect is session-global state shared with every other
+        # the layout is session-global state shared with every other
         # test on this session — never leak it
-        tables._BUCKETED_TABLES.pop(key, None)
-        _drop_cache()
+        for name in tables.BUCKETED:
+            artifacts.drop(spark, SF, name)
     # row parity with the raw-parquet join (layout never changes data)
     li0 = tables.load(spark, SF, "lineitem")
     o0 = tables.load(spark, SF, "orders")
     n0 = li0.join(o0, li0.l_orderkey == o0.o_orderkey).count()
     assert n0 == n1
+
+
+def test_bucketed_layout_validates_and_rebuilds_in_place(spark, tmp_path):
+    """A bucket split over two files breaks the one-sorted-file-per-
+    bucket invariant the layout's planner confs rely on: that table is
+    rejected and `load` keeps the stock scan. Rebuilt at the same path
+    in the same session, the layout reads the new files, not the file
+    listing the catalog cached for the first build."""
+    import os
+    import shutil
+
+    from pandas_reporter_spark import tables
+
+    base = str(tmp_path)
+    out = artifacts.path(spark, SF, "bucketed_lineitem", base)
+
+    def deactivate():
+        for name in tables.BUCKETED:
+            artifacts.drop(spark, SF, name)
+
+    try:
+        assert tables.use_bucketed_layout(spark, SF, base)
+        n = tables.load(spark, SF, "lineitem").count()
+        deactivate()
+        f = next(f for f in os.listdir(out) if f.endswith(".parquet"))
+        shutil.copy(os.path.join(out, f), os.path.join(out, f"x{f}"))
+        assert not tables.use_bucketed_layout(spark, SF, base)
+        assert "Bucketed" not in plan_of(tables.load(spark, SF, "lineitem"))
+        deactivate()
+        shutil.rmtree(out)
+        assert tables.use_bucketed_layout(spark, SF, base)
+        assert tables.load(spark, SF, "lineitem").count() == n
+    finally:
+        deactivate()
 
 
 def test_bucketed_atrest_query_scopes_its_redirect(spark):
@@ -444,10 +472,9 @@ def test_bucketed_atrest_query_scopes_its_redirect(spark):
     from pandas_reporter_spark import tables
     from pandas_reporter_spark.operators.scale import q_join_bucketed_atrest
 
-    key = (tables._session_key(spark), SF)
-    assert key not in tables._BUCKETED_TABLES
+    assert not tables.bucketed_active(spark, SF)
     df = q_join_bucketed_atrest(spark, SF)
-    assert key not in tables._BUCKETED_TABLES  # dropped at build time
+    assert not tables.bucketed_active(spark, SF)  # dropped at build time
     assert df.count() >= 1  # plan still executes after the un-redirect
 
 
@@ -461,8 +488,7 @@ def test_bucketed_atrest_redirect_restores_on_exception(spark, monkeypatch):
     from pandas_reporter_spark import tables
     from pandas_reporter_spark.operators.scale import q_join_bucketed_atrest
 
-    key = (tables._session_key(spark), SF)
-    assert key not in tables._BUCKETED_TABLES
+    assert not tables.bucketed_active(spark, SF)
 
     real_load = scale_mod.load
     calls = {"n": 0}
@@ -483,7 +509,7 @@ def test_bucketed_atrest_redirect_restores_on_exception(spark, monkeypatch):
         monkeypatch.setattr(scale_mod, "load", real_load)
     assert calls["n"] == 1
     # the redirect must be gone and a fresh load must see raw parquet
-    assert key not in tables._BUCKETED_TABLES
+    assert not tables.bucketed_active(spark, SF)
     li = tables.load(spark, SF, "lineitem")
     assert li.count() > 0
 
@@ -561,9 +587,8 @@ def test_bucketed_confs_do_not_change_foreign_plans(spark):
 
     from pandas_reporter_spark import tables
 
-    key = (tables._session_key(spark), SF)
     try:
-        assert tables.use_bucketed_layout(spark, SF, n_buckets=4)
+        assert tables.use_bucketed_layout(spark, SF)
         assert (
             spark.conf.get(
                 "spark.sql.legacy.bucketedTableScan.outputOrdering"
@@ -585,9 +610,8 @@ def test_bucketed_confs_do_not_change_foreign_plans(spark):
         assert "HashAggregate" in p
         assert "SortAggregate" not in p
     finally:
-        tables._BUCKETED_TABLES.pop(key, None)
-        for k in [k for k in tables._LOAD_CACHE if k[1] == SF]:
-            del tables._LOAD_CACHE[k]
+        for name in tables.BUCKETED:
+            artifacts.drop(spark, SF, name)
 
 
 def test_no_sort_aggregates_in_registry_plans(spark):

@@ -15,11 +15,14 @@ import sys
 import pytest
 
 
-def _run_fresh(code: str) -> str:
-    """Run `code` in a new interpreter on a small engine session and
-    return its stdout."""
+def _run_fresh(code: str, **env: str) -> str:
+    """Run `code` in a new interpreter on a small engine session, with
+    `env` added to the environment, and return its stdout."""
     root = os.path.join(os.path.dirname(__file__), "..")
-    env = {**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    env = {
+        **os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_DRIVER_MEM": "1g",
+        **env,
+    }
     out = subprocess.run(
         [sys.executable, "-c", code], cwd=root, env=env, capture_output=True,
         text=True, timeout=300,

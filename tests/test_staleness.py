@@ -31,8 +31,24 @@ RECORD_WINDOW = 50
 #: the audit exceeds the window. Each entry must say WHY deferral is
 #: safe (non-semantic: byte-identical output on every testdata sf).
 KNOWN_DEFERRED: dict[str, str] = {
-    # r14: drained — all four r13 deferrals lead registry._PRIORITY
-    # and get official records this round.
+    # The input artifacts and scratch dirs moved onto `artifacts`: these
+    # closures changed only where they write, and the audit (59 stale)
+    # exceeds the window, whose 50 slots hold the other stale queries.
+    # All nine pass tools/verify_local.py at sf0.001, sf0.01 and sf0.1.
+    **dict.fromkeys(
+        (
+            "q_join_bucketed",
+            "q_join_bucketed_atrest",
+            "q_partition_pruned_scan",
+            "q_layout_sorted_scan",
+            "q_source_csv_roundtrip",
+            "q_source_jsonl_roundtrip",
+            "q_sink_compaction",
+            "q_sink_parquet",
+            "q_source_schema_merge",
+        ),
+        "write location only",
+    ),
 }
 
 

@@ -43,15 +43,14 @@ def test_q3_atrest_semi_sortagg_shape_and_values(spark):
     import io
     from contextlib import redirect_stdout
 
-    from pandas_reporter_spark import tables
+    from pandas_reporter_spark import artifacts, tables
     from pandas_reporter_spark.operators import relational as R
 
     sf = "/root/testdata/sf0.001"
     stock_q3 = _rows(R.q_tpch_q3(spark, sf))
     stock_q5 = _rows(R.q_tpch_q5(spark, sf))
-    key = (tables._session_key(spark), sf)
     try:
-        assert tables.use_bucketed_layout(spark, sf, n_buckets=4)
+        assert tables.use_bucketed_layout(spark, sf)
         df = R.q_tpch_q3(spark, sf)
         buf = io.StringIO()
         with redirect_stdout(buf):
@@ -65,8 +64,7 @@ def test_q3_atrest_semi_sortagg_shape_and_values(spark):
         # q5's at-rest semi-filter is value-neutral too
         assert _rows(R.q_tpch_q5(spark, sf)) == stock_q5
     finally:
-        tables._BUCKETED_TABLES.pop(key, None)
-        for k in [k for k in tables._LOAD_CACHE if k[1] == sf]:
-            del tables._LOAD_CACHE[k]
+        for name in tables.BUCKETED:
+            artifacts.drop(spark, sf, name)
         spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
         spark.conf.unset("spark.sql.execution.replaceHashWithSortAgg")
