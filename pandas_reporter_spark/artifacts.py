@@ -5,13 +5,13 @@ stats row) that consumer queries read instead of re-deriving it. Every
 artifact shares one lifecycle, implemented once here:
 
 1. path: ``<base>/prs_<kind>_<basename(sf)>_<mtime>[suffix]``, where
-   ``mtime`` is ``tables.src_mtime`` of the source table, so a
-   regenerated snapshot never reuses a stale artifact;
+   ``mtime`` is ``src_mtime`` of the source table, so a regenerated
+   snapshot never reuses a stale artifact;
 2. reuse: a directory holding ``_SUCCESS`` is complete and is not
    rebuilt;
 3. build: into ``<path>.build-<pid>``, committed by one atomic rename,
-   so no reader ever sees a partial directory; a build dir whose
-   process has died is removed before the next build of that path;
+   so no reader ever sees a partial directory; every build dir under
+   the root whose process has died is removed by the next build there;
 4. validate, then register: the artifact's ``open`` reads it back and
    raises ``Invalid`` if it is torn; only a valid artifact is
    registered under ``(session_key, sf, name)``;
@@ -50,7 +50,7 @@ from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass
 from pathlib import Path
 
-from py4j.protocol import Py4JError
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.util import inheritable_thread_target
 
 log = logging.getLogger(__name__)
@@ -104,10 +104,35 @@ def declare(
     DECLARED[name] = Artifact(name, source, kind, build, open, suffix, after)
 
 
-def _key(spark, sf: str, name: str) -> tuple:
-    # imported here: `tables` imports this module to declare its copies
-    from pandas_reporter_spark.tables import _session_key
+def _session_key(spark) -> str:
+    """Stable per-session registry key. `id(spark)` is unsafe: CPython
+    can reuse the address for a NEW session after the old one is
+    stopped, silently serving DataFrames bound to a dead SparkContext.
+    The applicationId is unique per started context; fall back to id()
+    only if the context is already gone (entries then die unused).
+    Stopped from Python, `_jsc` is None (AttributeError); a failing JVM
+    call raises Py4JJavaError. Stopped only on the JVM side, the
+    context still reports its own (never reused) id. Anything else is a
+    bug and propagates."""
+    try:
+        return spark.sparkContext.applicationId
+    except (AttributeError, Py4JJavaError):  # key can't collide with a live one
+        return f"dead-{id(spark)}"
 
+
+def src_mtime(sf: str, name: str) -> int:
+    """mtime tag of one driver table file (0 if absent), folded into
+    every artifact path (`path`), so regenerating the snapshot gives
+    its artifacts new directories instead of serving stale ones.
+    Directory-shaped multi-file tables tag by the directory mtime,
+    which every rewrite touches."""
+    try:
+        return int(os.path.getmtime(os.path.join(sf, f"{name}.parquet")))
+    except OSError:
+        return 0
+
+
+def _key(spark, sf: str, name: str) -> tuple:
     return (_session_key(spark), sf, name)
 
 
@@ -129,8 +154,6 @@ def drop(spark, sf: str, name: str) -> None:
 
 
 def path(spark, sf: str, name: str, base: str = "/dev/shm") -> str:
-    from pandas_reporter_spark.tables import src_mtime
-
     a = DECLARED[name]
     tag = f"{os.path.basename(os.path.normpath(sf))}_{src_mtime(sf, a.source)}"
     extra = a.suffix(spark, sf) if a.suffix else ""
@@ -141,19 +164,20 @@ def _ready(out: str) -> bool:
     return os.path.exists(os.path.join(out, "_SUCCESS"))
 
 
-def _reap(out: str) -> None:
-    """Remove the ``<out>.build-<pid>`` dirs whose builder has died: no
-    one will commit or remove them. A live pid (or one this process may
-    not signal) is a concurrent build and keeps its dir."""
-    parent, stem = os.path.split(out)
-    for n in os.listdir(parent):
+def _reap(base: str) -> None:
+    """Remove every ``prs_*.build-<pid>`` dir under `base` whose builder
+    has died, whatever artifact it was building: no one will commit or
+    remove it, and its name may be one no build produces again (an
+    input that is gone). A live pid (or one this process may not
+    signal) is a concurrent build and keeps its dir."""
+    for n in os.listdir(base):
         head, _, pid = n.rpartition(".build-")
-        if head != stem or not pid.isdigit():
+        if not head.startswith("prs_") or not pid.isdigit():
             continue
         try:
             os.kill(int(pid), 0)
         except ProcessLookupError:
-            shutil.rmtree(os.path.join(parent, n), ignore_errors=True)
+            shutil.rmtree(os.path.join(base, n), ignore_errors=True)
         except PermissionError:
             pass
 
@@ -171,9 +195,9 @@ def build(spark, sf: str, name: str, base: str = "/dev/shm") -> dict:
         try:
             if not os.path.isdir(base):
                 raise FileNotFoundError(f"artifact root {base} is not a directory")
+            _reap(base)
             out = path(spark, sf, name, base)
             if not _ready(out):
-                _reap(out)
                 tmp = f"{out}.build-{os.getpid()}"
                 shutil.rmtree(tmp, ignore_errors=True)
                 a.build(spark, sf, tmp)

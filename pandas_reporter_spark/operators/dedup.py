@@ -39,7 +39,7 @@ from pyspark.sql.window import Window as W
 from pandas_reporter_spark import artifacts
 from pandas_reporter_spark.registry import query
 from pandas_reporter_spark.session import configure, work_partitions
-from pandas_reporter_spark.tables import load
+from pandas_reporter_spark.tables import load, table_rows
 
 
 def tokens_col(col: str = "text"):
@@ -563,10 +563,6 @@ def _band_signatures(d):
     )
 
 
-#: (session_key, sf) -> documents row count, for the size-driven width
-_MH_N_CACHE: dict = {}
-
-
 def _mh_width(docs, spark=None, sf=None) -> int:
     """Size-driven width for the candidate explosion and the Jaccard
     payload joins. The fixed session width (32 locally) is correct at
@@ -575,8 +571,9 @@ def _mh_width(docs, spark=None, sf=None) -> int:
     (9.2 M pairs at 2 M docs, sf10 grid), so at sf100 each slot holds
     ~3 M pairs x2 shingle arrays — the single-JVM heap OOM observed
     round 10. 250k pairs per task bounds the payload-join footprint;
-    the count is one cached metadata-cheap job per (session, sf), and
-    bare frames (tests, ad-hoc callers) keep the session width.
+    the document count comes from the table's parquet footers (no
+    Spark job), and bare frames (tests, ad-hoc callers) keep the
+    session width.
     On a cluster this is exactly "more reduce slots for more data" —
     the same rule scaled_partitions applies to artifacts."""
     try:
@@ -588,19 +585,8 @@ def _mh_width(docs, spark=None, sf=None) -> int:
     if spark is None or sf is None:
         return n
     from pandas_reporter_spark.session import scaled_partitions
-    from pandas_reporter_spark.tables import _session_key, src_mtime
 
-    # mtime in the key (ADVICE r10): a regenerated documents.parquet
-    # must re-count, same staleness rule as the disk artifacts
-    key = (_session_key(spark), sf, src_mtime(sf, "documents"))
-    n_docs = _MH_N_CACHE.get(key)
-    if n_docs is None:
-        try:
-            n_docs = docs.count()
-        except Exception:
-            return n
-        _MH_N_CACHE[key] = n_docs
-    return max(n, scaled_partitions(n_docs * 5, 250_000))
+    return max(n, scaled_partitions(table_rows(sf, "documents") * 5, 250_000))
 
 
 def _mh_shingles_candidates(docs, id_col="doc_id", spark=None, sf=None,

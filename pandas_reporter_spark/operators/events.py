@@ -157,10 +157,6 @@ def q_events_session(spark, sf):
 # ---------------------------------------------------------------------------
 
 
-#: raw (pre-normalization) events schema per (session, files) — see
-#: _read_events_stream
-_RAW_SCHEMA_CACHE: dict = {}
-
 #: recentProgress of the LAST completed streaming run (list of parsed
 #: progress dicts) — introspection for the scale grid and the
 #: state-bound pins: stateOperators[].numRowsTotal / memoryUsedBytes
@@ -181,7 +177,10 @@ def _capture_progress(q) -> None:
                 out.append(_json.loads(p))
             else:
                 out.append(_json.loads(p.json))
-    except Exception:  # progress is diagnostics, never a failure path
+    except (ValueError, KeyError):
+        # progress is diagnostics, never a failure path: a malformed
+        # progress JSON (JSONDecodeError is a ValueError) or one missing
+        # a field PySpark's parser reads (KeyError) leaves no progress
         out = []
     LAST_PROGRESS = out
 
@@ -281,29 +280,20 @@ def _read_events_stream(spark, sf: str) -> DataFrame:
     (ns-INT64, µs-NTZ, µs-LTZ), the stream surfaces event-time as LTZ —
     `withWatermark` rejects anything else. The files are the ones
     `tables.stream_source` names: the session's multi-file relayout
-    copy (ts already a TIMESTAMP there) or the snapshot.
+    copy (ts already a TIMESTAMP there) or the snapshot. Their schema
+    as stored comes from the scan `tables` memoizes over the same
+    files, so no call lists or infers them again.
     """
-    import os
+    from pandas_reporter_spark.tables import raw_scan, stream_source
 
-    from pandas_reporter_spark.tables import _session_key, stream_source
-
-    batch = load(spark, sf, "events")  # on the snapshot, sets nanosAsLong
+    raw = raw_scan(spark, sf, "events")  # on the snapshot, sets nanosAsLong
     src, glob = stream_source(spark, sf, "events")
-    files = os.path.join(src, glob)
-    key = (_session_key(spark), files)
-    raw_schema = _RAW_SCHEMA_CACHE.get(key)
-    if raw_schema is None:
-        # footer-only read; memoized like tables._LOAD_CACHE (the files
-        # are immutable for a session, and every streaming query paid
-        # this listing+inference again)
-        raw_schema = spark.read.parquet(files).schema
-        _RAW_SCHEMA_CACHE[key] = raw_schema
     s = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(raw.schema)
         .option("pathGlobFilter", glob)
         .parquet(src)
     )
-    return normalize_ts(s).select(*batch.columns)
+    return normalize_ts(s).select(*raw.columns)
 
 
 @query(

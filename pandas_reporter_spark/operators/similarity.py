@@ -27,7 +27,9 @@ from pyspark.sql.window import Window as W
 from pandas_reporter_spark import artifacts
 from pandas_reporter_spark.registry import query
 from pandas_reporter_spark.session import configure, work_partitions
-from pandas_reporter_spark.tables import load, local_frame
+from pandas_reporter_spark.tables import (
+    footer_rows, load, local_frame, read_footed, table_rows,
+)
 
 
 def dot(a, b):
@@ -143,33 +145,23 @@ def lsh_planes_for(n: int) -> int:
     return min(_B_HI, max(_B_LO, math.ceil(math.log2(max(n, 1) / _OCC_TARGET))))
 
 
-#: (session_key, sf) -> corpus row count — one count(*) job per
-#: session/corpus, not per query
-_N_CACHE: dict = {}
+def corpus_planes(sf) -> int:
+    """b for the embeddings corpus of `sf`: the occupancy rule over the
+    table's parquet-footer row count (no Spark job). Every corpus plan
+    reads the whole table, so this is the count the oracle sees too."""
+    return lsh_planes_for(table_rows(sf, "embeddings"))
 
 
-def corpus_count(e: DataFrame, spark=None, sf=None) -> int:
-    """Corpus size, cached per (session, sf, source-mtime) when known.
-
-    The mtime tag (ADVICE r10) keeps the cache honest against a
-    mid-session testdata regeneration: the occupancy-derived b feeds
-    both the Spark plan and the oracle SQL, so a stale count would
-    break LSH bucket parity loudly at verify time."""
-    if spark is not None and sf is not None:
-        from pandas_reporter_spark.tables import _session_key, src_mtime
-
-        key = (_session_key(spark), sf, src_mtime(sf, "embeddings"))
-        n = _N_CACHE.get(key)
-        if n is None:
-            n = e.count()
-            _N_CACHE[key] = n
-        return n
-    return e.count()
-
-
-def corpus_planes(e: DataFrame, spark=None, sf=None) -> int:
-    """b for this corpus via the occupancy rule."""
-    return lsh_planes_for(corpus_count(e, spark, sf))
+def corpus_signatures(spark, sf) -> DataFrame:
+    """(vec_id, tbl, sig) of the embeddings corpus of `sf`: the
+    session's `lsh_signatures` artifact, else the kernel over the
+    table at `corpus_planes`."""
+    sigs = artifacts.get(spark, sf, "lsh_signatures")
+    if sigs is None:
+        sigs = lsh_signatures(
+            load(spark, sf, "embeddings"), planes=corpus_planes(sf)
+        )
+    return sigs
 
 
 def _mix64(x: int) -> int:
@@ -199,10 +191,11 @@ def plane_signs(table: int, plane: int, dim: int = 64) -> list[float]:
 def lsh_signatures(df: DataFrame, planes: int | None = None) -> DataFrame:
     """(vec_id, tbl, sig): one b-bit bucket signature per hash table.
 
-    `planes=None` derives b from the frame's own count via the
-    occupancy rule (`lsh_planes_for`); corpus-query callers pass the
-    session-cached `corpus_planes(...)` value instead so the count job
-    runs once per (session, sf).
+    `planes=None` derives b by the occupancy rule (`lsh_planes_for`)
+    from a `count()` of the frame itself, so an ad-hoc or filtered
+    frame gets the b of exactly the rows it holds; corpus callers pass
+    `corpus_planes`, the same rule over the table's footer row count,
+    which runs no job.
 
     ONE Arrow-batched projection computes all _N_TABLES×b dots
     per vector and bit-packs sig_t = Σ_p 2^p·[dot_p ≥ 0]; posexplode
@@ -271,7 +264,7 @@ def _build_lsh_signatures(spark, sf, path):
     from pandas_reporter_spark.session import scaled_partitions
 
     e = load(spark, sf, "embeddings")
-    n = corpus_count(e, spark, sf)
+    n = table_rows(sf, "embeddings")
     # size-driven file count: the artifact is n·L rows; slot-count
     # files cost ~0.25 s/query of read overhead at bench scale
     # (session.scaled_partitions docstring)
@@ -284,8 +277,7 @@ def _lsh_suffix(spark, sf):
     """Occupancy-aware geometry: b in the path invalidates any artifact
     written under a different plane count (r9 and earlier wrote
     fixed-8 signatures)."""
-    e = load(spark, sf, "embeddings")
-    return f"_b{lsh_planes_for(corpus_count(e, spark, sf))}"
+    return f"_b{corpus_planes(sf)}"
 
 
 artifacts.declare(
@@ -302,14 +294,14 @@ def lsh_candidate_pairs(df: DataFrame, spark=None, sf=None) -> DataFrame:
     shuffle of id-lists only — payload vectors never enter the pair
     generation. Pair space is Σ_buckets n_b² ≈ n²·L/2^b, held ~flat by the occupancy rule;
     a hot bucket is an AQE-skew/salting case, same as any hot key.
-    When the session has the signature artifact, the kernel pass is
-    skipped entirely (pass spark+sf to opt in).
+    With spark+sf, `df` is that snapshot's embeddings table and its
+    signatures are `corpus_signatures` (the artifact when the session
+    has it, so the kernel pass is skipped entirely).
     """
-    b = None
     if spark is not None and sf is not None:
-        b = artifacts.get(spark, sf, "lsh_signatures")
-    if b is None:
-        b = lsh_signatures(df, planes=corpus_planes(df, spark, sf))
+        b = corpus_signatures(spark, sf)
+    else:
+        b = lsh_signatures(df)
     try:
         sess = spark if spark is not None else df.sparkSession
         n = int(sess.conf.get("spark.sql.shuffle.partitions"))
@@ -506,9 +498,7 @@ def q_similarity_join_shuffled(spark, sf):
     """
     configure(spark)
     e = load(spark, sf, "embeddings")
-    b = artifacts.get(spark, sf, "lsh_signatures")
-    if b is None:
-        b = lsh_signatures(e, planes=corpus_planes(e, spark, sf))
+    b = corpus_signatures(spark, sf)
     en = e.select(
         "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
     )
@@ -625,7 +615,7 @@ def q_similarity_ann_lsh(spark, sf):
     """
     configure(spark)
     e = load(spark, sf, "embeddings")
-    return ann_lsh_topk(e, sigs=artifacts.get(spark, sf, "lsh_signatures"))
+    return ann_lsh_topk(e, sigs=corpus_signatures(spark, sf))
 
 
 def _ivf_oracle() -> str:
@@ -1463,8 +1453,7 @@ def _pq_sub(spark, sf):
     from pandas_reporter_spark.tables import load as _load
 
     e = _load(spark, sf, "embeddings")
-    n_corpus = corpus_count(e, spark, sf)
-    k_cells, train_n = pq_dials(n_corpus)
+    k_cells, train_n = pq_dials(table_rows(sf, "embeddings"))
     return _pq_subframe(e), k_cells, train_n
 
 
@@ -2633,13 +2622,12 @@ def _build_srp_codes(spark, sf, path):
 
 def _open_srp_codes(spark, sf, path):
     """srp_codes is one code row per embedding, so a complete artifact
-    matches the source count exactly; both counts are parquet-footer
-    reads."""
-    art = spark.read.parquet(path)
-    n, n_vec = art.count(), load(spark, sf, "embeddings").count()
+    matches the source count exactly. Both counts and the schema come
+    from parquet footers: validating starts no Spark job."""
+    n, n_vec = footer_rows(path), table_rows(sf, "embeddings")
     if n != n_vec:
         raise artifacts.Invalid(f"srp codes has {n} rows for {n_vec} embeddings")
-    return art
+    return read_footed(spark, path)
 
 
 artifacts.declare(
@@ -3139,16 +3127,16 @@ def _build_knn_graph(spark, sf, path):
 def _open_knn_graph(spark, sf, path):
     """Row count must equal the analytically-expected
     Σ_cells n_c · min(n_c - 1, k), so a partial file never primes a
-    consumer."""
-    art = spark.read.parquet(path)
+    consumer. The per-cell sizes are the one Spark aggregate this
+    runs; the artifact's count and schema come from its footers."""
     cells = load(spark, sf, "embeddings").groupBy("label").count().collect()
     expected = sum(
         int(r["count"]) * min(int(r["count"]) - 1, _KNN_K) for r in cells
     )
-    n = art.count()
+    n = footer_rows(path)
     if n != expected:
         raise artifacts.Invalid(f"knn graph has {n} rows, expected {expected}")
-    return art
+    return read_footed(spark, path)
 
 
 artifacts.declare(
@@ -3764,8 +3752,7 @@ def q_embed_inbatch_collisions(spark, sf):
 
     configure(spark)
     e = load(spark, sf, "embeddings")
-    n = corpus_count(e, spark, sf)
-    nb = max(1, math.ceil(n / float(_BATCH_SIZE)))
+    nb = max(1, math.ceil(table_rows(sf, "embeddings") / float(_BATCH_SIZE)))
     b = e.select(
         "vec_id",
         "embedding",

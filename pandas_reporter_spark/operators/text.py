@@ -21,7 +21,9 @@ from pyspark.sql.window import Window as W
 from pandas_reporter_spark import artifacts
 from pandas_reporter_spark.registry import query
 from pandas_reporter_spark.session import configure, work_partitions
-from pandas_reporter_spark.tables import davg, load, local_frame
+from pandas_reporter_spark.tables import (
+    davg, footer_rows, load, local_frame, read_footed, table_rows,
+)
 
 #: BPE-ish pre-tokenizer: letter runs | digit runs | single non-space symbol.
 #: Kept to a regex subset with identical semantics in Java regex (Spark)
@@ -87,11 +89,12 @@ def _build_vocab_stats(spark, sf, path):
 
 
 def _open_vocab_stats(spark, sf, path):
-    df = spark.read.parquet(path)
-    n = df.count()
+    """One row, counted and typed from the parquet footer: validating
+    starts no Spark job."""
+    n = footer_rows(path)
     if n != 1:
         raise artifacts.Invalid(f"vocab stats has {n} rows, expected 1")
-    return df
+    return read_footed(spark, path)
 
 
 artifacts.declare(
@@ -4218,12 +4221,12 @@ def _build_docq(spark, sf, path):
 def _open_docq(spark, sf, path):
     """A complete docq has exactly one row per document (every doc
     contributes >= 1 token; a corpus where that fails just stays on the
-    inline plan). Both counts are parquet-footer reads."""
-    art = spark.read.parquet(path)
-    n, n_docs = art.count(), load(spark, sf, "documents").count()
+    inline plan). Both counts and the schema come from parquet
+    footers: validating starts no Spark job."""
+    n, n_docs = footer_rows(path), table_rows(sf, "documents")
     if n != n_docs:
         raise artifacts.Invalid(f"docq has {n} rows for {n_docs} documents")
-    return art
+    return read_footed(spark, path)
 
 
 artifacts.declare("docq", "documents", "docq", _build_docq, _open_docq)

@@ -11,7 +11,6 @@ import os
 import re
 from typing import Sequence, Union
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
@@ -123,20 +122,6 @@ def relayout(
     construction — tables.dsum). A copy that fails leaves its table on
     the original file."""
     return artifacts.run(spark, sf, LAYOUTS, base)
-
-
-def src_mtime(sf: str, name: str) -> int:
-    """mtime tag of one driver table file (0 if absent). Folded into
-    caches keyed on (session, sf) — e.g. the corpus-count caches that
-    drive LSH plane counts — so regenerating testdata mid-session
-    invalidates the cached value instead of silently serving a stale
-    count (ADVICE r10: stale n breaks Spark/oracle LSH bucket parity).
-    Directory-shaped multi-file tables tag by the directory mtime,
-    which every rewrite touches."""
-    try:
-        return int(os.path.getmtime(os.path.join(sf, f"{name}.parquet")))
-    except OSError:
-        return 0
 
 
 #: Buckets per table of the at-rest layout, one file each.
@@ -283,7 +268,7 @@ def bucketed_active(spark: SparkSession, sf: str) -> bool:
     exchange, sort-agg retained); on the stock layout the same semi
     would exchange raw lineitem rows that the pre-agg's map-side
     partial would otherwise have collapsed first."""
-    key = _session_key(spark)
+    key = artifacts._session_key(spark)
     return all(artifacts.lookup(key, sf, n) for n in BUCKETED)
 
 
@@ -309,26 +294,15 @@ def load(spark: SparkSession, sf: str, name: str) -> DataFrame:
 
     Served, first match: the session's registered bucketed table
     (`use_bucketed_layout`), its relayout copy (`relayout`), the
-    memoized scan of the snapshot file.
+    memoized scan of the snapshot file (`raw_scan`); events get
+    `normalize_ts` over the scan, which lists no files.
     """
-    key = (_session_key(spark), sf, name)
     # a registered artifact's frame is its memoized scan
-    hit = artifacts.lookup(*key[:2], f"bucketed_{name}") or artifacts.lookup(
-        *key[:2], f"layout_{name}"
-    )
+    hit = artifacts.lookup(artifacts._session_key(spark), sf, f"bucketed_{name}")
     if hit is not None:
         return hit[1]
-    cached = _LOAD_CACHE.get(key)
-    if cached is not None:
-        return cached
-    path = os.path.join(sf, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = normalize_ts(spark.read.parquet(path))
-    else:
-        df = spark.read.parquet(path)
-    _LOAD_CACHE[key] = df
-    return df
+    df = raw_scan(spark, sf, name)
+    return normalize_ts(df) if name == "events" else df
 
 
 def stream_source(spark: SparkSession, sf: str, name: str) -> tuple[str, str]:
@@ -346,7 +320,7 @@ def stream_source(spark: SparkSession, sf: str, name: str) -> tuple[str, str]:
     globbed to its name. Globbing the file name against a directory
     layout matches ZERO part files and silently streamed nothing —
     caught by the sf1 oracle sweep (round 8)."""
-    copy = artifacts.lookup(_session_key(spark), sf, f"layout_{name}")
+    copy = artifacts.lookup(artifacts._session_key(spark), sf, f"layout_{name}")
     if copy is not None:
         return copy[0], "*.parquet"
     path = os.path.join(sf, f"{name}.parquet")
@@ -355,30 +329,79 @@ def stream_source(spark: SparkSession, sf: str, name: str) -> tuple[str, str]:
     return sf, f"{name}.parquet"
 
 
-#: Memoized unresolved-scan DataFrames. `spark.read.parquet` performs a
-#: driver-side file listing + footer schema inference EVERY call —
-#: ~100-200ms of fixed cost per query at bench scale, pure waste since
-#: the driver tables are immutable for a session's lifetime. The cached
-#: object is just the analyzed logical plan (no data is pinned); actions
-#: on it re-scan files normally. Keyed by session identity so a fresh
-#: driver session never sees another session's plans.
+#: (session_key, sf, table) -> the scan of the snapshot file(s), as
+#: read, before `normalize_ts`: the engine's one session memo.
+#: `spark.read.parquet` lists the files and runs a schema-inference job
+#: EVERY call, ~100-200 ms of fixed cost per query at bench scale, for
+#: tables that are immutable for a session's lifetime. The memoized
+#: object is just the analyzed logical plan (no data is pinned);
+#: actions on it re-scan the files. Keyed by session identity so a
+#: fresh driver session never sees another session's plans.
 _LOAD_CACHE: dict = {}
 
 
-def _session_key(spark: SparkSession) -> str:
-    """Stable per-session cache key. `id(spark)` is unsafe: CPython can
-    reuse the address for a NEW session after the old one is stopped,
-    silently serving DataFrames bound to a dead SparkContext. The
-    applicationId is unique per started context; fall back to id() only
-    if the context is already gone (entries then die unused). Stopped
-    from Python, `_jsc` is None (AttributeError); a failing JVM call
-    raises Py4JJavaError. Stopped only on the JVM side, the context
-    still reports its own (never reused) id. Anything else is a bug and
-    propagates."""
-    try:
-        return spark.sparkContext.applicationId
-    except (AttributeError, Py4JJavaError):  # key can't collide with a live one
-        return f"dead-{id(spark)}"
+def raw_scan(spark: SparkSession, sf: str, name: str) -> DataFrame:
+    """The memoized scan of the files a plan over table `name` reads
+    (`stream_source`'s files): the session's relayout copy when it has
+    one, else the snapshot, with its physical `ts` type as stored."""
+    key = artifacts._session_key(spark)
+    copy = artifacts.lookup(key, sf, f"layout_{name}")
+    if copy is not None:
+        return copy[1]
+    df = _LOAD_CACHE.get((key, sf, name))
+    if df is None:
+        if name == "events":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(os.path.join(sf, f"{name}.parquet"))
+        _LOAD_CACHE[(key, sf, name)] = df
+    return df
+
+
+def _parquet_files(path: str) -> list[str]:
+    """`path` itself when it is a file, else the part files Spark reads
+    in the directory: names starting with ``_`` or ``.`` (``_SUCCESS``,
+    checksums, in-flight files) are hidden from Spark and skipped."""
+    if not os.path.isdir(path):
+        return [path]
+    return [
+        os.path.join(path, n)
+        for n in sorted(os.listdir(path))
+        if not n.startswith(("_", "."))
+    ]
+
+
+def footer_rows(path: str) -> int:
+    """Row count of the parquet file at `path`, or of every part file
+    in the directory at `path`, summed from the footers alone: no Spark
+    job, ~1 ms where `count()` costs a scan job (SCALING.md). Exact for
+    any file set a plan reads in full; a filtered frame still needs
+    `count()`."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
+
+
+def table_rows(sf: str, name: str) -> int:
+    """Row count of driver table `name` from its footers. The relayout
+    copy and the bucketed layout hold the same rows as the snapshot."""
+    return footer_rows(os.path.join(sf, f"{name}.parquet"))
+
+
+def read_footed(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet scan of the Spark-written files at `path`, with the
+    schema Spark recorded in their footer (the same one its inference
+    would read back) instead of the schema-inference job
+    `spark.read.parquet` runs: a scan that starts no job until it is
+    acted on."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    meta = pq.read_schema(_parquet_files(path)[0]).metadata
+    spark_schema = meta[b"org.apache.spark.sql.parquet.row.metadata"]
+    return spark.read.schema(StructType.fromJson(json.loads(spark_schema))).parquet(
+        path
+    )
 
 
 def local_frame(

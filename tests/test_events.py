@@ -416,3 +416,29 @@ def test_scd2_property_sweep(spark):
         return sorted(out, key=key)
 
     assert got == brute()
+
+
+class _Progress:
+    """A stand-in for a finished streaming query's progress list."""
+
+    def __init__(self, progress):
+        self._progress = progress
+
+    @property
+    def recentProgress(self):
+        if isinstance(self._progress, Exception):
+            raise self._progress
+        return self._progress
+
+
+def test_capture_progress_drops_only_unparseable_progress():
+    """Progress is diagnostics: a malformed progress JSON leaves no
+    progress, any other error propagates."""
+    from pandas_reporter_spark.operators import events as ev
+
+    ev._capture_progress(_Progress([{"batchId": 0}, '{"batchId": 1}']))
+    assert ev.LAST_PROGRESS == [{"batchId": 0}, {"batchId": 1}]
+    ev._capture_progress(_Progress(['{"batchId": 0}', "{not json"]))
+    assert ev.LAST_PROGRESS == []
+    with pytest.raises(RuntimeError):
+        ev._capture_progress(_Progress(RuntimeError("lost the JVM")))

@@ -20,6 +20,7 @@ leaves no directory behind but the committed artifacts.
 
 from __future__ import annotations
 
+import ast
 import dataclasses
 import hashlib
 import os
@@ -28,6 +29,7 @@ import shutil
 import subprocess
 import sys
 import threading
+import uuid
 
 import pytest
 
@@ -109,17 +111,65 @@ def test_materializers_list_every_declared_artifact():
         assert set(a.after) <= set(artifacts.DECLARED) - {a.name}, a
 
 
+def _engine_sources():
+    """(path, source) of every engine module."""
+    for d, _, files in os.walk(ENGINE):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                p = os.path.join(d, f)
+                yield p, open(p).read()
+
+
 def test_no_hand_rolled_sidecar_caches_or_handle_lists():
+    """No sidecar dicts or handle lists, and `tables._LOAD_CACHE` is
+    the engine's one module-level cache: a count a plan needs comes
+    from parquet footers, not from a memo keyed by hand."""
     pat = re.compile(
         r"^\s*(_\w+_ART|_\w+_HANDLES)\s*[:=]|^\s*def materialize_\w+", re.M
     )
-    found = []
-    for d, _, files in os.walk(ENGINE):
-        for f in files:
-            if f.endswith(".py"):
-                p = os.path.join(d, f)
-                found += [f"{p}: {m.group(0).strip()}" for m in pat.finditer(open(p).read())]
+    found, caches = [], []
+    for p, src in _engine_sources():
+        found += [f"{p}: {m.group(0).strip()}" for m in pat.finditer(src)]
+        for node in ast.parse(src).body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            else:
+                continue
+            caches += [
+                f"{os.path.basename(p)}: {t.id}"
+                for t in targets
+                if isinstance(t, ast.Name) and re.fullmatch(r"_\w*CACHE\w*", t.id)
+            ]
     assert not found, found
+    assert caches == ["tables.py: _LOAD_CACHE"], caches
+
+
+def test_artifacts_build_is_the_only_catch_all():
+    """`artifacts.build` is the one failure path that catches every
+    exception (and reports it); anywhere else a handler names the
+    errors it expects, so a bug propagates."""
+    found = []
+    for p, src in _engine_sources():
+        tree = ast.parse(src)
+        owner = {
+            id(h): fn.name
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef)
+            for h in ast.walk(fn)
+            if isinstance(h, ast.ExceptHandler)
+        }
+        for h in ast.walk(tree):
+            if not isinstance(h, ast.ExceptHandler):
+                continue
+            caught = h.type.elts if isinstance(h.type, ast.Tuple) else [h.type]
+            if any(
+                t is None or (isinstance(t, ast.Name) and t.id in ("Exception", "BaseException"))
+                for t in caught
+            ):
+                found.append(f"{os.path.basename(p)}:{owner.get(id(h))}")
+    assert found == ["artifacts.py:build"], found
 
 
 def test_no_temp_dirs_or_input_caches_outside_artifacts():
@@ -320,6 +370,64 @@ def test_torn_artifact_is_rejected_not_cached(
     assert artifacts.get(spark, sf, "docq") is not None
     assert artifacts.get(spark, sf, "srp_codes") is not None
     assert _result(spark, sf, "q_pipeline_curriculum") == unprimed
+
+
+def _jobs(spark, fn) -> int:
+    """How many Spark jobs `fn()` starts, read off a job group of its
+    own."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_whole_table_counts_start_no_job(spark, equality_sf):
+    """A count of a file set a plan reads in full is a footer read: the
+    minhash width, the LSH plane count (and the unprimed ANN probe it
+    feeds) and the vocab_stats/docq/srp_codes validators start no Spark
+    job. The knn_graph validator starts only its per-cell aggregate's
+    jobs."""
+    from pandas_reporter_spark.operators import dedup
+    from pandas_reporter_spark.operators import similarity as S
+    from pandas_reporter_spark.tables import load
+
+    load_all()
+    sf, base = equality_sf
+    docs = load(spark, sf, "documents")
+    emb = load(spark, sf, "embeddings")
+    assert _jobs(spark, lambda: dedup._mh_width(docs, spark, sf)) == 0
+    assert _jobs(spark, lambda: S.corpus_planes(sf)) == 0
+    assert artifacts.get(spark, sf, "lsh_signatures") is None
+    assert _jobs(spark, lambda: QUERIES["q_similarity_ann_lsh"](spark, sf)) == 0
+
+    names = ("vocab_stats", "docq", "srp_codes", "knn_graph")
+    for name in names:
+        assert artifacts.build(spark, sf, name, base=base)["primed"], name
+    try:
+        key = artifacts._session_key(spark)
+        opened = {}
+        for name in names:
+            path, _ = artifacts.lookup(key, sf, name)
+
+            def open_(name=name, path=path):
+                opened[name] = artifacts.DECLARED[name].open(spark, sf, path)
+
+            want = 0
+            if name == "knn_graph":
+                want = _jobs(
+                    spark, lambda: emb.groupBy("label").count().collect()
+                )
+                assert want > 0
+            assert _jobs(spark, open_) == want, name
+            # the footer schema is the one Spark's own inference reads
+            assert opened[name].schema == spark.read.parquet(path).schema
+    finally:
+        for name in names:
+            artifacts.drop(spark, sf, name)
 
 
 @pytest.fixture(scope="module")

@@ -138,3 +138,23 @@ def test_stream_queries_read_the_copies_with_identical_rows(spark, private, quer
     finally:
         _unregister(spark, sf)
     assert stock[0] > 0
+
+
+def test_a_build_reaps_every_dead_build_dir_in_its_base(spark, private):
+    """The next build in a base removes a dead builder's dir even under
+    a name no declared artifact produces (its input is gone), and keeps
+    a live process's."""
+    sf, base = private
+    child = subprocess.Popen([sys.executable, "-c", ""])
+    child.wait()
+    dead = os.path.join(base, f"prs_tokidx_in_o_1_1.build-{child.pid}")
+    live = os.path.join(base, f"prs_ivfindex_in_o_1_1.build-{os.getppid()}")
+    for d in (dead, live):
+        os.makedirs(os.path.join(d, "partial"))
+    try:
+        assert artifacts.build(spark, sf, "layout_customer", base)["primed"]
+        assert not os.path.exists(dead)
+        assert os.path.isdir(live)
+    finally:
+        _unregister(spark, sf)
+        shutil.rmtree(live, ignore_errors=True)

@@ -146,13 +146,13 @@ def test_session_key_falls_back_on_a_stopped_context():
     back to a dead-session key. Stopped only on the JVM side, it keeps
     its own never-reused id."""
     code = (
-        "from pandas_reporter_spark import session, tables\n"
+        "from pandas_reporter_spark import artifacts, session\n"
         "spark = session.get_session('session-key-test')\n"
-        "live = tables._session_key(spark)\n"
+        "live = artifacts._session_key(spark)\n"
         "spark.sparkContext._jsc.sc().stop()\n"
-        "jvm_stopped = tables._session_key(spark)\n"
+        "jvm_stopped = artifacts._session_key(spark)\n"
         "spark.stop()\n"
-        "py_stopped = tables._session_key(spark)\n"
+        "py_stopped = artifacts._session_key(spark)\n"
         "print(jvm_stopped == live, py_stopped == f'dead-{id(spark)}')\n"
     )
     assert _run_fresh(code).split() == ["True", "True"]
@@ -160,7 +160,7 @@ def test_session_key_falls_back_on_a_stopped_context():
 
 def test_session_key_propagates_other_errors():
     """Only what a stopped context raises falls back; a bug surfaces."""
-    from pandas_reporter_spark.tables import _session_key
+    from pandas_reporter_spark.artifacts import _session_key
 
     class Broken:
         @property

@@ -20,7 +20,13 @@ import os
 import pytest
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
-from pandas_reporter_spark.tables import TABLES, load, local_frame
+from pandas_reporter_spark.tables import (
+    TABLES,
+    footer_rows,
+    load,
+    local_frame,
+    table_rows,
+)
 
 _FAMILIES = {
     "integral": {"tinyint", "smallint", "int", "bigint"},
@@ -83,6 +89,34 @@ def test_table_contract(spark, sf, table):
             "tables.load like normalize_ts does for events.ts"
         )
     assert df.limit(1).count() >= 0  # scan actually executes
+
+
+@pytest.mark.parametrize("sf", _SF_DIRS)
+@pytest.mark.parametrize("table", TABLES)
+def test_footer_rows_equal_the_scan_count(spark, sf, table):
+    path = os.path.join(sf, f"{table}.parquet")
+    want = spark.read.parquet(path).count()
+    assert footer_rows(path) == table_rows(sf, table) == want
+
+
+def test_footer_rows_of_a_multi_file_copy(spark, tmp_path):
+    """A relayout copy's directory: the part files sum to the scan
+    count, and `_SUCCESS` and the hidden checksum files are skipped."""
+    from pandas_reporter_spark import artifacts, tables
+
+    sf = "/root/testdata/sf0.001"
+    base = str(tmp_path)
+    assert artifacts.build(spark, sf, "layout_documents", base=base)["primed"]
+    try:
+        path = artifacts.path(spark, sf, "layout_documents", base)
+        names = os.listdir(path)
+        assert "_SUCCESS" in names and any(n.startswith(".") for n in names)
+        parts = [n for n in names if n.startswith("part-")]
+        assert len(parts) == tables._RELAYOUT_SPLITS["documents"]
+        assert footer_rows(path) == spark.read.parquet(path).count()
+        assert footer_rows(path) == table_rows(sf, "documents")
+    finally:
+        artifacts.drop(spark, sf, "layout_documents")
 
 
 def test_relayout_redirect_preserves_data(spark, tmp_path):
