@@ -14,7 +14,9 @@ artifact shares one lifecycle, implemented once here:
    the root whose process has died is removed by the next build there;
 4. validate, then register: the artifact's ``open`` reads it back and
    raises ``Invalid`` if it is torn; only a valid artifact is
-   registered under ``(session_key, sf, name)``;
+   registered under ``(session_key, sf, name)``. The default ``open``
+   (and ``parts``) is ``read_footed``, a scan with the schema from a
+   part file's footer, which starts no Spark job;
 5. fail: any exception or rejection leaves the artifact unregistered,
    logs a warning and is reported with its reason. Consumers then
    self-derive, so a failure costs speed, never correctness.
@@ -61,8 +63,53 @@ class Invalid(Exception):
     its validation (torn or partial)."""
 
 
+def _parquet_files(path: str) -> list[str]:
+    """`path` itself when it is a file, else the part files Spark reads
+    under the directory, partition subdirectories (``col=value``)
+    included: names starting with ``_`` or ``.`` (``_SUCCESS``,
+    checksums, in-flight files) are hidden from Spark and skipped."""
+    if not os.path.isdir(path):
+        return [path]
+    return [
+        f
+        for n in sorted(os.listdir(path))
+        if not n.startswith(("_", "."))
+        for f in _parquet_files(os.path.join(path, n))
+    ]
+
+
+def footer_rows(path: str) -> int:
+    """Row count of the parquet file at `path`, or of every part file
+    under the directory at `path`, summed from the footers alone: no
+    Spark job, ~1 ms where `count()` costs a scan job (SCALING.md).
+    Exact for any file set a plan reads in full; a filtered frame still
+    needs `count()`."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
+
+
+def read_footed(spark, path: str):
+    """Parquet scan of the Spark-written files at `path`, with the
+    schema Spark recorded in a part file's footer (the same one its
+    inference would read back) instead of the schema-inference job
+    `spark.read.parquet` runs: a scan that starts no job until it is
+    acted on. A partitioned directory keeps the partition columns Spark
+    derives from its ``col=value`` paths, after the footer's columns."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    meta = pq.read_schema(_parquet_files(path)[0]).metadata
+    schema = StructType.fromJson(
+        json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+    )
+    return spark.read.schema(schema).parquet(path)
+
+
 def _read(spark, sf, path):
-    return spark.read.parquet(path)
+    return read_footed(spark, path)
 
 
 def parts(*names):
@@ -70,8 +117,9 @@ def parts(*names):
     named subdirectories, read in order."""
 
     def read(spark, sf, path):
-        return tuple(spark.read.parquet(os.path.join(path, n)) for n in names)
+        return tuple(read_footed(spark, os.path.join(path, n)) for n in names)
 
+    read.names = names  # the subdirectories, for a caller that lists them
     return read
 
 

@@ -19,11 +19,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from pandas_reporter_spark import artifacts
+from pandas_reporter_spark.artifacts import footer_rows, read_footed
 from pandas_reporter_spark.registry import query
 from pandas_reporter_spark.session import configure, work_partitions
-from pandas_reporter_spark.tables import (
-    davg, footer_rows, load, local_frame, read_footed, table_rows,
-)
+from pandas_reporter_spark.tables import davg, load, local_frame, table_rows
 
 #: BPE-ish pre-tokenizer: letter runs | digit runs | single non-space symbol.
 #: Kept to a regex subset with identical semantics in Java regex (Spark)

@@ -7,6 +7,7 @@ lineitem events documents embeddings — one parquet each under
 
 from __future__ import annotations
 
+import math
 import os
 import re
 from typing import Sequence, Union
@@ -16,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 from pandas_reporter_spark import artifacts
+from pandas_reporter_spark.artifacts import footer_rows
 
 TABLES = (
     "region",
@@ -65,7 +67,10 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 
 #: Output file count per re-laid-out table, sized so each file is a
 #: few hundred KB to a few MB at sf0.1 — enough scan tasks to feed the
-#: local cores without tiny-file overhead.
+#: local cores without tiny-file overhead. The copy caps each file at
+#: ceil(rows / n) rows, so a snapshot of one row group gives exactly n
+#: files whenever the table has more than n·(n−1) rows (every table
+#: here at sf0.001 and up).
 _RELAYOUT_SPLITS = {
     "lineitem": 16,
     "orders": 8,
@@ -85,7 +90,10 @@ def _declare_layout(table: str, n: int) -> str:
 
     def build(spark, sf, path):
         # `load` normalizes events.ts, so the copy stores a TIMESTAMP
-        load(spark, sf, table).repartition(n).write.parquet(path)
+        rows_per_file = math.ceil(table_rows(sf, table) / n)
+        load(spark, sf, table).write.option(
+            "maxRecordsPerFile", rows_per_file
+        ).parquet(path)
 
     artifacts.declare(name, table, name, build)
     return name
@@ -112,15 +120,27 @@ def relayout(
     scale queries' inputs (`operators.scale.INPUTS`): a cluster pays it
     at ingest, not per query.
 
+    HOW: one write job per copy, no exchange. The snapshot's one scan
+    task streams its rows to the writer, which starts a new file every
+    ceil(rows / n) rows (`maxRecordsPerFile`, rows from the footer), so
+    the copy is n contiguous row slices of the snapshot
+    (`_RELAYOUT_SPLITS`). It opens as a footer-schema scan
+    (`artifacts.read_footed`): a copy costs 2 Spark jobs, the memoized
+    snapshot scan's schema inference and the write (SCALING.md,
+    "Physical layout"). A snapshot that is already several scan tasks
+    (a make_sfn directory tree) gives each task's rows their own
+    files, so its copy may have more than n.
+
     Each copy is an artifact (`LAYOUTS`) on the one lifecycle in
     `artifacts`, built side by side by `artifacts.run` like `ingest`'s
     sidecars, and the report has `ingest`'s shape: {name: {ok, primed,
     seconds, reason}}. The files are reused across sessions and
     processes (`_SUCCESS`); only the registration is per session.
-    Identical data, different physical layout: results are unaffected
-    (every registered aggregate is accumulation-order independent by
-    construction — tables.dsum). A copy that fails leaves its table on
-    the original file."""
+    Identical rows, different physical layout and scan order: results
+    are unaffected (every registered aggregate is accumulation-order
+    independent by construction — tables.dsum — and the oracle sweep
+    runs on the copies: `tools/verify_local.py --prepared`). A copy
+    that fails leaves its table on the original file."""
     return artifacts.run(spark, sf, LAYOUTS, base)
 
 
@@ -357,51 +377,10 @@ def raw_scan(spark: SparkSession, sf: str, name: str) -> DataFrame:
     return df
 
 
-def _parquet_files(path: str) -> list[str]:
-    """`path` itself when it is a file, else the part files Spark reads
-    in the directory: names starting with ``_`` or ``.`` (``_SUCCESS``,
-    checksums, in-flight files) are hidden from Spark and skipped."""
-    if not os.path.isdir(path):
-        return [path]
-    return [
-        os.path.join(path, n)
-        for n in sorted(os.listdir(path))
-        if not n.startswith(("_", "."))
-    ]
-
-
-def footer_rows(path: str) -> int:
-    """Row count of the parquet file at `path`, or of every part file
-    in the directory at `path`, summed from the footers alone: no Spark
-    job, ~1 ms where `count()` costs a scan job (SCALING.md). Exact for
-    any file set a plan reads in full; a filtered frame still needs
-    `count()`."""
-    import pyarrow.parquet as pq
-
-    return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
-
-
 def table_rows(sf: str, name: str) -> int:
     """Row count of driver table `name` from its footers. The relayout
     copy and the bucketed layout hold the same rows as the snapshot."""
     return footer_rows(os.path.join(sf, f"{name}.parquet"))
-
-
-def read_footed(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan of the Spark-written files at `path`, with the
-    schema Spark recorded in their footer (the same one its inference
-    would read back) instead of the schema-inference job
-    `spark.read.parquet` runs: a scan that starts no job until it is
-    acted on."""
-    import json
-
-    import pyarrow.parquet as pq
-
-    meta = pq.read_schema(_parquet_files(path)[0]).metadata
-    spark_schema = meta[b"org.apache.spark.sql.parquet.row.metadata"]
-    return spark.read.schema(StructType.fromJson(json.loads(spark_schema))).parquet(
-        path
-    )
 
 
 def local_frame(

@@ -45,6 +45,10 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 from verify_local import frame_key  # noqa: E402
 from test_session import _run_fresh  # noqa: E402
 
+# the operator modules declare their artifacts when imported: every
+# test here, run alone or in any order, sees all of them
+load_all()
+
 ENGINE = os.path.join(os.path.dirname(__file__), "..", "pandas_reporter_spark")
 #: the shared read-only sf0.001 snapshot (TESTDATA.md)
 SF = "/root/testdata/sf0.001"
@@ -101,7 +105,6 @@ def test_materializers_list_every_declared_artifact():
     """Each declared artifact belongs to exactly one of ingest's
     sidecars, relayout's copies, the at-rest bucketed layout and the
     scale queries' inputs."""
-    load_all()
     lists = (ing.MATERIALIZERS, LAYOUTS, BUCKETED, INPUTS)
     listed = [name for names in lists for name in names]
     assert sorted(listed) == sorted(artifacts.DECLARED)
@@ -390,12 +393,13 @@ def test_whole_table_counts_start_no_job(spark, equality_sf):
     minhash width, the LSH plane count (and the unprimed ANN probe it
     feeds) and the vocab_stats/docq/srp_codes validators start no Spark
     job. The knn_graph validator starts only its per-cell aggregate's
-    jobs."""
+    jobs. Every artifact on the default or a `parts` open opens as a
+    footer-schema scan: no job, and the schema Spark's own inference
+    reads, partition columns included."""
     from pandas_reporter_spark.operators import dedup
     from pandas_reporter_spark.operators import similarity as S
     from pandas_reporter_spark.tables import load
 
-    load_all()
     sf, base = equality_sf
     docs = load(spark, sf, "documents")
     emb = load(spark, sf, "embeddings")
@@ -404,7 +408,15 @@ def test_whole_table_counts_start_no_job(spark, equality_sf):
     assert artifacts.get(spark, sf, "lsh_signatures") is None
     assert _jobs(spark, lambda: QUERIES["q_similarity_ann_lsh"](spark, sf)) == 0
 
-    names = ("vocab_stats", "docq", "srp_codes", "knn_graph")
+    # every artifact on the default open or a `parts` one: sidecars,
+    # part_docs (partitioned by lang) and the relayout copies
+    footed = [
+        n for n, a in artifacts.DECLARED.items()
+        if a.open is artifacts._read or hasattr(a.open, "names")
+    ]
+    assert {"wm_stats", "token_index", "ivf_index", "part_docs"} <= set(footed)
+    assert set(LAYOUTS) <= set(footed)
+    names = ("vocab_stats", "docq", "srp_codes", "knn_graph", *footed)
     for name in names:
         assert artifacts.build(spark, sf, name, base=base)["primed"], name
     try:
@@ -424,7 +436,11 @@ def test_whole_table_counts_start_no_job(spark, equality_sf):
                 assert want > 0
             assert _jobs(spark, open_) == want, name
             # the footer schema is the one Spark's own inference reads
-            assert opened[name].schema == spark.read.parquet(path).schema
+            sub = getattr(artifacts.DECLARED[name].open, "names", None)
+            frames = opened[name] if sub else (opened[name],)
+            paths = [os.path.join(path, n) for n in sub] if sub else [path]
+            for df, p in zip(frames, paths, strict=True):
+                assert df.schema == spark.read.parquet(p).schema, (name, p)
     finally:
         for name in names:
             artifacts.drop(spark, sf, name)
@@ -469,7 +485,6 @@ def test_scale_query_without_its_input_returns_the_same_rows(
     """A scale query whose input artifact cannot be built reads the
     table through `load` instead: the same rows as over the artifact."""
     sf, base = equality_sf
-    load_all()
     assert artifacts.build(spark, sf, name, base=base)["primed"]
     try:
         primed = _result(spark, sf, SCALE_CONSUMER[name])
@@ -497,7 +512,6 @@ def test_partitioned_writes_stay_at_session_width(
     at the session's width: a fixed wider floor multiplies tiny files
     (756 postings files for 0.9 MB at width 32 on 4 slots)."""
     sf, base = equality_sf
-    load_all()
     assert artifacts.build(spark, sf, name, base=base)["primed"]
     root = os.path.join(artifacts.path(spark, sf, name, base), table)
     dirs = [d for d in os.listdir(root) if d.startswith(f"{col}=")]
@@ -530,7 +544,6 @@ def test_build_leaves_session_confs_unchanged(spark, equality_sf, conf_base, nam
     identical around a build (the session is configured first, as
     every query does)."""
     sf, _ = equality_sf
-    load_all()
     configure(spark)
     artifacts.drop(spark, sf, name)
     shutil.rmtree(artifacts.path(spark, sf, name, conf_base), ignore_errors=True)
@@ -552,7 +565,6 @@ def test_build_leaves_session_confs_unchanged(spark, equality_sf, conf_base, nam
 def test_held_handles_are_per_query(spark, first, second):
     """A query's persisted frame survives another query's call (the two
     used to share one handle list) and is retired by its own next call."""
-    load_all()
     QUERIES[first](spark, SF)
     held = artifacts._HELD[first]
     QUERIES[second](spark, SF)
@@ -577,7 +589,6 @@ SINK_QUERIES = (
 def test_sink_dir_outlives_its_call_and_is_retired_by_the_next(spark, query):
     """A sink query's returned frame reads its scratch dir lazily, so
     the dir must survive the call and go on the query's next call."""
-    load_all()
     first = QUERIES[query](spark, SF)
     held = artifacts._HELD[query]
     assert first.count() > 0 and os.path.isdir(held)

@@ -1,6 +1,9 @@
 """The relayout copies on the artifact lifecycle.
 
-Each copy (``tables.LAYOUTS``) is invisible to results: a build that
+A copy is one Spark job: with the snapshot scan memoized, its build
+writes the snapshot's rows straight into exactly n files (no Exchange
+in the plan) and its open starts no job. Each copy
+(``tables.LAYOUTS``) is invisible to results: a build that
 fails or is torn leaves its table on the original file with identical
 rows and is reported with its reason, a ``.build-<pid>`` directory is
 never read (and is removed once its process has died), and the stream
@@ -19,6 +22,7 @@ import sys
 from urllib.parse import urlparse
 
 import pytest
+from pyspark.sql.readwriter import DataFrameWriter
 
 from pandas_reporter_spark import artifacts, tables
 from pandas_reporter_spark.registry import QUERIES, load_all
@@ -26,6 +30,7 @@ from pandas_reporter_spark.registry import QUERIES, load_all
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
 from verify_local import frame_key  # noqa: E402
+from test_ingest import _jobs  # noqa: E402
 
 #: the shared read-only sf0.001 snapshot (TESTDATA.md)
 SF = "/root/testdata/sf0.001"
@@ -63,6 +68,31 @@ def _unregister(spark, sf):
 def _digest(df):
     rows = [tuple(r) for r in df.collect()]
     return len(rows), hashlib.md5(frame_key(df.columns, rows).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("sf", [SF, os.path.join(os.path.dirname(SF), "sf0.01")])
+@pytest.mark.parametrize("table", list(tables._RELAYOUT_SPLITS))
+def test_a_copy_is_one_write_job_of_n_files(spark, tmp_path, monkeypatch, sf, table):
+    """Once the snapshot scan is memoized, a copy's build starts one
+    Spark job, the write, whose plan has no Exchange; it leaves exactly
+    n files holding the snapshot's rows, and its open starts no job."""
+    a = artifacts.DECLARED[f"layout_{table}"]
+    out = str(tmp_path / a.name)
+    tables.raw_scan(spark, sf, table)
+    plans, write = [], DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    assert _jobs(spark, lambda: a.build(spark, sf, out)) == 1
+    monkeypatch.undo()
+    assert len(plans) == 1 and "Exchange" not in plans[0], plans
+    assert _jobs(spark, lambda: a.open(spark, sf, out)) == 0
+    files = [f for f in os.listdir(out) if f.startswith("part-")]
+    assert len(files) == tables._RELAYOUT_SPLITS[table], files
+    assert tables.footer_rows(out) == tables.table_rows(sf, table)
 
 
 @pytest.mark.parametrize("table", list(tables._RELAYOUT_SPLITS))

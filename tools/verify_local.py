@@ -6,15 +6,22 @@ and an order-insensitive value hash (rows sorted, columns sorted by
 name, values stringified with repr-ish normalization). Not the
 driver's exact hash — but any mismatch here is a real mismatch there.
 
-Usage: python tools/verify_local.py [sf_dir] [query ...]
+With ``--prepared`` the queries run in the bench's steady state
+(``bench.prepare_session``): they read the relayout copies, whose scan
+order differs from the snapshot's, and the ingest sidecars.
+
+Usage: python tools/verify_local.py [--prepared] [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import atexit
 import json
 import math
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -42,8 +49,31 @@ def frame_key(cols, rows):
     return "\n".join(lines)
 
 
+def _prepared(spark, sf: str) -> str:
+    """A private copy of snapshot `sf`, brought to the bench's steady
+    state by `bench.prepare_session`. Its artifacts are all built
+    fresh: they are named after the copy, so none an earlier build left
+    for `sf` is reused. The copy and its artifacts are removed at
+    exit."""
+    import bench
+    from pandas_reporter_spark import artifacts
+
+    run_sf = tempfile.mkdtemp(prefix="verify_sf_")
+    shutil.copytree(sf, run_sf, dirs_exist_ok=True)
+
+    def remove():
+        for name in artifacts.DECLARED:
+            shutil.rmtree(artifacts.path(spark, run_sf, name), ignore_errors=True)
+        shutil.rmtree(run_sf, ignore_errors=True)
+
+    atexit.register(remove)
+    bench.prepare_session(spark, run_sf, [])
+    return run_sf
+
+
 def main():
-    args = [a for a in sys.argv[1:]]
+    args = [a for a in sys.argv[1:] if a != "--prepared"]
+    prepared = len(args) < len(sys.argv) - 1
     sf = args.pop(0) if args and os.path.isdir(args[0]) else "/root/testdata/sf0.01"
     only = set(args)
 
@@ -52,6 +82,8 @@ def main():
 
     qs, oracles = e.queries(), e.oracle_sql()
     spark = get_session("verify_local")
+    # the queries read `run_sf`, the oracle reads `sf`: the same rows
+    run_sf = _prepared(spark, sf) if prepared else sf
 
     con = duckdb.connect()
     for t in TABLES:
@@ -70,7 +102,7 @@ def main():
             continue
         t0 = time.time()
         try:
-            df = fn(spark, sf)
+            df = fn(spark, run_sf)
             cols = df.columns
             rows = [tuple(r) for r in df.collect()]
         except Exception as ex:
@@ -117,7 +149,7 @@ def main():
 
     print(
         f"\n== {n_pass} pass, {n_rows_only} rows-only, {n_fail} fail "
-        f"of {len(results)} at {sf}"
+        f"of {len(results)} at {sf}{' (prepared)' if prepared else ''}"
     )
     with open("/tmp/verify_local.json", "w") as f:
         json.dump(results, f, indent=1)
